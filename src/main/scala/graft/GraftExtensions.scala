@@ -32,7 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("minhash_sig", "minhash_sig(text) - MinHash signature at the fixed engine config"),
       (es: Seq[Expression]) => MinHashSig(es.head, 5, 128, 123L)))
     ext.injectFunction((FunctionIdentifier("dot_arr"),
-      info("dot_arr", "dot_arr(a, b) - dot product of two double arrays"),
+      info("dot_arr", "dot_arr(a, b) - dot product of two float or double arrays"),
       (es: Seq[Expression]) => DotArr(es(0), es(1))))
     ext.injectFunction((FunctionIdentifier("minhash_est"),
       info("minhash_est", "minhash_est(a, b) - fraction of agreeing MinHash positions"),

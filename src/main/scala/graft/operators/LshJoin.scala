@@ -12,14 +12,15 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  * bundle variant (similarity_engine.py:468-583).
  *
  * Shape: explode band keys → eliminate singleton buckets → SALT over-cap
- * buckets into cap-sized sub-buckets (deterministic conv_id hash) →
- * within-sub-bucket pair ENUMERATION over the sorted, cap-bounded member
- * list of each (bucket, salt) group (`a.conv_id < b.conv_id` upper
- * triangle, emitted by a generator — no self-join, no second band-table
- * shuffle) + one bridge chain linking sub-bucket representatives (so a
- * salted mega-family still forms ONE connected component downstream) →
- * per-pair dedup keeping the lowest band id → join MinHash signatures back
- * per endpoint → estimate filter → per-doc output cap.
+ * buckets into cap-sized sub-buckets (deterministic conv_id hash) → one
+ * PARTNER-LIST row per member of each sorted, cap-bounded (bucket, salt)
+ * member list (the members after it — the `a.conv_id < b.conv_id` upper
+ * triangle, emitted by a generator; no self-join) + one bridge chain
+ * linking sub-bucket representatives (so a salted mega-family still forms
+ * ONE connected component downstream) → conv_a exchange of the lists →
+ * explode to pairs → per-pair dedup keeping the lowest band id → join
+ * MinHash signatures back per endpoint → estimate filter → per-doc output
+ * cap.
  *
  * Skew armor (the part the reference lacks — its giant-bucket loop at
  * ai_...AUTO.py:4037-4045 is O(bucket²) unconditionally):
@@ -53,9 +54,11 @@ object LshJoin {
       posexplode(col("bands")).as(Seq("band_id", "band_key")))
 
   /**
-   * Within-bucket pair generation with singleton-drop + salted sub-bucketing
+   * Within-bucket partner lists with singleton-drop + salted sub-bucketing
    * for over-cap buckets. `items` must have (conv_id, <keys...>); emits
-   * (conv_a, conv_b, band_id, source) with conv_a < conv_b.
+   * (conv_a, partners, band_id, src) with every partner > conv_a and
+   * `partners` non-empty — one row per bucket member that has a later
+   * member, plus one single-partner row per bridge.
    *
    * Salt is keyed on conv_id ONLY, so a mega-family sub-buckets identically
    * in every band — unique pair volume stays O(m·cap) across all bands
@@ -63,7 +66,7 @@ object LshJoin {
    * the bridge chain: per over-cap bucket, the min conv_id of each
    * sub-bucket is linked to the next sub-bucket's representative.
    */
-  // source codes kept as 1 byte through the 10⁶-row pair union + dedup agg
+  // source codes kept as 1 byte through the list union + pair dedup agg
   // (strings there were measurable shuffle weight): bridge = base + 2
   private final val SrcLsh = 0
   private final val SrcBundle = 1
@@ -168,7 +171,7 @@ object LshJoin {
     //
     // The grouped member table is materialized EAGERLY (localCheckpoint —
     // the pipeline's stage idiom): it has TWO consumers, the pair
-    // enumeration and the bridge chain, and collect_list is flagged
+    // partner-list emission and the bridge chain, and collect_list is flagged
     // non-deterministic so its subtree can never canonicalize equal for
     // exchange reuse — un-checkpointed, the bridge branch re-ran the whole
     // sizing/salt/collect chain (measured ~5 s of duplicated task time per
@@ -178,51 +181,47 @@ object LshJoin {
     // the candidate Dataset is dropped.
     val grouped = groupedMembers(items, cap, obs).localCheckpoint(true)
 
-    // Spread the cap-bounded groups before enumeration: the grouped
+    // Spread the cap-bounded groups before emission: the grouped
     // checkpoint preserves the bkey-only partition layout, which would
-    // leave ALL sub-buckets of a mega-family in one task — the same
-    // co-location the old self-join inherited via the subset rule. This
-    // exchange ships ONE compact row per (bkey, salt) (measured ~3% of a
-    // band-table shuffle: conv_ids appear once, sorted lists dictionary-
-    // compress) and restores (bkey, salt)-granular parallelism for the
-    // O(sz²) emission, so a 10M-member family's O(m·cap) pairs spread
-    // over m/cap tasks instead of one. The partition count is EXPLICIT:
-    // AQE sizes coalescing on the exchange's input bytes, and this input
-    // is ~30× smaller than the pair volume the generator emits from it —
-    // left to itself AQE convoys the enumeration onto a handful of tasks.
-    // Sorted members ⇒ enumerating j > i yields conv_a < conv_b directly.
-    // The generator chain stays whole-stage-codegen (posexplode + slice);
-    // a higher-order-function formulation (flatten/transform building the
-    // pair array per row) was measured ~40% more task time — interpreted
-    // per-element lambdas — and was reverted.
+    // leave ALL sub-buckets of a mega-family in one task. This exchange
+    // ships ONE compact row per (bkey, salt) (conv_ids appear once, sorted
+    // lists dictionary-compress) and restores (bkey, salt)-granular
+    // parallelism, so a 10M-member family's rows spread over m/cap tasks
+    // instead of one. The partition count is EXPLICIT: AQE sizes
+    // coalescing on the exchange's input bytes, and this input is far
+    // smaller than what the generator emits from it — left to itself AQE
+    // convoys the emission onto a handful of tasks.
     val spread = grouped.repartition(
       items.sparkSession.sessionState.conf.numShufflePartitions,
       col("bkey"), col("salt"))
+    // Partner lists, not pairs: one row per member of each sub-bucket,
+    // carrying the members sorted after it (sorted members ⇒ every
+    // partner > conv_a). The pairs are exploded only AFTER the conv_a
+    // exchange in `candidates`, so the exchange ships O(Σ sub-bucket size)
+    // rows instead of O(Σ sub-bucket size²): a template family collides in
+    // almost every band, and one row per pair per band sent each of its
+    // pairs across the exchange ~50 times (skewed_corpus seed 3: 1.92M pair
+    // rows, 12 MB, became 26.9k list rows, 5 MB). posexplode + slice stay
+    // whole-stage-codegen (a flatten/transform formulation was ~40% more
+    // task time).
     val inBucket = spread
       .select(col("band_id"), col("src"), col("members"),
         posexplode(col("members")).as(Seq("i", "conv_a")))
+      .filter(col("i") < size(col("members")) - lit(1)) // last member: no partners
       .select(col("conv_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")) - col("i") - lit(1))).as("conv_b"),
+        slice(col("members"), col("i") + lit(2),
+          size(col("members")) - col("i") - lit(1)).as("partners"),
         col("band_id"), col("src"))
-      // defense-in-depth (ADVICE r04): conv_id is unique per bucket by key
-      // construction, but if a 64-bit band/variant key ever collided for the
-      // SAME doc, sorted-adjacent duplicates in `members` would emit a
-      // self-pair here — the old self-join's strict a < b was structurally
-      // immune, so keep that guarantee explicit (bridges already carry one)
-      .filter(col("conv_a") =!= col("conv_b"))
-      .select(col("conv_a"), col("conv_b"), col("band_id"), col("src"))
 
     // bridge chain: consecutive sub-bucket representatives of over-cap
-    // buckets (n_salts-1 extra pairs per bucket — O(bsz/cap), negligible).
-    // The rep of a sub-bucket is the head of its sorted member list, and
-    // its bridge partner is the NEXT salt's rep — a lead() window directly
-    // over the CHECKPOINTED `grouped` table: the window's bkey exchange
-    // over one-row-per-sub-bucket input is negligible, and the checkpoint
-    // means this second consumer re-runs nothing (the un-checkpointed
-    // branch used to replay the whole sizing/salt/collect chain per run).
-    // No over-cap filter is needed: a bucket with a single sub-bucket has
-    // no lead partner and emits nothing.
+    // buckets (n_salts-1 extra rows per bucket — O(bsz/cap), negligible),
+    // each a one-partner list. The rep of a sub-bucket is the head of its
+    // sorted member list, and its bridge partner is the NEXT salt's rep — a
+    // lead() window directly over the CHECKPOINTED `grouped` table: the
+    // window's bkey exchange over one-row-per-sub-bucket input is
+    // negligible, and the checkpoint means this second consumer re-runs
+    // nothing. No over-cap filter is needed: a bucket with a single
+    // sub-bucket has no lead partner and emits nothing.
     val head = element_at(col("members"), 1)
     val bridges = grouped
       .withColumn("next_conv", lead(head, 1).over(
@@ -230,9 +229,8 @@ object LshJoin {
       .filter(col("next_conv").isNotNull)
       .select(
         least(head, col("next_conv")).as("conv_a"),
-        greatest(head, col("next_conv")).as("conv_b"),
+        array(greatest(head, col("next_conv"))).as("partners"),
         col("band_id"), (col("src") + lit(2)).as("src"))
-      .filter(col("conv_a") =!= col("conv_b"))
 
     inBucket.unionByName(bridges)
   }
@@ -240,10 +238,19 @@ object LshJoin {
   /**
    * Candidate pairs from MinHash LSH banding, plus exact variant-fingerprint
    * collisions (J4 analog: any shared simhash-bundle variant is a candidate).
+   *
+   * Not lazy: the bucket phase (items → sizing → salting → member lists)
+   * runs EAGERLY inside this call (see the checkpoint in
+   * saltedBucketPairs), so each call costs one bucket-phase job — build the
+   * Dataset once and reuse it. The returned plan starts at that checkpoint:
+   * partner lists → ONE conv_a exchange → explode to pairs → dedup agg →
+   * scoring joins → cap windows.
+   *
    * `bucketObs` (optional) receives (total_buckets, paired_buckets,
-   * salted_buckets) of the LSH band table on the same action that
-   * materializes the candidates — the A4 funnel stats the reference logs as
-   * its O(n²)→O(Σb²) reduction, with zero extra jobs.
+   * salted_buckets) of the LSH band table — the A4 funnel stats the
+   * reference logs as its O(n²)→O(Σb²) reduction. It fires on the eager
+   * bucket-phase job, before this method returns; the metrics arrive
+   * through an async listener, so readers must still wait on its future.
    */
   def candidates(sigs: Dataset[DocSig], cfg: DedupConfig,
                  bucketObs: Option[Observation] = None): Dataset[CandidatePair] = {
@@ -267,7 +274,48 @@ object LshJoin {
     // canonicalize). Rows and values are identical (same keys — variant
     // bkey reproduces Spark's xxhash64(v_id, v_hash) bit-for-bit, spec-
     // pinned — same ids, same src codes).
-    val allPairs = saltedBucketPairs(itemsFor(sigs), cfg.bandBucketCap, bucketObs)
+    val lists = saltedBucketPairs(itemsFor(sigs), cfg.bandBucketCap, bucketObs)
+
+    // Exchange discipline: ONE explicit hash repartition on conv_a ships the
+    // partner lists; the pairs are exploded after it. The generator keeps
+    // HashPartitioning(conv_a), which satisfies clustering on
+    // (conv_a, conv_b) (partitioning-subset rule), so the pair dedup, the
+    // conv_a signature join and the conv_a cap window ride that exchange
+    // without re-shuffling; the conv_b cap window rides the conv_b
+    // signature-join exchange. Each extra sequential pair-table shuffle adds
+    // a driver stage-scheduling gap, measured serial residue in the 2→8
+    // scaling budget.
+    // Explicit-N on every pair-table exchange in this chain (here, the
+    // conv_b join spread, and the rk_a window spread): a keyed repartition
+    // without N is REPARTITION_BY_COL, which AQE coalesces by BYTES (1 MB
+    // floor) — the 14-23 MB pair exchanges at the bench corpus then ran
+    // their reduces in 14-16 tasks on 32 cores while per-row work (string-
+    // pair hashing, b-bit estimates, window sorts) dwarfs the bytes.
+    // Pinning at the data-sized count keeps the reduces full-width; at
+    // 100-TB scale these exchanges exceed the coalesce floor anyway.
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val pairRows = lists
+      .repartition(parts, $"conv_a")
+      .select($"conv_a", explode($"partners").as("conv_b"), $"band_id", $"src")
+      // defense-in-depth (ADVICE r04): conv_id is unique per bucket by key
+      // construction, but if a 64-bit band/variant key ever collided for
+      // the SAME doc, sorted-adjacent duplicates in `members` would yield a
+      // self-pair here (or a degenerate bridge) — keep a < b explicit
+      .filter($"conv_a" =!= $"conv_b")
+    scorePairs(pairRows, sigs, cfg)
+  }
+
+  /**
+   * The candidate tail over pair rows (conv_a < conv_b, band_id, src) —
+   * one row per colliding band/variant/bridge — shared by `candidates` and
+   * the parity spec's naive per-pair enumeration: pair dedup → min-band-
+   * hits prefilter → b-bit scoring joins → estimate filter → per-doc cap.
+   */
+  private[graft] def scorePairs(pairRows: DataFrame, sigs: Dataset[DocSig],
+                                cfg: DedupConfig): Dataset[CandidatePair] = {
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    val parts = spark.sessionState.conf.numShufflePartitions
 
     // Pair dedup + the MIN-BAND-HITS prefilter. With b=64/r=2 banding the
     // weakest detectable transform (J ≈ 0.42) collides in ~11 bands, while
@@ -277,27 +325,7 @@ object LshJoin {
     // pair (measured: 2.13M → 0.74M pairs at 40k docs; the est join was
     // the candidate stage's dominant shuffle). Bundle hits (exact-variant
     // evidence) and salted-bucket bridges (connectivity) are exempt.
-    // Exchange discipline: one explicit hash repartition on conv_a feeds the
-    // pair dedup (HashPartitioning(conv_a) satisfies clustering on
-    // (conv_a, conv_b) — partitioning-subset rule), the conv_a signature
-    // join, and the conv_a cap window WITHOUT re-shuffling the pair table;
-    // the conv_b cap window rides the conv_b signature-join exchange. The
-    // old chain paid five sequential pair-table shuffles here; the driver's
-    // stage-scheduling gaps between them were measured serial residue in
-    // the 2→8 scaling budget.
-    // Explicit-N on every pair-table exchange in this chain (here, the
-    // conv_b join spread, and the rk_a window spread below): a keyed
-    // repartition without N is REPARTITION_BY_COL — AQE coalesces it by
-    // BYTES (1 MB floor), and the 14-23 MB pair exchanges at the bench
-    // corpus ran their dedup agg / scoring join / cap windows in 14-16
-    // tasks on 32 cores while per-row work (string-pair hashing, b-bit
-    // estimates, window sorts) dwarfs the bytes. Pinning at the data-sized
-    // count keeps the reduces full-width; exchange count and 100-TB plan
-    // shape are unchanged (these exchanges exceed the coalesce floor at
-    // scale).
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val uniquePairs = allPairs
-      .repartition(parts, $"conv_a")
+    val uniquePairs = pairRows
       .groupBy($"conv_a", $"conv_b")
       .agg(min($"band_id").as("band_id"),
         sum(when($"src" === SrcLsh, 1L).otherwise(0L)).as("lsh_hits"),

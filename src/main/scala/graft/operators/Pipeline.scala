@@ -60,24 +60,33 @@ object Pipeline {
 
   def inputFingerprint(turns: Dataset[Turn]): String = fingerprintAndCount(turns)._1
 
-  /** Observation read. Metrics are delivered by an ASYNC listener after the
-    * action completes, so on a fresh compute (`fresh = true`) wait briefly
-    * for the callback — otherwise the bucket funnel would intermittently
-    * come back empty and be silently dropped. The non-blocking path stays
-    * for checkpoint-resume hits, where the observed plan never executed and
-    * the future never completes (getOrEmpty is private[sql]). */
-  private def bucketRow(o: org.apache.spark.sql.Observation,
-                        fresh: Boolean): Map[String, Any] = {
+  /** The LSH bucket funnel rows (A4 analog of the reference's logged
+    * O(n²)→O(Σb²) reduction): total→paired buckets, plus how many were
+    * salted, read from the observation LshJoin attaches to the bucket agg.
+    * Metrics are delivered by an ASYNC listener after the job, so on a
+    * fresh compute (`fresh = true`) wait up to `wait` for the callback; if
+    * it never arrives (or fails) the rows are still recorded, as
+    * `lsh_buckets_*:missing` with counts of -1 — a funnel that could not be
+    * read is never silently dropped. On a checkpoint-resume hit the
+    * observed plan never executed and the future never completes
+    * (getOrEmpty is private[sql]), so the rows are left out; the stage's
+    * `:cached` row says why. */
+  private[graft] def bucketMetrics(o: org.apache.spark.sql.Observation,
+      fresh: Boolean, runId: String, ts: String,
+      wait: scala.concurrent.duration.Duration =
+        scala.concurrent.duration.Duration(5, "s")): Seq[StageMetric] = {
     val rowOpt =
-      if (fresh)
-        try Some(scala.concurrent.Await.result(
-          o.future, scala.concurrent.duration.Duration(5, "s")))
-        catch { case _: java.util.concurrent.TimeoutException => None }
+      if (fresh) scala.util.Try(scala.concurrent.Await.result(o.future, wait)).toOption
       else o.future.value.flatMap(_.toOption)
+    def rows(suffix: String, v: String => Long) = Seq(
+      StageMetric(runId, "lsh_buckets_paired" + suffix,
+        v("total_buckets"), v("paired_buckets"), -1L, ts),
+      StageMetric(runId, "lsh_buckets_salted" + suffix,
+        v("total_buckets"), v("salted_buckets"), -1L, ts))
     rowOpt match {
-      case Some(row) if row.schema != null =>
-        row.schema.fieldNames.map(f => f -> row.getAs[Any](f)).toMap
-      case _ => Map.empty
+      case Some(row) if row.schema != null => rows("", k => row.getAs[Long](k))
+      case _ if fresh => rows(":missing", _ => -1L)
+      case _ => Nil
     }
   }
 
@@ -329,17 +338,10 @@ object Pipeline {
       (tag("verified", "verified"), n(oCand), n(oVer), msVer),
       (tag("tiered", "tiered"), n(oVer), n(oTier), msTier),
       ("clusters", n(oTier), -1L, msCc))
-    // LSH bucket funnel (A4 analog of the reference's logged O(n²)→O(Σb²)
-    // reduction): total→paired buckets, plus how many were salted — rides
-    // the same action via the observation LshJoin attached to the bucket agg
-    val buck = bucketRow(oBuckets, fresh = !hits("candidates"))
-    def bl(k: String) = buck.get(k).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val bucketMetrics = if (buck.isEmpty) Nil else Seq(
-      StageMetric(runId, "lsh_buckets_paired", bl("total_buckets"), bl("paired_buckets"), -1L, ts),
-      StageMetric(runId, "lsh_buckets_salted", bl("total_buckets"), bl("salted_buckets"), -1L, ts))
     val metrics = counts.map { case (s, in, out, ms) =>
       StageMetric(runId, s, in, out, ms, ts)
-    } ++ bucketMetrics :+ StageMetric(runId, "pipeline_total", nTurns, n(oTier), totalMs, ts)
+    } ++ bucketMetrics(oBuckets, fresh = !hits("candidates"), runId, ts) :+
+      StageMetric(runId, "pipeline_total", nTurns, n(oTier), totalMs, ts)
     // durability barrier: all async stage writes (+ run lineage) land before
     // the pipeline returns — a crash AFTER this point loses nothing
     pendingWrites.foreach(Await.result(_, Duration.Inf))
@@ -414,15 +416,8 @@ object Pipeline {
       }
     }
     val nCands = timedCount("candidates", nDocs, cands, candsHit)
-    val buck = bucketRow(oBuckets, fresh = !candsHit) // empty on checkpoint hit
-    if (buck.nonEmpty) {
-      def bl(k: String) = buck(k).asInstanceOf[Long]
-      val ts = java.time.Instant.now.toString
-      metrics += StageMetric(runId, "lsh_buckets_paired",
-        bl("total_buckets"), bl("paired_buckets"), -1L, ts)
-      metrics += StageMetric(runId, "lsh_buckets_salted",
-        bl("total_buckets"), bl("salted_buckets"), -1L, ts)
-    }
+    metrics ++= bucketMetrics(oBuckets, fresh = !candsHit, runId,
+      java.time.Instant.now.toString)
 
     val (verified, verHit) = stage(spark, io, ns, hash, "verified") {
       Verification.verify(cands, sigs, cfg)

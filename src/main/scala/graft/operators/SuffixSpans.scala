@@ -34,6 +34,17 @@ object SuffixSpans {
 
   private final val PackBits = 21 // 3×21 = 63 bits: rank | rank2+1 | index
   private final val PackMax = 1 << PackBits
+  /** Widest value range the round-0 counting sort takes: every UTF-16 code
+    * unit at the kernel's +256 offset plus 256 sentinels. Its count buffer
+    * (range + 1 ints, ≤ 258 KB) then stays O(alphabet), never O(n). */
+  private final val CountSortMaxRange = 0x10000L + 512L
+
+  /** Round 0 counting-sorts when the value range is within the alphabet
+    * bound and no wider than a few times the input (a sparse wide range in
+    * a short input sorts faster by comparison than by an O(range) count
+    * pass); otherwise the packed comparison sort. */
+  private[graft] def countSortsRound0(range: Long, n: Int): Boolean =
+    range <= CountSortMaxRange && range <= math.max(1024L, 4L * n)
 
   /** Generalized suffix array over `s` (doubling, O(n log n) rounds of one
     * primitive sort each). Values of `s` may be any ints (negative
@@ -71,7 +82,7 @@ object SuffixSpans {
     // the final SA is unique anyway (sentinels make all suffixes distinct).
     // Large ranges (arbitrary int alphabets) keep the packed sort.
     val range = maxV.toLong - minV + 1
-    if (range <= math.max(1024L, 4L * n)) {
+    if (countSortsRound0(range, n)) {
       val cnt0 = new Array[Int](range.toInt + 1)
       i = 0
       while (i < n) { cnt0(rank(i) + 1) += 1; i += 1 }

@@ -26,13 +26,17 @@ object PipePlanDump {
     corpus.count(): Unit
     val sigs = Signatures.compute(Reassembly.assemble(corpus), cfg)
       .localCheckpoint(true)
-    dump("pipeline_candidates", LshJoin.candidates(sigs, cfg).toDF())
+    // candidates() and verify() each run their first phase eagerly, so
+    // each is called ONCE: its plan is dumped, then the same Dataset is
+    // checkpointed for the next stage
+    val candPlan = LshJoin.candidates(sigs, cfg)
+    dump("pipeline_candidates", candPlan.toDF())
     // the bucket phase (item generator → sizing agg → salt join → grouped
     // members) is eagerly checkpointed inside saltedBucketPairs, so its
     // plan is dumped from the exposed pre-checkpoint fragment
     dump("pipeline_bucket_phase",
       LshJoin.groupedMembers(LshJoin.itemsFor(sigs), cfg.bandBucketCap, None))
-    val cands = LshJoin.candidates(sigs, cfg).localCheckpoint(true)
+    val cands = candPlan.localCheckpoint(true)
     // verify pass-1 (the payload joins + evidence projection) is eagerly
     // checkpointed inside verify(), so its plan is dumped from the exposed
     // pre-checkpoint fragment; the "before" twin replays the round-5
@@ -62,8 +66,9 @@ object PipePlanDump {
           (pk, a, b, est, 0.0, 0.0, 0.0, 0, 0, 0, false, src) }
       dump("pipeline_verify_pass1_before_shape", before.toDF())
     }
-    val ver = Verification.verify(cands, sigs, cfg).localCheckpoint(true)
-    dump("pipeline_verify", Verification.verify(cands, sigs, cfg).toDF())
+    val verPlan = Verification.verify(cands, sigs, cfg)
+    dump("pipeline_verify", verPlan.toDF())
+    val ver = verPlan.localCheckpoint(true)
     val prof = graft.operators.IntraDup.convProfile(corpus).localCheckpoint(true)
     // small-pairs broadcast shape vs the at-scale shuffle-hash shape: the
     // hint value is the only difference, so the pair of dumps IS the

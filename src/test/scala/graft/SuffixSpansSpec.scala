@@ -85,6 +85,27 @@ class SuffixSpansSpec extends SparkSpec {
     (0 until sa.length - 1).foreach(i => assert(cmpSuffix(sa(i), sa(i + 1))))
   }
 
+  test("wide int range takes the packed sort and still matches a naive suffix sort") {
+    val rng = new graft.sources.ConversationGen.Rng(0xA1FA)
+    // 20k values over a 70k range: under 4n, so only the fixed alphabet
+    // bound keeps the count buffer from growing with n
+    val n = 20000
+    val s = Array.tabulate(n)(i => if (i == n - 1) -1 else rng.nextInt(70000))
+    val range = s.max.toLong - s.min + 1
+    assert(range > 0x10000 + 512 && range <= 4L * n)
+    assert(!SuffixSpans.countSortsRound0(range, n))
+    // char-range inputs of any length keep the counting sort
+    assert(SuffixSpans.countSortsRound0('z' + 256 + 2, 10) &&
+      SuffixSpans.countSortsRound0(0x10000 + 256 + 2, 1 << 20))
+    def suffixLess(i: Int, j: Int): Boolean = i != j && {
+      var a = i; var b = j
+      while (a < n && b < n && s(a) == s(b)) { a += 1; b += 1 }
+      if (a == n) true else if (b == n) false else s(a) < s(b)
+    }
+    val naive = s.indices.sortWith(suffixLess).toArray
+    assert(SuffixSpans.suffixArray(s).sameElements(naive))
+  }
+
   test("spansForPairs: distributed spans match per-group computation") {
     import spark.implicits._
     val shared = "a long exactly repeated span of text that both conversations contain verbatim"
