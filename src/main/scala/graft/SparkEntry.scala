@@ -863,11 +863,13 @@ object SparkEntry {
            FROM corpus, tier""",
     // Full SQL replay of the tier gate (T1-T5 truth table + X12 z-score +
     // T2 routing) over the verified-pairs and conv_profile dumps: the
-    // endpoint mu/sigma recompute is float-safe (minhash_est is dyadic, so
-    // the mean is exact; sigma's ulp-level merge-order noise is absorbed by
-    // the round-6 both sides apply to the clip_z REPORT column — the raw
-    // veto comparison flips only if a z sits within ~1e-15 of the
-    // threshold). Thresholds are DedupConfig.balanced constants, with the
+    // endpoint mu/sigma recompute is float-safe (the engine folds each
+    // endpoint's sorted scores, DuckDB folds them in its own order; the
+    // debiased 8-bit minhash_est is not dyadic, so the two differ by fold-
+    // order noise — ≤ 3e-13 on clip_z over a 270-member family's ~500-edge
+    // endpoints — which the round-6 both sides apply to the clip_z REPORT
+    // column absorbs; the raw veto comparison flips only if a z sits that
+    // close to the threshold). Thresholds are DedupConfig.balanced constants, with the
     // tool_heavy/longform typeGates overrides keyed on the routed pair_type.
     // Full SQL replay of intra-conversation repeated-span stats over the
     // dumped positional shingle surface: per-shingle multiplicity counts,

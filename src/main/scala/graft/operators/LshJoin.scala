@@ -294,9 +294,15 @@ object LshJoin {
     // Pinning at the data-sized count keeps the reduces full-width; at
     // 100-TB scale these exchanges exceed the coalesce floor anyway.
     val parts = spark.sessionState.conf.numShufflePartitions
+    // explode_OUTER: every partner list is non-empty and non-null (the map
+    // side drops each sub-bucket's last member; a bridge has one partner),
+    // so it emits the same rows as explode — but a plain explode makes
+    // Catalyst infer size(partners) > 0 and push it through the exchange
+    // and the union into the map side, where it re-evaluated every
+    // member's slice a second time just to test it.
     val pairRows = lists
       .repartition(parts, $"conv_a")
-      .select($"conv_a", explode($"partners").as("conv_b"), $"band_id", $"src")
+      .select($"conv_a", explode_outer($"partners").as("conv_b"), $"band_id", $"src")
       // defense-in-depth (ADVICE r04): conv_id is unique per bucket by key
       // construction, but if a 64-bit band/variant key ever collided for
       // the SAME doc, sorted-adjacent duplicates in `members` would yield a

@@ -303,7 +303,8 @@ object Pipeline {
     }
     val msCand = lap()
     val verified = stageCk("verified", oVer) {
-      Verification.verify(cands, sigs, cfg)
+      Verification.verify(cands, sigs, cfg,
+        nDocs = Some(oSig.get("n").asInstanceOf[Long]))
     }
     val msVer = lap()
     // T2 routing: content-type profile keys the per-class tier thresholds.
@@ -420,7 +421,7 @@ object Pipeline {
       java.time.Instant.now.toString)
 
     val (verified, verHit) = stage(spark, io, ns, hash, "verified") {
-      Verification.verify(cands, sigs, cfg)
+      Verification.verify(cands, sigs, cfg, nDocs = Some(nDocs))
     }
     val nVer = timedCount("verified", nCands, verified, verHit)
 

@@ -41,12 +41,22 @@ object TierGate {
     * separate withZScore baseline build on (sharing it is what keeps the
     * TierWall fused-vs-separate comparison honest: same semantics by
     * construction, different join plans). Endpoint stats must see the edge
-    * from BOTH sides: explode to (endpoint, score) and aggregate. */
+    * from BOTH sides: explode to (endpoint, score) and aggregate.
+    *
+    * Order-free: `avg`/`stddev_pop` fold doubles in arrival order, so their
+    * last bits followed how the verified rows were partitioned (and so the
+    * core count). Each endpoint's scores are sorted first and folded in
+    * that order — the population mean, then the two-pass population
+    * stddev — so the stats are a function of the score multiset alone. */
   private def endpointStats(pairs: Dataset[VerifiedPair]): DataFrame = {
     val edges = pairs.select(col("conv_a").as("ep"), col("minhash_est").as("s"))
       .unionAll(pairs.select(col("conv_b").as("ep"), col("minhash_est").as("s")))
-    edges.groupBy(col("ep")).agg(
-      avg(col("s")).as("mu"), stddev_pop(col("s")).as("sigma"))
+    val ss = col("ss")
+    edges.groupBy(col("ep")).agg(array_sort(collect_list(col("s"))).as("ss"))
+      .withColumn("mu", aggregate(ss, lit(0.0), _ + _) / size(ss))
+      .select(col("ep"), col("mu"),
+        sqrt(aggregate(ss, lit(0.0),
+          (acc, x) => acc + (x - col("mu")) * (x - col("mu"))) / size(ss)).as("sigma"))
   }
 
   /** z of minhash_est against one endpoint's (mu_<side>, sigma_<side>);

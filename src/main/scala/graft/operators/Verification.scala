@@ -26,9 +26,9 @@ import graft.model._
  * Byte discipline (this stage is the pipeline's weakest scaler — the
  * memory-bus wall the scaling series attributes): the full DocSig payload
  * is ~16 KB/doc at the bench corpus (1024×8 B sketch + 9×256×8 B block
- * sketches + ~5 KB head text), and join1's output — (pair + payload_a) —
- * re-exchanges by conv_b, so every payload byte ships once more PER PAIR.
- * Two structural cuts:
+ * sketches + ~5 KB head text). On the shuffle plan, join1's output —
+ * (pair + payload_a) — re-exchanges by conv_b, so every payload byte ships
+ * once more PER PAIR. Three structural cuts:
  *   1. Sketches cross the joins as their HIGH-32-BIT truncations
  *      (`Array[Int]`): mix64 is a bijection, so sketch values are distinct
  *      uniform 64-bit keys and two distinct values collide in their high
@@ -47,24 +47,43 @@ import graft.model._
  *      fraction of pairs) and the union re-assembles the stage. The pass-1
  *      boundary is an eager localCheckpoint — the pipeline's stage idiom —
  *      so the fat join executes exactly once, not once per branch.
+ *   3. When the whole payload table fits under the session's
+ *      `spark.sql.autoBroadcastJoinThreshold` (see `payloadBroadcasts`),
+ *      both payload sides BROADCAST and the pair stream is read straight
+ *      from the candidates checkpoint with no exchange at all: no pair
+ *      ships a copy of its first document's sketches (skewed_corpus,
+ *      traced: the stage's shuffle write fell from 9-11 MB to 1.4-1.5 MB,
+ *      what pass 2's heads joins still ship).
  *
- * Scale notes: pairs are repartitioned on the uniform pair_key hash so heavy
- * conversations never hot-spot one task (north_rule salting requirement);
- * the payload joins are plain shuffled hash joins with AQE skew
+ * Scale notes: the payload dispatch is by an upper bound on the payload
+ * table's bytes — docs × `payloadCapBytes` (~13.5 KB/doc for `balanced`) —
+ * against the broadcast threshold, so at the bench session's 64 MB it
+ * broadcasts up to ~4.9k docs and a threshold of -1 always shuffles. The
+ * bound is computed, not left to the planner: a localCheckpointed
+ * LogicalRDD's size estimate does not see array payloads (a 568-row
+ * payload checkpoint: 2.2 KB estimated, 3.4 MB of rows), so a hint-free
+ * join would broadcast at any scale. Above the gate (sf0.1's 21k docs
+ * included) the payload joins are plain shuffled hash joins with AQE skew
  * splitting; per-pair work is bounded by the sketch caps and headChars.
  * SHUFFLE_HASH on the payload side: sort-merge would SORT the fat
  * (pair + payload) stream — measured 2.0 GB of sort spill per run at 100k
  * docs — while a hash join builds on the per-doc payload shard
  * (|docs|·payload / shuffle-partition) and streams the pair side unsorted
- * into the evidence map.
+ * into the evidence map. Pairs need no pre-spread on either plan: per-task
+ * skew is bounded by the per-doc candidate cap — a hot conversation
+ * contributes at most maxPairsPerDoc pairs per side.
  */
 object Verification {
 
   /** Below this many triggered (needSpan) pairs, the pass-2 heads joins
     * prune the heads table with a broadcast left-semi of the triggered
-    * endpoint ids (≤ 2 ids/pair × ~20 B ≈ 20 MB broadcast worst case at
-    * the threshold) before the heads exchange ships a byte; above it the
-    * unfiltered shuffle plan is unchanged. See the pass-2 note in verify. */
+    * endpoint ids before the heads exchange ships a byte; above it the
+    * unfiltered shuffle plan is unchanged. See the pass-2 note in verify.
+    * Cost at the threshold: 2 ids/pair = 1M broadcast rows, and the hash
+    * relation keeps every row, duplicates included — measured (local[4],
+    * 9-char ids) as a 160 MB relation (`dataSize`: two 64 MB pages plus a
+    * 32 MB slot array) built on the driver and held by every executor,
+    * whether the 1M ids held 1M or 100k distinct values. */
   val SpanHeadsBroadcastMaxPairs: Long = 500000L
 
   /** High-32-bit truncation of a sorted mixed-64 sketch column: monotonic
@@ -118,39 +137,65 @@ object Verification {
       col("minhash_est"), col("source"), evCol.as("ev"))
   }
 
+  /** Upper bound on one pass-1 payload row's bytes, from the config's
+    * caps: the high-32 truncated sketch words, 4 B × (sketchK + numBlocks ×
+    * blockSketchK), plus array headers and null bitsets (8 B per array),
+    * the 4-variant simhash bundle and the simhash (8 B each) and the id
+    * (64 B). ~13.5 KB for `balanced`; short documents carry less. */
+  private[graft] def payloadCapBytes(cfg: DedupConfig): Long =
+    4L * (cfg.sketchK + cfg.numBlocks.toLong * cfg.blockSketchK) +
+      8L * (cfg.numBlocks + 3) + 8L * 5 + 64L
+
+  /** The pass-1 payload dispatch: broadcast both payload sides when
+    * `nDocs` × `payloadCapBytes` fits under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 = never). `nDocs` is
+    * by-name: a disabled threshold never pays for the count. */
+  private[graft] def payloadBroadcasts(spark: org.apache.spark.sql.SparkSession,
+                                       nDocs: => Long, cfg: DedupConfig): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && nDocs <= threshold / payloadCapBytes(cfg)
+  }
+
   /** Dev plan access: the full pass-1 fragment (payload joins + evidence
-    * projection) as an UN-executed plan, for `.explain` dumps. */
+    * projection) as an UN-executed plan, for `.explain` dumps. `nDocs` as
+    * in `verify`; Some(1L) / Some(Long.MaxValue) force either branch. */
   private[graft] def pass1PlanFor(pairs: Dataset[CandidatePair],
                                   sigs: Dataset[DocSig],
-                                  cfg: DedupConfig): org.apache.spark.sql.DataFrame =
-    pass1Plan(joinedFor(pairs, sigs), cfg)
+                                  cfg: DedupConfig,
+                                  nDocs: Option[Long] = None): org.apache.spark.sql.DataFrame =
+    pass1Plan(joinedFor(pairs, sigs, cfg, nDocs), cfg)
 
+  /** Pairs + both endpoints' pass-1 payload (NO head text, sketches
+    * truncated to ints — ~2.8 KB/doc at the bench corpus vs the full
+    * DocSig's ~16 KB). When `payloadBroadcasts`, both payload sides
+    * broadcast and the pair stream stays where the candidates checkpoint
+    * left it — no exchange. Otherwise two SHUFFLE_HASH joins: the conv_a
+    * join re-shuffles the pair table and its (pair + payload_a) output
+    * re-exchanges by conv_b, the stage's dominant byte mover at scale. */
   private def joinedFor(pairs: Dataset[CandidatePair],
-                        sigs: Dataset[DocSig]): org.apache.spark.sql.DataFrame = {
+                        sigs: Dataset[DocSig],
+                        cfg: DedupConfig,
+                        nDocs: Option[Long]): org.apache.spark.sql.DataFrame = {
+    val small = payloadBroadcasts(pairs.sparkSession, nDocs.getOrElse(sigs.count()), cfg)
     val payload = sigs.select(col("conv_id"), col("simhash"), col("simhash_bundle"),
       sketch32(col("sketch")).as("sketch"),
       blocks32(col("block_sketches")).as("block_sketches"))
     def side(s: String) = payload.toDF(payload.columns.map(_ + s): _*)
+      .hint(if (small) "broadcast" else "shuffle_hash")
     pairs.toDF()
-      .join(side("_a").hint("shuffle_hash"), col("conv_a") === col("conv_id_a"))
-      .join(side("_b").hint("shuffle_hash"), col("conv_b") === col("conv_id_b"))
+      .join(side("_a"), col("conv_a") === col("conv_id_a"))
+      .join(side("_b"), col("conv_b") === col("conv_id_b"))
   }
 
+  /** `nDocs`: the row count of `sigs` when the caller already has it (the
+    * pipeline's signature-stage count); without it, `sigs` is counted here,
+    * so every caller takes the same payload branch for the same input. */
   def verify(pairs: Dataset[CandidatePair], sigs: Dataset[DocSig],
-             cfg: DedupConfig): Dataset[VerifiedPair] = {
+             cfg: DedupConfig, nDocs: Option[Long] = None): Dataset[VerifiedPair] = {
     val spark = pairs.sparkSession
     import spark.implicits._
 
-    // Pass-1 payload (see joinedFor): everything the cheap evidence needs,
-    // NO head text, sketches truncated to ints — ~2.8 KB/doc at the bench
-    // corpus vs the full DocSig's ~16 KB, a ~5.7× cut of the
-    // (pair + payload_a) exchange feeding join2, which is this stage's
-    // dominant byte mover. No pre-repartition: the conv_a equi-join
-    // re-shuffles the pair table anyway (an explicit pair_key spread here
-    // was pure wasted exchange), and per-task skew is already bounded by
-    // the per-doc candidate cap — a hot conversation contributes at most
-    // maxPairsPerDoc pairs per side.
-    val joined = joinedFor(pairs, sigs)
+    val joined = joinedFor(pairs, sigs, cfg, nDocs)
 
     val cutoff = cfg.simhashMaxDist
     val useSa = cfg.spanEngine == "sa"
@@ -211,8 +256,11 @@ object Verification {
     val allHeads = sigs.select($"conv_id", $"head_text")
     val heads =
       if (nTrig <= Verification.SpanHeadsBroadcastMaxPairs) {
-        // no distinct(): a left-semi broadcast build dedups keys in its
-        // hash relation anyway, and the distinct cost an exchange + agg job
+        // no distinct(): it costs an exchange + agg job on every run and
+        // bounds nothing in the worst case (all endpoints distinct, the
+        // same 160 MB relation at the threshold); it pays only when the
+        // triggered slice is large AND endpoint-repetitive (1M ids over
+        // 100k distinct: 68 MB instead of 160 MB)
         val ids = spanned0
           .select(explode(array($"conv_a", $"conv_b")).as("conv_id"))
         allHeads.join(broadcast(ids), Seq("conv_id"), "left_semi")

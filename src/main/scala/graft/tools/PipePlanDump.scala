@@ -44,6 +44,13 @@ object PipePlanDump {
     // the Deserialize/MapElements/Serialize nodes the rewrite removed are
     // visible in a committed plan (plan-shape replica only, never executed)
     dump("pipeline_verify_pass1", Verification.pass1PlanFor(cands, sigs, cfg))
+    // both payload branches, whatever the gate picks at this corpus size:
+    // the doc count is the only difference, so the pair of dumps IS the
+    // before/after plan diff for pass 1
+    dump("pipeline_verify_pass1_broadcast",
+      Verification.pass1PlanFor(cands, sigs, cfg, nDocs = Some(1L)))
+    dump("pipeline_verify_pass1_shufflehash",
+      Verification.pass1PlanFor(cands, sigs, cfg, nDocs = Some(Long.MaxValue)))
     locally {
       import spark.implicits._
       import org.apache.spark.sql.functions._

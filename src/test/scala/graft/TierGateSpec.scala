@@ -108,6 +108,27 @@ class TierGateSpec extends SparkSpec {
     assert(fused.values.exists(_._4 < 9.0))
   }
 
+  test("endpoint stats are order-free: two shufflings of verified tier hash-identically") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // three hubs with 60 edges each, scores that are not dyadic, so a
+    // double sum's last bits depend on the order it is folded in
+    val rnd = new scala.util.Random(7)
+    val pairs = for (h <- 0 until 3; i <- 0 until 60) yield {
+      val (a, b) = (f"h$h", f"l$h%d_$i%02d")
+      VerifiedPair(s"$a|$b", a, b, 0.3 + 0.7 * rnd.nextDouble(), 0.8, 0.7, 0.6,
+        1, 5, 10, false, 40, 0.1, 0, "lsh")
+    }
+    val ds = pairs.toDS()
+    val oneTask = ds.repartition(1).sortWithinPartitions(col("pair_key"))
+    val spread = ds.repartition(6, col("conv_b")).sortWithinPartitions(col("pair_key").desc)
+    def tiered(v: org.apache.spark.sql.Dataset[VerifiedPair]) =
+      TierGate(v, cfg).collect().sortBy(_.pair_key).toSeq
+    val (t1, t2) = (tiered(oneTask), tiered(spread))
+    assert(t1.exists(_.clip_z_analog < 9.0), "fixture must produce real z-scores")
+    assert(t1 == t2, t1.zip(t2).filter { case (x, y) => x != y }.take(3).mkString("\n"))
+  }
+
   test("withPairType routes same-class pairs and cross-class fallback") {
     import spark.implicits._
     val pairs = Seq(

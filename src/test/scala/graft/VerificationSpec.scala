@@ -1,7 +1,12 @@
 package graft
 
 import graft.model.{ConvDoc, DedupConfig}
-import graft.operators.{LshJoin, Signatures, Verification}
+import graft.operators.{LshJoin, Pipeline, Signatures, Verification}
+import graft.sources.ConversationGen
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 
 /**
  * The verify stage's slim-payload restructure (high-32-bit sketch
@@ -10,9 +15,11 @@ import graft.operators.{LshJoin, Signatures, Verification}
  * once, the truncated jaccard equals the reference 64-bit jaccard up to
  * the 2⁻³² collision probability (exact on any test-sized corpus), and the
  * progressive span gate still fires with real spans on inconclusive-but-
- * plausible pairs while conclusive pairs never pay for text.
+ * plausible pairs while conclusive pairs never pay for text. The pass-1
+ * payload dispatch (broadcast when the corpus fits, shuffled hash joins
+ * otherwise) must give identical outputs on both branches.
  */
-class VerificationSpec extends SparkSpec {
+class VerificationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val cfg = DedupConfig.balanced
@@ -111,5 +118,68 @@ class VerificationSpec extends SparkSpec {
       assert(math.abs(p.jaccard - ref) < 1e-12,
         s"${p.pair_key}: truncated ${p.jaccard} vs 64-bit $ref")
     }
+  }
+
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Runs `body` with the session's broadcast threshold set to `value`. */
+  private def withThreshold[T](value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(BroadcastThreshold)
+    spark.conf.set(BroadcastThreshold, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(BroadcastThreshold, v)
+      case None => spark.conf.unset(BroadcastThreshold)
+    }
+  }
+
+  test("payload gate: docs × per-doc payload cap against the broadcast threshold") {
+    val cap = Verification.payloadCapBytes(cfg)
+    // 4 B × (1024 + 9 × 256) sketch words plus headers, bundle and id
+    assert(cap > 13312L && cap < 14000L, s"cap=$cap")
+    withThreshold("64m") {
+      val fit = (64L << 20) / cap
+      assert(Verification.payloadBroadcasts(spark, fit, cfg))
+      assert(!Verification.payloadBroadcasts(spark, fit + 1, cfg))
+      assert(!Verification.payloadBroadcasts(spark, 21280L, cfg), "sf0.1 must shuffle")
+    }
+    withThreshold("-1") {
+      assert(!Verification.payloadBroadcasts(spark,
+        throw new AssertionError("a disabled threshold must not count the docs"), cfg))
+    }
+  }
+
+  test("payload dispatch: both branches give identical verified, tiered and clusters") {
+    import spark.implicits._
+    def run() = {
+      val r = Pipeline.runPipelined(ConversationGen.corpus(spark, ConversationGen.smoke), cfg)
+      (r.verified.collect().sortBy(_.pair_key).toSeq,
+        r.tiered.collect().sortBy(_.pair_key).toSeq,
+        r.clusters.collect().sortBy(_.conv_id).toSeq)
+    }
+    val (vShuffle, tShuffle, cShuffle) = withThreshold("-1")(run())
+    val (vBroadcast, tBroadcast, cBroadcast) = withThreshold("1g")(run())
+    assert(vShuffle.nonEmpty && tShuffle.exists(_.tier == "A"), "fixture must verify and tier pairs")
+    assert(vBroadcast == vShuffle, "verified rows differ between the payload branches")
+    assert(tBroadcast.map(t => (t.pair_key, t.tier, t.tier_path)) ==
+      tShuffle.map(t => (t.pair_key, t.tier, t.tier_path)), "tiers differ")
+    assert(tBroadcast == tShuffle, "tiered rows differ")
+    assert(cBroadcast == cShuffle, "clusters differ")
+  }
+
+  test("payload dispatch plans: broadcast pass 1 has no shuffle, the other keeps two SHJs") {
+    val (sigs, cands, _) = verifiedAll
+    val sigsCk = sigs.localCheckpoint(true)
+    val candsCk = cands.localCheckpoint(true)
+    def nodes(nDocs: Long): Seq[SparkPlan] = collect(
+      Verification.pass1PlanFor(candsCk, sigsCk, cfg, Some(nDocs))
+        .queryExecution.executedPlan) { case p => p }
+    val small = nodes(sigsCk.count())
+    assert(!small.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"broadcast pass 1 shuffled:\n${small.head.treeString}")
+    assert(small.count(_.isInstanceOf[BroadcastHashJoinExec]) == 2, small.head.treeString)
+    val large = nodes(Long.MaxValue)
+    assert(large.count(_.isInstanceOf[ShuffledHashJoinExec]) == 2, large.head.treeString)
+    assert(!large.exists(_.isInstanceOf[BroadcastHashJoinExec]), large.head.treeString)
   }
 }
