@@ -660,7 +660,10 @@ object LcsSpanStats {
 
 /** Column-API facade + SQL registration for the custom expressions. */
 object GraftFunctions {
-  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  import org.apache.spark.sql.graft.Bridge
   import org.apache.spark.sql.graft.Bridge.{column, expression}
 
   def simhash64(c: Column): Column = column(SimHash64(expression(c)))
@@ -698,18 +701,44 @@ object GraftFunctions {
   def sketch32(c: Column): Column = column(Sketch32Expr(expression(c)))
   def blocks32(c: Column): Column = column(Blocks32Expr(expression(c)))
 
-  /** Register for SQL use: SELECT simhash64(text) FROM docs. */
+  /** The SQL function table, (name, usage, expression factory): the one
+    * list both registration paths read — `inject` for the
+    * `spark.sql.extensions` deploy path (graft.GraftExtensions) and
+    * `register` for a running session — so a new function is a one-line
+    * edit here. */
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("simhash64", "simhash64(text) - 64-bit SimHash of normalized tokens",
+      es => SimHash64(es.head)),
+    ("hamming64", "hamming64(a, b) - popcount(a XOR b)",
+      es => Hamming64(es(0), es(1))),
+    ("jaccard_sorted", "jaccard_sorted(a, b) - exact Jaccard of sorted long arrays",
+      es => JaccardSortedExpr(es(0), es(1))),
+    ("minhash_sig", "minhash_sig(text) - MinHash signature at the fixed engine config",
+      es => MinHashSig(es.head, 5, 128, 123L)),
+    ("dot_arr", "dot_arr(a, b) - dot product of two float or double arrays",
+      es => DotArr(es(0), es(1))),
+    ("minhash_est", "minhash_est(a, b) - fraction of agreeing MinHash positions",
+      es => MinhashEstExpr(es(0), es(1))),
+    ("minhash_est32", "minhash_est32(a, b) - b-bit minwise estimate over 32-bit-truncated signatures",
+      es => MinhashEst32Expr(es(0), es(1))),
+    ("pack_low_bytes", "pack_low_bytes(array<long>) - low byte of each component as packed binary",
+      es => PackLowBytes(es.head)),
+    ("minhash_est8", "minhash_est8(a, b) - debiased 8-bit b-bit minwise estimate over packed signatures",
+      es => MinhashEst8Expr(es(0), es(1))),
+    ("hyperplane_sig", "hyperplane_sig(embedding) - sign-random-hyperplane LSH bucket (8 planes, seed 7)",
+      es => HyperplaneSig(es.head, 8, 7L)))
+
+  /** Inject every `sqlFunctions` entry into a `SparkSessionExtensions`. */
+  def inject(ext: SparkSessionExtensions): Unit =
+    sqlFunctions.foreach { case (name, usage, make) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), make))
+    }
+
+  /** Register for SQL use in a running session: SELECT simhash64(text) FROM docs. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming64", es => Hamming64(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_sorted", es => JaccardSortedExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSig(es.head, 5, 128, 123L), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_arr", es => DotArr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est", es => MinhashEstExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est32", es => MinhashEst32Expr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("pack_low_bytes", es => PackLowBytes(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est8", es => MinhashEst8Expr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_sig", es => HyperplaneSig(es.head, 8, 7L), "scala_udf")
+    val ext = new SparkSessionExtensions
+    inject(ext)
+    Bridge.applyFunctionInjections(ext, spark)
   }
 }

@@ -28,6 +28,19 @@ import graft.model.{DedupConfig, Turn}
  */
 object Adaptive {
 
+  /** The broadcast-or-shuffle size gate: true when `rows` × `capBytesPerRow`
+    * (an upper bound on one row of the broadcast side) fits under the
+    * session's `spark.sql.autoBroadcastJoinThreshold` (-1 = never). The
+    * bound is computed, not left to the planner, because a
+    * localCheckpointed LogicalRDD's size estimate does not see array
+    * payloads. `rows` is by-name: a disabled threshold never pays for the
+    * count. */
+  private[graft] def fits(spark: org.apache.spark.sql.SparkSession,
+                          rows: => Long, capBytesPerRow: Long): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && rows <= threshold / capBytesPerRow
+  }
+
   /** auto_configure analog: derive engine parameters from corpus size. */
   def configure(nDocs: Long, base: DedupConfig = DedupConfig.balanced): DedupConfig = {
     if (nDocs < 10000L)

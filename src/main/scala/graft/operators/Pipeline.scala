@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -38,24 +38,30 @@ object Pipeline {
     clusters: Dataset[ClusterRow],
     metrics: Seq[StageMetric])
 
-  /** Deterministic input fingerprint + row count in ONE job: order-
-    * independent aggregate of per-row hashes (≙ the reference's MD5 over
-    * (path, mtime, size) of all inputs). The hash covers EVERY Turn field
-    * the pipeline's outputs depend on — conv_id, turn_idx, text, role
-    * (masking + convProfile routing), tool (the masked signature token) —
-    * so a role/tool-only data fix invalidates checkpoints like a text
-    * change does; ts is deliberately excluded (no batch stage reads it —
-    * including it would spuriously invalidate on timestamp-only rewrites).
+  /** The input hash's per-row hash (≙ the reference's MD5 over (path,
+    * mtime, size) of all inputs), the one definition behind
+    * `fingerprintAndCount` and `runPipelined`'s observed hash. It covers
+    * EVERY Turn field the pipeline's outputs depend on — conv_id, turn_idx,
+    * text, role (masking + convProfile routing), tool (the masked signature
+    * token) — so a role/tool-only data fix invalidates checkpoints like a
+    * text change does; ts is deliberately excluded (no batch stage reads
+    * it — including it would spuriously invalidate on timestamp-only
+    * rewrites). */
+  private def rowHash: Column =
+    xxhash64(col("conv_id"), col("turn_idx"), col("text"), col("role"), col("tool"))
+
+  /** Order-independent, ANSI-overflow-safe aggregate of row hashes.
     * coalesce: bit_xor over ZERO rows is NULL — an empty input must key
     * deterministically, not NPE (same fix as groupsFingerprint). */
+  private def xorOf(h: Column): Column = coalesce(bit_xor(h), lit(0L)).as("s")
+
+  private def inputKey(hash: Long, n: Long): String = f"$hash%016x_$n"
+
+  /** Deterministic input fingerprint + row count in ONE job. */
   def fingerprintAndCount(turns: Dataset[Turn]): (String, Long) = {
-    val row = turns
-      .select(xxhash64(col("conv_id"), col("turn_idx"), col("text"),
-        col("role"), col("tool")).as("h"))
-      .agg(coalesce(bit_xor(col("h")), lit(0L)).as("s"),
-        count(lit(1)).as("n")) // xor: order-independent, ANSI-overflow-safe
-      .head()
-    (f"${row.getLong(0)}%016x_${row.getLong(1)}", row.getLong(1))
+    val row = turns.select(rowHash.as("h"))
+      .agg(xorOf(col("h")), count(lit(1)).as("n")).head()
+    (inputKey(row.getLong(0), row.getLong(1)), row.getLong(1))
   }
 
   def inputFingerprint(turns: Dataset[Turn]): String = fingerprintAndCount(turns)._1
@@ -245,9 +251,7 @@ object Pipeline {
     // may never scan the input, so the observation is skipped.
     val turnsObs =
       if (pre.isDefined) turns
-      else turns.observe(oIn,
-        bit_xor(xxhash64(col("conv_id"), col("turn_idx"), col("text"))).as("s"),
-        count(lit(1)).as("n"))
+      else turns.observe(oIn, xorOf(rowHash), count(lit(1)).as("n"))
     // Stage boundaries are EAGER localCheckpoints, not bare persists: the
     // pipeline is self-join-heavy (bucket x/y, payload _a/_b, z-score edge
     // union, CC symmetric union), and every self-reference makes Catalyst's
@@ -328,8 +332,7 @@ object Pipeline {
     val totalMs = (System.nanoTime() - t0) / 1000000L
     val ts = java.time.Instant.now.toString
     def n(o: Observation) = o.get("n").asInstanceOf[Long]
-    val hash = pre.map(_._1).getOrElse(
-      f"${oIn.get("s").asInstanceOf[Long]}%016x_${n(oIn)}")
+    val hash = pre.map(_._1).getOrElse(inputKey(oIn.get("s").asInstanceOf[Long], n(oIn)))
     val nTurns = pre.map(_._2).getOrElse(n(oIn))
     def tag(stage: String, metric: String) =
       if (hits(stage)) metric + ":cached" else metric

@@ -36,19 +36,16 @@ import graft.model.{DedupConfig, TieredPair, TypeGates, VerifiedPair}
  */
 object TierGate {
 
-  /** Per-endpoint (mu, sigma) of minhash_est over every incident pair —
-    * the ONE stats definition both the fused attachAttrs pass and the
-    * separate withZScore baseline build on (sharing it is what keeps the
-    * TierWall fused-vs-separate comparison honest: same semantics by
-    * construction, different join plans). Endpoint stats must see the edge
-    * from BOTH sides: explode to (endpoint, score) and aggregate.
+  /** Per-endpoint (mu, sigma) of minhash_est over every incident pair.
+    * Endpoint stats must see the edge from BOTH sides: explode to
+    * (endpoint, score) and aggregate.
     *
     * Order-free: `avg`/`stddev_pop` fold doubles in arrival order, so their
     * last bits followed how the verified rows were partitioned (and so the
     * core count). Each endpoint's scores are sorted first and folded in
     * that order — the population mean, then the two-pass population
     * stddev — so the stats are a function of the score multiset alone. */
-  private def endpointStats(pairs: Dataset[VerifiedPair]): DataFrame = {
+  private[graft] def endpointStats(pairs: Dataset[VerifiedPair]): DataFrame = {
     val edges = pairs.select(col("conv_a").as("ep"), col("minhash_est").as("s"))
       .unionAll(pairs.select(col("conv_b").as("ep"), col("minhash_est").as("s")))
     val ss = col("ss")
@@ -74,44 +71,8 @@ object TierGate {
       .when(col("ct_a") === col("ct_b"), col("ct_a"))
       .otherwise("cross")
 
-  /** Attach clip_z_analog via the separate two-join pass (TierWall's
-    * baseline; Pipeline runs the fused attachAttrs). */
-  def withZScore(pairs: Dataset[VerifiedPair]): DataFrame = {
-    val stats = endpointStats(pairs)
-    // SHUFFLE_HASH on the stats side: Catalyst cannot see that the final
-    // aggregate is small (the partial-agg exchange bytes overstate it, so
-    // AQE never broadcast-converts), and the default sort-merge join SORTS
-    // the fat pair table TWICE — measured 15-23 s at local[32] on the
-    // 9.1M-turn corpus (the BD/BF tiered anti-scaling) vs ~6 s hashed. The
-    // build side is the per-endpoint stats shard — |docs|·~40 B /
-    // shuffle-partition, the quantity sizeShuffleForCorpus bounds — and
-    // the pair table streams unsorted, same discipline as the candidate
-    // scoring and verify payload joins.
-    pairs.toDF()
-      .join(stats.select(col("ep").as("conv_a"), col("mu").as("mu_a"), col("sigma").as("sigma_a"))
-        .hint("shuffle_hash"), Seq("conv_a"), "left")
-      .join(stats.select(col("ep").as("conv_b"), col("mu").as("mu_b"), col("sigma").as("sigma_b"))
-        .hint("shuffle_hash"), Seq("conv_b"), "left")
-      .withColumn("clip_z_analog", least(zExpr("a"), zExpr("b")))
-      .drop("mu_a", "sigma_a", "mu_b", "sigma_b")
-  }
-
-  /** Attach pair_type from a (conv_id, content_type) profile: the routed
-    * class when both endpoints agree, "cross" otherwise (T2 routing). */
-  def withPairType(pairsWithZ: DataFrame, profiles: Option[DataFrame]): DataFrame =
-    profiles match {
-      case Some(p) =>
-        val ct = p.select(col("conv_id"), col("content_type"))
-        pairsWithZ
-          .join(ct.select(col("conv_id").as("conv_a"), col("content_type").as("ct_a")), Seq("conv_a"), "left")
-          .join(ct.select(col("conv_id").as("conv_b"), col("content_type").as("ct_b")), Seq("conv_b"), "left")
-          .withColumn("pair_type", pairTypeExpr)
-          .drop("ct_a", "ct_b")
-      case None => pairsWithZ.withColumn("pair_type", lit("default"))
-    }
-
   /** The tier truth table. Input: verified pairs + clip_z_analog and
-    * pair_type columns (see withZScore / withPairType). */
+    * pair_type columns (see attachAttrs). */
   def gate(verifiedWithZ: DataFrame, cfg: DedupConfig): Dataset[TieredPair] = {
     val spark = verifiedWithZ.sparkSession
     import spark.implicits._
@@ -199,11 +160,22 @@ object TierGate {
       .as[TieredPair]
   }
 
+  /** Below this many verified pairs the per-endpoint attrs table (≤ 2
+    * rows/pair × ~60 B ≈ 60 MB worst case) BROADCASTS into the pair joins
+    * instead of SHUFFLE_HASH — the same adaptive dispatch-by-input-size CC
+    * uses for its local path (broadcast the side that fits; Catalyst never
+    * broadcast-converts here on its own because the partial-agg exchange
+    * bytes overstate the stats size). Above the
+    * threshold — the 100-TB regime, where attrs is |docs|-proportional —
+    * the shuffle-hash plan below is unchanged. At the bench corpus this
+    * removes both pair-table exchanges from the tiered stage. */
+  val BroadcastMaxPairs: Long = 500000L
+
   /**
    * Fused z-score + pair-type attachment: ONE per-endpoint attribute table
    * (mu, sigma, content_type — stats left-joined to the profile on the
-   * endpoint id) and ONE pair-table join per side, instead of the separate
-   * withZScore (2 joins) + withPairType (2 joins) passes. Semantics are
+   * endpoint id) and ONE pair-table join per side, instead of separate
+   * z-score (2 joins) and pair-type (2 joins) passes. Semantics are
    * identical (stats keys cover every pair endpoint by construction; a
    * missing profile row routes to "default" exactly like the old left
    * join), but the 10⁶–10⁷-row pair table crosses the wire TWICE instead
@@ -212,20 +184,12 @@ object TierGate {
    * SHUFFLE_HASH-hinted — the remaining wall was the stage's chain of
    * narrow 142-partition pair-table exchanges, and halving them is a
    * plan-level cut that holds at any scale (at 10¹² turns these are the
-   * dominant tiered-stage bytes). The per-endpoint attrs stay SHUFFLE_HASH
-   * (|docs|-proportional — too big to broadcast at target scale).
+   * dominant tiered-stage bytes). Above `BroadcastMaxPairs` the
+   * per-endpoint attrs (|docs|-proportional) join SHUFFLE_HASH: Catalyst
+   * cannot see that the final aggregate is small, and a sort-merge join
+   * would SORT the fat pair table twice (measured 15-23 s at local[32] on
+   * the 9.1M-turn corpus vs ~6 s hashed).
    */
-  /** Below this many verified pairs the per-endpoint attrs table (≤ 2
-    * rows/pair × ~60 B ≈ 60 MB worst case) BROADCASTS into the pair joins
-    * instead of SHUFFLE_HASH — the same adaptive dispatch-by-input-size CC
-    * uses for its driver-local path (guide §3.1: broadcast the side that
-    * fits; Catalyst never broadcast-converts here on its own because the
-    * partial-agg exchange bytes overstate the stats size). Above the
-    * threshold — the 100-TB regime, where attrs is |docs|-proportional —
-    * the shuffle-hash plan below is unchanged. At the bench corpus this
-    * removes both pair-table exchanges from the tiered stage. */
-  val BroadcastMaxPairs: Long = 500000L
-
   private def attachAttrs(pairs: Dataset[VerifiedPair],
                           profiles: Option[DataFrame],
                           small: Boolean): DataFrame = {

@@ -48,7 +48,7 @@ import graft.model._
  *      boundary is an eager localCheckpoint — the pipeline's stage idiom —
  *      so the fat join executes exactly once, not once per branch.
  *   3. When the whole payload table fits under the session's
- *      `spark.sql.autoBroadcastJoinThreshold` (see `payloadBroadcasts`),
+ *      `spark.sql.autoBroadcastJoinThreshold` (see `Adaptive.fits`),
  *      both payload sides BROADCAST and the pair stream is read straight
  *      from the candidates checkpoint with no exchange at all: no pair
  *      ships a copy of its first document's sketches (skewed_corpus,
@@ -75,16 +75,15 @@ import graft.model._
  */
 object Verification {
 
-  /** Below this many triggered (needSpan) pairs, the pass-2 heads joins
-    * prune the heads table with a broadcast left-semi of the triggered
-    * endpoint ids before the heads exchange ships a byte; above it the
-    * unfiltered shuffle plan is unchanged. See the pass-2 note in verify.
-    * Cost at the threshold: 2 ids/pair = 1M broadcast rows, and the hash
-    * relation keeps every row, duplicates included — measured (local[4],
-    * 9-char ids) as a 160 MB relation (`dataSize`: two 64 MB pages plus a
-    * 32 MB slot array) built on the driver and held by every executor,
-    * whether the 1M ids held 1M or 100k distinct values. */
-  val SpanHeadsBroadcastMaxPairs: Long = 500000L
+  /** Upper bound on one triggered endpoint id's bytes in the pass-2 heads
+    * prune's broadcast hash relation, which keeps every id, duplicates
+    * included: the id as key row and as value row, each an UnsafeRow of
+    * 8 B null bitset + 8 B offset word + the id (64 B), plus 16 B of record
+    * lengths and chain pointer, plus up to 48 B of slot array (2 longs per
+    * slot, capacity the next power of two ≥ 1.5 × rows). 224 B; measured
+    * 160 B per 9-char id (local[4], 1M ids: two 64 MB pages plus a 32 MB
+    * slot array). */
+  private[graft] val headIdCapBytes: Long = 2L * (8 + 8 + 64) + 16 + 48
 
   /** High-32-bit truncation of a sorted mixed-64 sketch column: monotonic
     * (order-preserving on the signed sort), in-int-range by construction,
@@ -146,16 +145,6 @@ object Verification {
     4L * (cfg.sketchK + cfg.numBlocks.toLong * cfg.blockSketchK) +
       8L * (cfg.numBlocks + 3) + 8L * 5 + 64L
 
-  /** The pass-1 payload dispatch: broadcast both payload sides when
-    * `nDocs` × `payloadCapBytes` fits under the session's
-    * `spark.sql.autoBroadcastJoinThreshold` (-1 = never). `nDocs` is
-    * by-name: a disabled threshold never pays for the count. */
-  private[graft] def payloadBroadcasts(spark: org.apache.spark.sql.SparkSession,
-                                       nDocs: => Long, cfg: DedupConfig): Boolean = {
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    threshold >= 0 && nDocs <= threshold / payloadCapBytes(cfg)
-  }
-
   /** Dev plan access: the full pass-1 fragment (payload joins + evidence
     * projection) as an UN-executed plan, for `.explain` dumps. `nDocs` as
     * in `verify`; Some(1L) / Some(Long.MaxValue) force either branch. */
@@ -167,16 +156,17 @@ object Verification {
 
   /** Pairs + both endpoints' pass-1 payload (NO head text, sketches
     * truncated to ints — ~2.8 KB/doc at the bench corpus vs the full
-    * DocSig's ~16 KB). When `payloadBroadcasts`, both payload sides
-    * broadcast and the pair stream stays where the candidates checkpoint
-    * left it — no exchange. Otherwise two SHUFFLE_HASH joins: the conv_a
+    * DocSig's ~16 KB). When `nDocs` × `payloadCapBytes` fits (see
+    * `Adaptive.fits`), both payload sides broadcast and the pair stream
+    * stays where the candidates checkpoint left it — no exchange. Otherwise two SHUFFLE_HASH joins: the conv_a
     * join re-shuffles the pair table and its (pair + payload_a) output
     * re-exchanges by conv_b, the stage's dominant byte mover at scale. */
   private def joinedFor(pairs: Dataset[CandidatePair],
                         sigs: Dataset[DocSig],
                         cfg: DedupConfig,
                         nDocs: Option[Long]): org.apache.spark.sql.DataFrame = {
-    val small = payloadBroadcasts(pairs.sparkSession, nDocs.getOrElse(sigs.count()), cfg)
+    val small = Adaptive.fits(pairs.sparkSession, nDocs.getOrElse(sigs.count()),
+      payloadCapBytes(cfg))
     val payload = sigs.select(col("conv_id"), col("simhash"), col("simhash_bundle"),
       sketch32(col("sketch")).as("sketch"),
       blocks32(col("block_sketches")).as("block_sketches"))
@@ -244,23 +234,23 @@ object Verification {
     // only the triggered slice's endpoints (measured 67 MB of a ~110 MB
     // verify-stage shuffle at the bench corpus for ~8% of docs actually
     // touched). The triggered pair count is a cheap count over the pass-1
-    // checkpoint, so when the slice is small the triggered endpoint ids
-    // BROADCAST into a left-semi prune of the heads scan — map-side, before
-    // the heads exchange ships a byte. Above the threshold (ids no longer
-    // safely broadcastable) the unfiltered plan is unchanged — the same
-    // adaptive dispatch-by-observed-size pattern as TierGate's attrs
-    // broadcast and CC's driver-local path. Plan choice only: the semi
-    // join drops rows the inner pair joins would drop anyway.
+    // checkpoint, so when the slice's 2 × nTrig endpoint ids fit the
+    // broadcast threshold at `headIdCapBytes` each, they BROADCAST into a
+    // left-semi prune of the heads scan — map-side, before the heads
+    // exchange ships a byte. Otherwise the unfiltered plan is unchanged —
+    // the same dispatch-by-observed-size as the pass-1 payload broadcast.
+    // Plan choice only: the semi join drops rows the inner pair joins
+    // would drop anyway.
     val spanned0 = pass1.filter($"need_span").drop("need_span")
-    val nTrig = spanned0.count() // cached scan of the pass-1 checkpoint
     val allHeads = sigs.select($"conv_id", $"head_text")
     val heads =
-      if (nTrig <= Verification.SpanHeadsBroadcastMaxPairs) {
+      // 2 ids per triggered pair, counted by a cached scan of the pass-1
+      // checkpoint
+      if (Adaptive.fits(spark, 2L * spanned0.count(), headIdCapBytes)) {
         // no distinct(): it costs an exchange + agg job on every run and
-        // bounds nothing in the worst case (all endpoints distinct, the
-        // same 160 MB relation at the threshold); it pays only when the
-        // triggered slice is large AND endpoint-repetitive (1M ids over
-        // 100k distinct: 68 MB instead of 160 MB)
+        // bounds nothing in the worst case (all endpoints distinct); it
+        // pays only when the triggered slice is large AND
+        // endpoint-repetitive
         val ids = spanned0
           .select(explode(array($"conv_a", $"conv_b")).as("conv_id"))
         allHeads.join(broadcast(ids), Seq("conv_id"), "left_semi")

@@ -22,31 +22,71 @@ class ExpressionsSpec extends SparkSpec {
     assert(n == 1)
   }
 
+  // one fixed SQL call per function-table entry; an entry without one fails
+  private val tableCalls = Map(
+    "simhash64" -> "simhash64('Hello, World! foo bar')",
+    "hamming64" -> "hamming64(12345L, 54321L)",
+    "jaccard_sorted" -> "jaccard_sorted(array(1L, 2L, 3L, 4L), array(3L, 4L, 5L))",
+    "minhash_sig" -> "minhash_sig('a b c d e f g h')",
+    "dot_arr" -> "dot_arr(array(1.0D, 2.0D, 3.0D), array(0.5D, -1.0D, 4.0D))",
+    "minhash_est" -> "minhash_est(array(1L, 2L, 3L, 4L), array(1L, 2L, 9L, 4L))",
+    "minhash_est32" -> "minhash_est32(array(1, 2, 3, 4), array(1, 7, 3, 4))",
+    "pack_low_bytes" -> "pack_low_bytes(array(1L, 258L, -1L))",
+    "minhash_est8" -> "minhash_est8(X'01020304AABBCCDD', X'01020399AABBCC00')",
+    "hyperplane_sig" -> "hyperplane_sig(array(0.5D, -1.0D, 2.0D, 0.25D))")
+  private val tableNames = GraftFunctions.sqlFunctions.map(_._1)
+
+  /** Every table entry evaluated once through `install`, in a fresh
+    * session: fresh sessions carry only the built-ins, so the path is seen
+    * installing each name by itself. */
+  private def tableRow(install: org.apache.spark.sql.SparkSession => Unit) = {
+    val s = spark.newSession()
+    def resolves(n: String) =
+      s.sessionState.catalog.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n))
+    assert(tableNames.distinct == tableNames, s"duplicate table entries: $tableNames")
+    assert(tableCalls.keySet == tableNames.toSet, s"table $tableNames vs calls ${tableCalls.keys}")
+    assert(!tableNames.exists(resolves), "a fresh session already resolves a table name")
+    install(s)
+    tableNames.foreach(n => assert(resolves(n), s"$n does not resolve"))
+    val row = s.sql(tableNames.map(n => s"${tableCalls(n)} AS $n").mkString("SELECT ", ", ", ""))
+      .collect().head
+    tableNames.indices.foreach(i => assert(!row.isNullAt(i), s"${tableNames(i)} returned null"))
+    (s, row)
+  }
+  private lazy val registered = tableRow(GraftFunctions.register)
+
   test("expressions usable from SQL after registration") {
-    import spark.implicits._
-    GraftFunctions.register(spark)
-    Seq(("a b c d e f g", 1)).toDF("text", "x").createOrReplaceTempView("tdocs")
-    val r = spark.sql(
+    val (s, _) = registered
+    s.createDataFrame(Seq(("a b c d e f g", 1))).toDF("text", "x").createOrReplaceTempView("tdocs")
+    val r = s.sql(
       "SELECT hamming64(simhash64(text), simhash64(text)) AS d FROM tdocs")
       .collect().head.getInt(0)
     assert(r == 0)
-    val sig = spark.sql("SELECT minhash_sig(text) AS s FROM tdocs")
+    val sig = s.sql("SELECT minhash_sig(text) AS s FROM tdocs")
       .collect().head.getSeq[Long](0)
     assert(sig.length == 128)
   }
 
   test("GraftExtensions injects functions (spark.sql.extensions deploy path)") {
     // drive the same hook the builder applies for spark.sql.extensions:
-    // collect injections, register into this session's function registry
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    org.apache.spark.sql.graft.Bridge.applyFunctionInjections(ext, spark)
-    val r = spark.sql("SELECT hamming64(simhash64('a b c'), simhash64('a b c')) AS d")
-      .collect().head.getInt(0)
-    assert(r == 0)
-    val sig = spark.sql("SELECT minhash_sig('a b c d e f g') AS s")
-      .collect().head.getSeq[Long](0)
-    assert(sig.length == 128)
+    // collect injections, register into the session's function registry
+    val (_, viaRegister) = registered
+    val (_, viaExtensions) = tableRow { s =>
+      val ext = new org.apache.spark.sql.SparkSessionExtensions
+      new GraftExtensions().apply(ext)
+      org.apache.spark.sql.graft.Bridge.applyFunctionInjections(ext, s)
+    }
+    // both registration paths read one table: same value for every entry
+    tableNames.indices.foreach { i =>
+      val (a, b) = (viaRegister.get(i), viaExtensions.get(i))
+      assert((a, b) match {
+        case (x: Array[Byte], y: Array[Byte]) => x.sameElements(y)
+        case _ => a == b
+      }, s"${tableNames(i)}: register $a vs extensions $b")
+    }
+    assert(viaExtensions.getAs[Long]("simhash64") == TextKernel.simhash64(
+      TextKernel.tokens(TextKernel.normalize("Hello, World! foo bar"))))
+    assert(viaExtensions.getSeq[Long](tableNames.indexOf("minhash_sig")).length == 128)
   }
 
   test("minhash_est32 equals minhash_est on full-entropy signatures; low-32 truncation") {

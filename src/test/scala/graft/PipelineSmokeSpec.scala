@@ -50,10 +50,12 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(recall >= 0.90, s"recall=$recall missed=${missed.map(_.transform_type).mkString(",")}")
   }
 
+  lazy val pipelined: Pipeline.Result =
+    Pipeline.runPipelined(ConversationGen.corpus(spark, ConversationGen.smoke), DedupConfig.balanced)
+
   test("runPipelined (observe-based metrics, one action) matches eager run") {
     import spark.implicits._
-    val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    val p = Pipeline.runPipelined(turns, DedupConfig.balanced)
+    val p = pipelined
     val a = result.tiered.select($"pair_key", $"tier").as[(String, String)].collect().toSet
     val b = p.tiered.select($"pair_key", $"tier").as[(String, String)].collect().toSet
     assert(a == b)
@@ -62,6 +64,12 @@ class PipelineSmokeSpec extends SparkSpec {
     Seq("signatures", "candidates", "verified", "tiered").foreach { s =>
       assert(piped(s) == eager(s), s"stage $s: piped=${piped(s)} eager=${eager(s)}")
     }
+  }
+
+  test("one input hash: the observed hash without a checkpoint dir equals inputFingerprint") {
+    val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
+    assert(pipelined.inputHash == Pipeline.inputFingerprint(turns))
+    assert(result.inputHash == pipelined.inputHash)
   }
 
   test("candidate output cap is per-doc and bundle pairs rank first (F4)") {

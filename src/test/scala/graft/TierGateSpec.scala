@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, least, lit, when}
 import graft.model._
 import graft.operators.TierGate
 
@@ -23,6 +25,32 @@ class TierGateSpec extends SparkSpec {
     "jaccard", "jaccard_patch_topk", "n_verified_blocks", "simhash_dist",
     "bundle_dist", "max_span_len", "span_frac", "clip_z_analog", "pair_type",
     "source")
+
+  /** Reference for the fused endpoint-attr pass: the separate two-join
+    * z-score pass, then the separate two-join pair-type pass, over the same
+    * endpoint stats. */
+  private def withZScore(pairs: Dataset[VerifiedPair]): DataFrame = {
+    val stats = TierGate.endpointStats(pairs)
+    def z(side: String) = when(col(s"sigma_$side") > 1e-9,
+      (col("minhash_est") - col(s"mu_$side")) / col(s"sigma_$side")).otherwise(lit(10.0))
+    pairs.toDF()
+      .join(stats.select(col("ep").as("conv_a"), col("mu").as("mu_a"), col("sigma").as("sigma_a")),
+        Seq("conv_a"), "left")
+      .join(stats.select(col("ep").as("conv_b"), col("mu").as("mu_b"), col("sigma").as("sigma_b")),
+        Seq("conv_b"), "left")
+      .withColumn("clip_z_analog", least(z("a"), z("b")))
+      .drop("mu_a", "sigma_a", "mu_b", "sigma_b")
+  }
+
+  private def withPairType(pairs: DataFrame, profile: DataFrame): DataFrame = {
+    val ct = profile.select(col("conv_id"), col("content_type"))
+    pairs
+      .join(ct.select(col("conv_id").as("conv_a"), col("content_type").as("ct_a")), Seq("conv_a"), "left")
+      .join(ct.select(col("conv_id").as("conv_b"), col("content_type").as("ct_b")), Seq("conv_b"), "left")
+      .withColumn("pair_type", when(col("ct_a").isNull || col("ct_b").isNull, "default")
+        .when(col("ct_a") === col("ct_b"), col("ct_a")).otherwise("cross"))
+      .drop("ct_a", "ct_b")
+  }
 
   private def gate(rows: R*): Map[String, (String, String)] = {
     import spark.implicits._
@@ -96,8 +124,7 @@ class TierGateSpec extends SparkSpec {
     val fused = TierGate(pairs, cfg, Some(prof))
       .collect().map(t => t.pair_key ->
         (t.tier, t.tier_path, t.pair_type, t.clip_z_analog)).toMap
-    val separate = TierGate.gate(
-        TierGate.withPairType(TierGate.withZScore(pairs), Some(prof)), cfg)
+    val separate = TierGate.gate(withPairType(withZScore(pairs), prof), cfg)
       .collect().map(t => t.pair_key ->
         (t.tier, t.tier_path, t.pair_type, t.clip_z_analog)).toMap
     assert(fused == separate, s"fused=$fused separate=$separate")
@@ -110,7 +137,6 @@ class TierGateSpec extends SparkSpec {
 
   test("endpoint stats are order-free: two shufflings of verified tier hash-identically") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // three hubs with 60 edges each, scores that are not dyadic, so a
     // double sum's last bits depend on the order it is folded in
     val rnd = new scala.util.Random(7)
@@ -131,16 +157,19 @@ class TierGateSpec extends SparkSpec {
 
   test("withPairType routes same-class pairs and cross-class fallback") {
     import spark.implicits._
-    val pairs = Seq(
-      ("x|y", "x", "y", 0.5), ("x|z", "x", "z", 0.5), ("x|w", "x", "w", 0.5))
-      .toDF("pair_key", "conv_a", "conv_b", "minhash_est")
+    def vp(k: String, a: String, b: String) =
+      VerifiedPair(k, a, b, 0.5, 0.8, 0.7, 0.6, 1, 5, 10, false, 40, 0.1, 0, "lsh")
+    val pairs = Seq(vp("x|y", "x", "y"), vp("x|z", "x", "z"), vp("x|w", "x", "w")).toDS()
     val prof = Seq(("x", "tool_heavy"), ("y", "tool_heavy"), ("z", "dialog"))
       .toDF("conv_id", "content_type")
-    val typed = TierGate.withPairType(pairs, Some(prof))
+    val reference = withPairType(pairs.toDF(), prof)
       .collect().map(r => r.getAs[String]("pair_key") -> r.getAs[String]("pair_type")).toMap
-    assert(typed("x|y") == "tool_heavy") // both endpoints same class
-    assert(typed("x|z") == "cross")      // endpoints disagree
-    assert(typed("x|w") == "default")    // missing profile row
+    val fused = TierGate(pairs, cfg, Some(prof)).collect().map(t => t.pair_key -> t.pair_type).toMap
+    for (typed <- Seq(reference, fused)) {
+      assert(typed("x|y") == "tool_heavy") // both endpoints same class
+      assert(typed("x|z") == "cross")      // endpoints disagree
+      assert(typed("x|w") == "default")    // missing profile row
+    }
   }
 
   test("pairScore weighs EVERY signal: isolated deltas in est, jaccard, and distance each order the score") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{ConvDoc, DedupConfig}
-import graft.operators.{LshJoin, Pipeline, Signatures, Verification}
+import graft.operators.{Adaptive, LshJoin, Pipeline, Signatures, Verification}
 import graft.sources.ConversationGen
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -139,14 +139,48 @@ class VerificationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(cap > 13312L && cap < 14000L, s"cap=$cap")
     withThreshold("64m") {
       val fit = (64L << 20) / cap
-      assert(Verification.payloadBroadcasts(spark, fit, cfg))
-      assert(!Verification.payloadBroadcasts(spark, fit + 1, cfg))
-      assert(!Verification.payloadBroadcasts(spark, 21280L, cfg), "sf0.1 must shuffle")
+      assert(Adaptive.fits(spark, fit, cap))
+      assert(!Adaptive.fits(spark, fit + 1, cap))
+      assert(!Adaptive.fits(spark, 21280L, cap), "sf0.1 must shuffle")
     }
     withThreshold("-1") {
-      assert(!Verification.payloadBroadcasts(spark,
-        throw new AssertionError("a disabled threshold must not count the docs"), cfg))
+      assert(!Adaptive.fits(spark,
+        throw new AssertionError("a disabled threshold must not count the docs"), cap))
     }
+  }
+
+  test("heads gate: 2 ids per triggered pair × per-id cap against the broadcast threshold") {
+    val cap = Verification.headIdCapBytes
+    withThreshold("64m") {
+      val fitPairs = (64L << 20) / cap / 2
+      assert(Adaptive.fits(spark, 2 * fitPairs, cap))
+      assert(!Adaptive.fits(spark, 2 * (fitPairs + 1), cap))
+      // the measured 160 MB relation of the former 500k-pair limit no longer fits
+      assert(!Adaptive.fits(spark, 2 * 500000L, cap))
+      // both benchmark workloads' triggered slices (391 and 341 pairs) do
+      assert(Adaptive.fits(spark, 2 * 391L, cap))
+    }
+  }
+
+  test("heads dispatch: pruned and unpruned heads joins give identical verified rows") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    val sigs = Signatures.compute(graft.operators.Reassembly.assemble(
+      ConversationGen.corpus(spark, ConversationGen.smoke)), cfg).localCheckpoint(true)
+    val cands = LshJoin.candidates(sigs, cfg).localCheckpoint(true)
+    // the payload pinned to its shuffle branch, so only the heads gate moves
+    def run() = {
+      val v = Verification.verify(cands, sigs, cfg, nDocs = Some(Long.MaxValue))
+      val rows = v.collect().sortBy(_.pair_key).toSeq
+      val semis = collect(v.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+      }
+      (rows, semis.size)
+    }
+    val (unpruned, unprunedSemis) = withThreshold("-1")(run())
+    val (pruned, prunedSemis) = withThreshold("64m")(run())
+    assert(unpruned.exists(_.max_span_len > 0), "fixture must trigger the span pass")
+    assert(unprunedSemis == 0 && prunedSemis == 1, s"semi joins: $unprunedSemis / $prunedSemis")
+    assert(pruned == unpruned, "verified rows differ between the heads branches")
   }
 
   test("payload dispatch: both branches give identical verified, tiered and clusters") {
