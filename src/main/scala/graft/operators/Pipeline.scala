@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -74,25 +74,21 @@ object Pipeline {
     * it never arrives (or fails) the rows are still recorded, as
     * `lsh_buckets_*:missing` with counts of -1 — a funnel that could not be
     * read is never silently dropped. On a checkpoint-resume hit the
-    * observed plan never executed and the future never completes
-    * (getOrEmpty is private[sql]), so the rows are left out; the stage's
+    * observed plan never executed, so the rows are left out; the stage's
     * `:cached` row says why. */
   private[graft] def bucketMetrics(o: org.apache.spark.sql.Observation,
       fresh: Boolean, runId: String, ts: String,
       wait: scala.concurrent.duration.Duration =
         scala.concurrent.duration.Duration(5, "s")): Seq[StageMetric] = {
-    val rowOpt =
-      if (fresh) scala.util.Try(scala.concurrent.Await.result(o.future, wait)).toOption
-      else o.future.value.flatMap(_.toOption)
+    if (!fresh) return Nil
     def rows(suffix: String, v: String => Long) = Seq(
       StageMetric(runId, "lsh_buckets_paired" + suffix,
         v("total_buckets"), v("paired_buckets"), -1L, ts),
       StageMetric(runId, "lsh_buckets_salted" + suffix,
         v("total_buckets"), v("salted_buckets"), -1L, ts))
-    rowOpt match {
+    scala.util.Try(scala.concurrent.Await.result(o.future, wait)).toOption match {
       case Some(row) if row.schema != null => rows("", k => row.getAs[Long](k))
-      case _ if fresh => rows(":missing", _ => -1L)
-      case _ => Nil
+      case _ => rows(":missing", _ => -1L)
     }
   }
 
@@ -140,53 +136,32 @@ object Pipeline {
   private[graft] def namespaceFor(cfg: DedupConfig, groupsKey: String = ""): String =
     s"${cfg.cacheVersion}-${configFingerprint(cfg)}$groupsKey"
 
-  /** `ns` = {namespaceFor(...)}/{inputHash}. */
-  private def stageTable(ns: String, stage: String) = s"$ns/$stage"
-
-  /** Run (or resume) one stage: load checkpoint if present, else compute and
-    * persist. Returns the stage Dataset plus whether it was a cache hit.
-    * On a fresh compute, PER-PARTITION lineage (file → row count) is written
-    * next to the stage table (north_rule per-partition/per-snapshot lineage;
-    * with an Iceberg provider these become per-snapshot manifest analogs). */
-  private def stage[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, io: Option[graft.sources.TableProvider], ns: String,
-      hash: String, name: String)(compute: => Dataset[T]): (Dataset[T], Boolean) = {
-    io match {
-      case Some(p) =>
-        val tbl = stageTable(ns, name)
-        if (p.exists(spark, tbl)) {
-          (p.read(spark, tbl).as[T], true)
-        } else {
-          p.write(compute.toDF(), tbl)
-          val back = p.read(spark, tbl)
-          val lineage = back
-            .groupBy(input_file_name().as("partition_file"))
-            .agg(count(lit(1)).as("rows"))
-            .withColumn("stage", lit(name))
-            .withColumn("input_hash", lit(hash))
-          p.write(lineage, stageTable(ns, s"lineage_$name"))
-          (p.read(spark, tbl).as[T], false)
-        }
-      case None => (compute.persist(), false) // share work across downstream actions
-    }
-  }
-
   /**
-   * Pipelined variant for throughput paths (Bench/ScalingBench): ONE
-   * materializing action per stage instead of a per-stage count barrier —
-   * funnel metrics ride the same action via Dataset.observe (zero extra
-   * jobs). Amdahl motivation: at local[2]→local[8] the per-stage driver
-   * barriers were ~40% of wall time, capping scaling efficiency at ~0.47.
+   * The one run path: signatures → candidates → verified → tiered →
+   * clusters, ONE materializing action per stage and no per-stage count
+   * barrier — funnel counts ride each stage's action via Dataset.observe
+   * (zero extra jobs). Amdahl motivation: at local[2]→local[8] per-stage
+   * driver barriers were ~40% of wall time, capping scaling efficiency at
+   * ~0.47.
    *
-   * `checkpointDir` enables checkpoint/resume on THIS path too (round-2 gap:
-   * resume existed only in the eager mode): stage tables are written through
-   * the TableProvider ASYNCHRONOUSLY (the write overlaps the next stage's
-   * compute — durability without serial wall), keyed by the same
-   * (cacheVersion, inputHash) namespace as the eager mode, so the two modes
-   * resume each other's checkpoints. A killed run restarts from the last
-   * completed stage. Resume-mode pays one up-front fingerprint scan in place
-   * of the observation-carried hash (the skip has to be decided BEFORE the
-   * first action).
+   * A stage boundary cuts the logical plan, because the pipeline is
+   * self-join-heavy (bucket x/y, payload _a/_b, z-score edge union, CC
+   * symmetric union) and every self-reference makes Catalyst's
+   * relation-dedup walk the upstream tree again — measured ~8-9 s of pure
+   * driver-side planning PER ACTION on the un-truncated DAG vs 1.1 s after
+   * truncation. How it is cut depends on the store:
+   *   - no `checkpointDir`: an eager localCheckpoint;
+   *   - fresh stored stage: the observed compute is WRITTEN to the stage
+   *     table, read back once, and that one read feeds both the stage's
+   *     per-partition lineage table and the next stage — a stored stage IS
+   *     its table, with no block-manager copy beside it;
+   *   - stage table AND lineage committed: the table is read; its count is
+   *     the sum of its lineage rows. A kill between the two writes leaves
+   *     no lineage, so that stage recomputes.
+   * With a store, clusters is a stage too. The input hash keying the store
+   * is `hashOverride` (a provider's snapshot id) when given, else one
+   * up-front content scan — the skip has to be decided BEFORE the first
+   * action. Without a store the hash rides the signature stage's action.
    *
    * `groups` + cfg.groupGap wire the F2 same/adjacent-group suppression
    * between candidates and verification (reference default OFF).
@@ -204,154 +179,128 @@ object Pipeline {
                    cfg: DedupConfig = DedupConfig.balanced,
                    runId: String = "run",
                    groups: Option[DataFrame] = None,
-                   checkpointDir: Option[String] = None): Result = {
+                   checkpointDir: Option[String] = None,
+                   hashOverride: Option[String] = None): Result = {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.Observation
-
-    if (turns.storageLevel == org.apache.spark.storage.StorageLevel.NONE) turns.persist()
-
-    def cnt = count(lit(1)).as("n")
-    val oSig = Observation(); val oCand = Observation()
-    val oVer = Observation(); val oTier = Observation()
-    val oBuckets = Observation(); val oIn = Observation()
-
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
 
-    val io = checkpointIO(checkpointDir)
-    val pre: Option[(String, Long)] = io.map(_ => fingerprintAndCount(turns))
-    // config-aware checkpoint namespace (see stageTable scaladoc)
-    val nsOpt: Option[String] = pre.map { case (h, _) =>
-      s"${namespaceFor(cfg, groupsFingerprint(groups, cfg))}/$h"
-    }
+    if (turns.storageLevel == org.apache.spark.storage.StorageLevel.NONE) turns.persist()
 
-    // T2 routing profile depends only on the (persisted) input — materialize
-    // it CONCURRENTLY with the signature/candidate stages instead of as a
-    // serial step inside the tiered stage (the profile's full-corpus groupBy
-    // was measured thread-independent serial wall; overlapped, it rides the
-    // scheduling gaps of the earlier stages). Concurrent actions on one
-    // SparkSession are safe; the block manager serializes cache fills.
-    // Skipped entirely when the tiered checkpoint already exists (a full
-    // resume must not run — and silently discard — a full-corpus groupBy);
-    // when it does run, its result is Awaited so failures propagate.
-    val tieredCached = (io, nsOpt) match {
-      case (Some(p), Some(ns)) => p.exists(spark, stageTable(ns, "tiered"))
-      case _ => false
-    }
+    val io = checkpointIO(checkpointDir)
+    val pre: Option[(String, Long)] = io.map(_ =>
+      hashOverride.fold(fingerprintAndCount(turns))(h => (h, turns.count())))
+    val ns = pre.fold("")(p => s"${namespaceFor(cfg, groupsFingerprint(groups, cfg))}/${p._1}")
+
+    // T2 routing profile depends only on the (persisted) input. Without a
+    // store it is materialized CONCURRENTLY with the signature/candidate
+    // stages (its full-corpus groupBy rides their scheduling gaps; it is
+    // Awaited, so failures propagate). With a store it is computed inside
+    // the tiered stage, so a resumed tiered stage never runs it.
     val profF: Option[Future[DataFrame]] =
-      if (tieredCached) None
+      if (io.isDefined) None
       else Some(Future { IntraDup.convProfile(turns).localCheckpoint(true) })
 
-    // input fingerprint + count ride the pipeline's one materializing action
-    // via observe — no separate full-scan job before the pipeline starts
-    // (that pre-job was pure serial time in the Amdahl budget). In resume
-    // mode the hash was already computed up front and the signature stage
-    // may never scan the input, so the observation is skipped.
+    // without a store the input hash + count ride the signature stage's
+    // action via observe — no separate full-scan job before the pipeline
+    val oIn = Observation(); val oBuckets = Observation()
     val turnsObs =
       if (pre.isDefined) turns
       else turns.observe(oIn, xorOf(rowHash), count(lit(1)).as("n"))
-    // Stage boundaries are EAGER localCheckpoints, not bare persists: the
-    // pipeline is self-join-heavy (bucket x/y, payload _a/_b, z-score edge
-    // union, CC symmetric union), and every self-reference makes Catalyst's
-    // relation-dedup walk the upstream tree again — measured ~8-9 s of pure
-    // driver-side planning PER ACTION on the un-truncated DAG vs 1.1 s
-    // after truncation. Checkpointing cuts the logical plan to a LogicalRDD
-    // at each stage, so every downstream action (CC's internal jobs, the
-    // flag_dedup_* battery queries, Verify writes) plans a small tree.
-    // Funnel observations still ride the checkpoint materialization (the
-    // checkpoint action surfaces CollectMetrics — relied on by CC's
-    // convergence check too). The barrier per stage is one scheduled job of
-    // work that is needed exactly once — nothing recomputes.
     val t0 = System.nanoTime()
     var tMark = t0
     def lap(): Long = {
       val now = System.nanoTime(); val ms = (now - tMark) / 1000000L; tMark = now; ms
     }
-    val pendingWrites = scala.collection.mutable.ArrayBuffer[Future[Unit]]()
+    val obs = scala.collection.mutable.Map[String, Observation]()
     val hits = scala.collection.mutable.Set[String]()
-    /** Load the stage checkpoint if present, else compute + async-persist. */
-    def stageCk[T: org.apache.spark.sql.Encoder](name: String, o: Observation)(
-        compute: => Dataset[T]): Dataset[T] = io match {
-      case Some(p) =>
-        val tbl = stageTable(nsOpt.get, name)
-        if (p.exists(spark, tbl)) {
-          hits += name
-          p.read(spark, tbl).as[T].observe(o, cnt).localCheckpoint(true)
-        } else {
-          val ck = compute.observe(o, cnt).localCheckpoint(true)
-          pendingWrites += Future {
-            p.write(ck.toDF(), tbl)
-            val lineage = p.read(spark, tbl)
-              .groupBy(input_file_name().as("partition_file"))
+    def stageCk[T: org.apache.spark.sql.Encoder](name: String)(
+        compute: => Dataset[T]): Dataset[T] = {
+      val o = obs.getOrElseUpdate(name, Observation())
+      io match {
+        case None => compute.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
+        case Some(p) =>
+          val tbl = s"$ns/$name"; val lin = s"$ns/lineage_$name"
+          if (p.exists(spark, tbl) && p.exists(spark, lin)) {
+            hits += name
+            p.read(spark, tbl).as[T]
+          } else {
+            p.write(compute.observe(o, count(lit(1)).as("n")).toDF(), tbl)
+            val back = p.read(spark, tbl)
+            p.write(back.groupBy(input_file_name().as("partition_file"))
               .agg(count(lit(1)).as("rows"))
               .withColumn("stage", lit(name))
-              .withColumn("input_hash", lit(pre.get._1))
-            p.write(lineage, stageTable(nsOpt.get, s"lineage_$name"))
+              .withColumn("input_hash", lit(pre.get._1)), lin)
+            back.as[T]
           }
-          ck
-        }
-      case None => compute.observe(o, cnt).localCheckpoint(true)
+      }
     }
-    val sigs = stageCk("sigs", oSig) {
+    /** Observed on a fresh stage; the sum of its lineage rows on a hit. */
+    def rows(name: String): Long =
+      if (hits(name)) io.get.read(spark, s"$ns/lineage_$name")
+        .agg(sum("rows")).head().getLong(0)
+      else obs(name).get("n").asInstanceOf[Long]
+
+    val sigs = stageCk("sigs") {
       Signatures.compute(Reassembly.assemble(turnsObs, cfg.maskToolPayloads), cfg)
     }
+    val nSig = rows("sigs")
     val msSig = lap()
-    val cands = stageCk("candidates", oCand) {
+    val cands = stageCk("candidates") {
       val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets))
       (groups, cfg.groupGap) match {
         case (Some(g), Some(gap)) => LshJoin.suppressGroups(raw, g, gap)
         case _ => raw
       }
     }
+    val nCand = rows("candidates")
     val msCand = lap()
-    val verified = stageCk("verified", oVer) {
-      Verification.verify(cands, sigs, cfg,
-        nDocs = Some(oSig.get("n").asInstanceOf[Long]))
+    val verified = stageCk("verified") {
+      Verification.verify(cands, sigs, cfg, nDocs = Some(nSig))
     }
+    val nVer = rows("verified")
     val msVer = lap()
-    // T2 routing: content-type profile keys the per-class tier thresholds.
-    // The verified count is already observed (the stage's checkpoint action
-    // completed above), so it rides along as the size hint that lets
-    // TierGate broadcast the endpoint attrs for small pair tables.
-    val tiered = stageCk("tiered", oTier) {
-      TierGate(verified, cfg, profF.map(f => Await.result(f, Duration.Inf)),
-        pairCountHint = Some(oVer.get("n").asInstanceOf[Long]))
+    // T2 routing: content-type profile keys the per-class tier thresholds;
+    // the verified count is the size hint that lets TierGate broadcast the
+    // endpoint attrs for small pair tables
+    val tiered = stageCk("tiered") {
+      TierGate(verified, cfg,
+        Some(profF.fold(IntraDup.convProfile(turns))(Await.result(_, Duration.Inf))),
+        pairCountHint = Some(nVer))
     }
+    val nTier = rows("tiered")
     val msTier = lap()
-    val dupEdges = tiered.filter($"tier" === "A" || $"tier" === "B")
-      .select($"conv_a", $"conv_b")
-    // the tiered observation already bounds the edge count — lets CC skip
-    // its dedup/checkpoint/count pre-pass when the driver-local path applies
-    val nTiered = oTier.get("n").asInstanceOf[Long]
-    val clusters = ConnectedComponents.cluster(dupEdges.toDF(), cfg.ccMaxIters,
-      edgeCountHint = Some(nTiered))
-    clusters.count()
+    // the tiered count bounds the edge count — lets CC skip its
+    // dedup/checkpoint/count pre-pass when the driver-local path applies
+    def cc = ConnectedComponents.cluster(
+      tiered.filter($"tier" === "A" || $"tier" === "B").select($"conv_a", $"conv_b").toDF(),
+      cfg.ccMaxIters, edgeCountHint = Some(nTier))
+    val clusters = if (io.isDefined) stageCk("clusters")(cc) else { val c = cc; c.count(); c }
     val msCc = lap()
     val totalMs = (System.nanoTime() - t0) / 1000000L
     val ts = java.time.Instant.now.toString
-    def n(o: Observation) = o.get("n").asInstanceOf[Long]
-    val hash = pre.map(_._1).getOrElse(inputKey(oIn.get("s").asInstanceOf[Long], n(oIn)))
-    val nTurns = pre.map(_._2).getOrElse(n(oIn))
+    val hash = pre.map(_._1).orElse(hashOverride)
+      .getOrElse(inputKey(oIn.get("s").asInstanceOf[Long], oIn.get("n").asInstanceOf[Long]))
+    val nTurns = pre.fold(oIn.get("n").asInstanceOf[Long])(_._2)
     def tag(stage: String, metric: String) =
       if (hits(stage)) metric + ":cached" else metric
     val counts = Seq(
-      (tag("sigs", "signatures"), nTurns, n(oSig), msSig),
-      (tag("candidates", "candidates"), n(oSig), n(oCand), msCand),
-      (tag("verified", "verified"), n(oCand), n(oVer), msVer),
-      (tag("tiered", "tiered"), n(oVer), n(oTier), msTier),
-      ("clusters", n(oTier), -1L, msCc))
+      (tag("sigs", "signatures"), nTurns, nSig, msSig),
+      (tag("candidates", "candidates"), nSig, nCand, msCand),
+      (tag("verified", "verified"), nCand, nVer, msVer),
+      (tag("tiered", "tiered"), nVer, nTier, msTier),
+      (tag("clusters", "clusters"), nTier, -1L, msCc))
     val metrics = counts.map { case (s, in, out, ms) =>
       StageMetric(runId, s, in, out, ms, ts)
     } ++ bucketMetrics(oBuckets, fresh = !hits("candidates"), runId, ts) :+
-      StageMetric(runId, "pipeline_total", nTurns, n(oTier), totalMs, ts)
-    // durability barrier: all async stage writes (+ run lineage) land before
-    // the pipeline returns — a crash AFTER this point loses nothing
-    pendingWrites.foreach(Await.result(_, Duration.Inf))
+      StageMetric(runId, "pipeline_total", nTurns, nTier, totalMs, ts)
+    // run lineage next to the stage tables (S5/A4, north_rule per-snapshot
+    // lineage) — same provider, same namespace
     io.foreach { p =>
-      p.write(spark.createDataset(metrics).coalesce(1).toDF(),
-        stageTable(nsOpt.get, s"run_metrics_$runId"))
+      p.write(spark.createDataset(metrics).coalesce(1).toDF(), s"$ns/run_metrics_$runId")
     }
     Result(hash, sigs, cands, verified, tiered, clusters, metrics)
   }
@@ -362,94 +311,16 @@ object Pipeline {
    * the sandbox) and prefer the provider's O(1) snapshot fingerprint for
    * checkpoint keying — an Iceberg commit changes the snapshot id, so
    * resume invalidation needs NO content scan (reference analog: the
-   * (path, mtime, size) MD5, similarity_engine.py:40-62).
+   * (path, mtime, size) MD5, similarity_engine.py:40-62). A provider
+   * without one (parquet dirs) keys by content hash, so this resumes the
+   * stage tables of a `runPipelined` over the same rows.
    */
   def runOnTable(spark: SparkSession, io: graft.sources.TableProvider,
                  table: String, cfg: DedupConfig = DedupConfig.balanced,
                  checkpointDir: Option[String] = None,
                  runId: String = "run"): Result = {
     import spark.implicits._
-    val turns = io.read(spark, table).as[Turn]
-    run(turns, cfg, checkpointDir, runId,
-      hashOverride = io.snapshotFingerprint(spark, table))
-  }
-
-  def run(turns: Dataset[Turn], cfg: DedupConfig = DedupConfig.balanced,
-          checkpointDir: Option[String] = None,
-          runId: String = "run",
-          hashOverride: Option[String] = None,
-          groups: Option[DataFrame] = None): Result = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val io = checkpointIO(checkpointDir)
-    val metrics = scala.collection.mutable.ArrayBuffer[StageMetric]()
-
-    // Count AFTER stage() so the action materializes the persisted/
-    // checkpointed Dataset exactly once (counting the un-persisted plan
-    // first would compute every stage twice).
-    def timedCount[T](stageName: String, inputCount: Long, ds: Dataset[T],
-                      cached: Boolean): Long = {
-      val t0 = System.nanoTime()
-      val n = ds.count() // materialize + funnel count (A4 analog)
-      metrics += StageMetric(runId, stageName + (if (cached) ":cached" else ""),
-        inputCount, n, (System.nanoTime() - t0) / 1000000L,
-        java.time.Instant.now.toString)
-      n
-    }
-
-    // input is consumed by fingerprint, count, and reassembly — cache it
-    // (no-op if the caller already persisted the same plan)
-    if (turns.storageLevel == org.apache.spark.storage.StorageLevel.NONE) turns.persist()
-    val (hash, nTurns) = hashOverride match {
-      case Some(h) => (h, turns.count()) // snapshot-id keying: no hash scan
-      case None => fingerprintAndCount(turns)
-    }
-    val ns = s"${namespaceFor(cfg, groupsFingerprint(groups, cfg))}/$hash"
-
-    val (sigs, sigsHit) = stage(spark, io, ns, hash, "sigs") {
-      Signatures.compute(Reassembly.assemble(turns, cfg.maskToolPayloads), cfg)
-    }
-    val nDocs = timedCount("signatures", nTurns, sigs, sigsHit)
-
-    val oBuckets = org.apache.spark.sql.Observation()
-    val (cands, candsHit) = stage(spark, io, ns, hash, "candidates") {
-      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets))
-      (groups, cfg.groupGap) match {
-        case (Some(g), Some(gap)) => LshJoin.suppressGroups(raw, g, gap)
-        case _ => raw
-      }
-    }
-    val nCands = timedCount("candidates", nDocs, cands, candsHit)
-    metrics ++= bucketMetrics(oBuckets, fresh = !candsHit, runId,
-      java.time.Instant.now.toString)
-
-    val (verified, verHit) = stage(spark, io, ns, hash, "verified") {
-      Verification.verify(cands, sigs, cfg, nDocs = Some(nDocs))
-    }
-    val nVer = timedCount("verified", nCands, verified, verHit)
-
-    val (tiered, tierHit) = stage(spark, io, ns, hash, "tiered") {
-      TierGate(verified, cfg, Some(IntraDup.convProfile(turns)),
-        pairCountHint = Some(nVer))
-    }
-    timedCount("tiered", nVer, tiered, tierHit)
-
-    val dupEdges = tiered.filter($"tier" === "A" || $"tier" === "B")
-      .select($"conv_a", $"conv_b")
-    val nEdges = dupEdges.count()
-    val (clusters, ccHit) = stage(spark, io, ns, hash, "clusters") {
-      ConnectedComponents.cluster(dupEdges.toDF(), cfg.ccMaxIters,
-        edgeCountHint = Some(nEdges))
-    }
-    timedCount("clusters", nEdges, clusters, ccHit)
-
-    io.foreach { p =>
-      // run lineage next to the stage checkpoints (S5/A4, north_rule
-      // per-snapshot lineage) — same provider, same namespace
-      p.write(spark.createDataset(metrics.toSeq).coalesce(1).toDF(),
-        stageTable(ns, s"run_metrics_$runId"))
-    }
-
-    Result(hash, sigs, cands, verified, tiered, clusters, metrics.toSeq)
+    runPipelined(io.read(spark, table).as[Turn], cfg, runId,
+      checkpointDir = checkpointDir, hashOverride = io.snapshotFingerprint(spark, table))
   }
 }

@@ -221,8 +221,13 @@ object SuffixSpans {
    * (posA, posB) in each document — the text analog of the reference's ECC
    * alignment estimate (X10, ai_...AUTO.py:1276-1307): for transcripts the
    * transform family is translation (truncation/insertion shifts), so the
-   * single offset delta posA−posB IS the alignment. Ties resolve to the
-   * smallest (posA, posB).
+   * single offset delta posA−posB IS the alignment. The span comes from a
+   * suffix-array-adjacent pair of suffixes, one from each document: of the
+   * adjacent pairs with the maximal common prefix, the smallest (posA,
+   * posB) wins. An occurrence whose two suffixes are not adjacent in the
+   * suffix array is never reported, so this is NOT the smallest (posA,
+   * posB) over all occurrences: ("cacb", "cd") gives (1, 2, 0), not
+   * (1, 0, 0), and ("abXab", "Yab") gives (2, 3, 1), not (2, 0, 1).
    */
   def lcsWithPositions(a: String, b: String): (Int, Int, Int) = {
     if (a == null || b == null || a.isEmpty || b.isEmpty) return (0, 0, 0)

@@ -160,16 +160,21 @@ object TierGate {
       .as[TieredPair]
   }
 
-  /** Below this many verified pairs the per-endpoint attrs table (≤ 2
-    * rows/pair × ~60 B ≈ 60 MB worst case) BROADCASTS into the pair joins
-    * instead of SHUFFLE_HASH — the same adaptive dispatch-by-input-size CC
-    * uses for its local path (broadcast the side that fits; Catalyst never
-    * broadcast-converts here on its own because the partial-agg exchange
-    * bytes overstate the stats size). Above the
-    * threshold — the 100-TB regime, where attrs is |docs|-proportional —
-    * the shuffle-hash plan below is unchanged. At the bench corpus this
-    * removes both pair-table exchanges from the tiered stage. */
-  val BroadcastMaxPairs: Long = 500000L
+  /** Upper bound on one endpoint-attrs row's bytes in the broadcast hash
+    * relation of the pair joins: the key row (8 B null bitset + 8 B offset
+    * word + the id, 64 B) and the value row (8 B bitset + 4 field words +
+    * the id + a content_type of ≤ 16 B), plus 16 B of record lengths and
+    * chain pointer and up to 48 B of slot array — sized like
+    * `Verification.headIdCapBytes`. A pair contributes ≤ 2 attrs rows, so
+    * the attrs BROADCAST into the pair joins instead of SHUFFLE_HASH when
+    * `Adaptive.fits(pairs, 2 × attrCapBytes)` — the one size gate every
+    * broadcast-or-shuffle dispatch uses (Catalyst never broadcast-converts
+    * here on its own because the partial-agg exchange bytes overstate the
+    * stats size). Above it — the 100-TB regime, where attrs is
+    * |docs|-proportional — the shuffle-hash plan below is unchanged. At
+    * the bench corpus this removes both pair-table exchanges from the
+    * tiered stage. */
+  private[graft] val attrCapBytes: Long = (8 + 8 + 64) + (8 + 4 * 8 + 64 + 16) + 16 + 48
 
   /**
    * Fused z-score + pair-type attachment: ONE per-endpoint attribute table
@@ -184,7 +189,7 @@ object TierGate {
    * SHUFFLE_HASH-hinted — the remaining wall was the stage's chain of
    * narrow 142-partition pair-table exchanges, and halving them is a
    * plan-level cut that holds at any scale (at 10¹² turns these are the
-   * dominant tiered-stage bytes). Above `BroadcastMaxPairs` the
+   * dominant tiered-stage bytes). Above the attrs size gate the
    * per-endpoint attrs (|docs|-proportional) join SHUFFLE_HASH: Catalyst
    * cannot see that the final aggregate is small, and a sort-merge join
    * would SORT the fat pair table twice (measured 15-23 s at local[32] on
@@ -217,8 +222,8 @@ object TierGate {
   def apply(pairs: Dataset[VerifiedPair], cfg: DedupConfig,
             profiles: Option[DataFrame] = None,
             pairCountHint: Option[Long] = None): Dataset[TieredPair] =
-    gate(attachAttrs(pairs, profiles,
-      small = pairCountHint.exists(_ <= BroadcastMaxPairs)), cfg)
+    gate(attachAttrs(pairs, profiles, small = pairCountHint.exists(n =>
+      Adaptive.fits(pairs.sparkSession, n, 2L * attrCapBytes))), cfg)
 
   /**
    * Optional scored-gate column (SURVEY.md §2.3 X18 — the reference's

@@ -16,7 +16,7 @@ class PipelineSmokeSpec extends SparkSpec {
 
   lazy val result: Pipeline.Result = {
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    Pipeline.run(turns, DedupConfig.balanced)
+    Pipeline.runPipelined(turns, DedupConfig.balanced)
   }
 
   test("corpus generation is deterministic and well-formed") {
@@ -50,26 +50,28 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(recall >= 0.90, s"recall=$recall missed=${missed.map(_.transform_type).mkString(",")}")
   }
 
-  lazy val pipelined: Pipeline.Result =
-    Pipeline.runPipelined(ConversationGen.corpus(spark, ConversationGen.smoke), DedupConfig.balanced)
+  /** The same run with every stage boundary a stored table. */
+  lazy val stored: Pipeline.Result = Pipeline.runPipelined(
+    ConversationGen.corpus(spark, ConversationGen.smoke), DedupConfig.balanced,
+    checkpointDir = Some(java.nio.file.Files.createTempDirectory("graft_smoke_ck_").toString))
 
-  test("runPipelined (observe-based metrics, one action) matches eager run") {
-    import spark.implicits._
-    val p = pipelined
-    val a = result.tiered.select($"pair_key", $"tier").as[(String, String)].collect().toSet
-    val b = p.tiered.select($"pair_key", $"tier").as[(String, String)].collect().toSet
-    assert(a == b)
-    val eager = result.metrics.map(m => m.stage -> m.output_count).toMap
-    val piped = p.metrics.map(m => m.stage -> m.output_count).toMap
-    Seq("signatures", "candidates", "verified", "tiered").foreach { s =>
-      assert(piped(s) == eager(s), s"stage $s: piped=${piped(s)} eager=${eager(s)}")
+  test("stored and localCheckpointed stages give identical rows and stage counts") {
+    def rows(r: Pipeline.Result) = Seq(r.sigs.toDF(), r.candidates.toDF(), r.verified.toDF(),
+      r.tiered.toDF(), r.clusters.toDF()).map(_.collect().map(_.toString).sorted.toSeq)
+    rows(result).zip(rows(stored)).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"stage $i: onlyCk=${a.diff(b).take(2)} onlyStore=${b.diff(a).take(2)}")
+    }
+    val ck = result.metrics.map(m => m.stage -> (m.input_count, m.output_count)).toMap
+    val st = stored.metrics.map(m => m.stage -> (m.input_count, m.output_count)).toMap
+    Seq("signatures", "candidates", "verified", "tiered", "clusters").foreach { s =>
+      assert(st(s) == ck(s), s"stage $s: store=${st(s)} localCheckpoint=${ck(s)}")
     }
   }
 
   test("one input hash: the observed hash without a checkpoint dir equals inputFingerprint") {
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    assert(pipelined.inputHash == Pipeline.inputFingerprint(turns))
-    assert(result.inputHash == pipelined.inputHash)
+    assert(result.inputHash == Pipeline.inputFingerprint(turns))
+    assert(stored.inputHash == result.inputHash)
   }
 
   test("candidate output cap is per-doc and bundle pairs rank first (F4)") {
@@ -166,7 +168,7 @@ class PipelineSmokeSpec extends SparkSpec {
   test("determinism: two runs produce identical tier assignments") {
     import spark.implicits._
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    val r2 = Pipeline.run(turns, DedupConfig.balanced)
+    val r2 = Pipeline.runPipelined(turns, DedupConfig.balanced)
     val t1 = result.tiered.select($"pair_key", $"tier").as[(String, String)]
       .collect().sorted.toSeq
     val t2 = r2.tiered.select($"pair_key", $"tier").as[(String, String)]

@@ -16,7 +16,7 @@ class RecallGateSpec extends SparkSpec {
 
   lazy val result: Pipeline.Result = {
     val turns = ConversationGen.corpus(spark, ConversationGen.recall)
-    Pipeline.run(turns, DedupConfig.balanced)
+    Pipeline.runPipelined(turns, DedupConfig.balanced)
   }
 
   lazy val detected: Set[(String, String)] = {

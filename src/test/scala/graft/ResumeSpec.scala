@@ -20,7 +20,8 @@ class ResumeSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir()
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    val r1 = Pipeline.run(turns, DedupConfig.balanced, Some(dir), runId = "r1")
+    val r1 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "r1",
+      checkpointDir = Some(dir))
     val t1 = r1.tiered.select($"pair_key", $"tier").as[(String, String)].collect().sorted.toSeq
 
     // simulate kill after the candidate stage: later stages' checkpoints removed
@@ -32,12 +33,13 @@ class ResumeSpec extends SparkSpec {
     rm("verified"); rm("tiered"); rm("clusters")
     assert(Files.exists(java.nio.file.Paths.get(s"$base/candidates/_SUCCESS")))
 
-    val r2 = Pipeline.run(turns, DedupConfig.balanced, Some(dir), runId = "r2")
+    val r2 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "r2",
+      checkpointDir = Some(dir))
     val t2 = r2.tiered.select($"pair_key", $"tier").as[(String, String)].collect().sorted.toSeq
     assert(t1 == t2, "resumed run must produce identical tier assignments")
 
-    // signature/candidate stages were NOT recomputed: 'candidates' metric
-    // absent from r2's stage metrics (cache hit skips the timed compute)
+    // signature/candidate stages were NOT recomputed: r2 reports them as
+    // cache hits, not as computed stages
     assert(!r2.metrics.exists(_.stage == "candidates"),
       s"expected candidates cache hit; metrics=${r2.metrics.map(_.stage)}")
 
@@ -78,23 +80,30 @@ class ResumeSpec extends SparkSpec {
       s"expected signatures cache hit; metrics=${r2.metrics.map(_.stage)}")
     assert(r2.metrics.exists(_.stage == "candidates:cached"))
     assert(r2.metrics.exists(_.stage == "verified"), "verified must recompute")
-    // per-partition lineage written for the async-checkpointed stages too
     val lin = spark.read.parquet(s"$base/lineage_sigs")
     import org.apache.spark.sql.functions._
     assert(lin.agg(sum($"rows")).head().getLong(0) == r1.sigs.count())
-    // eager and pipelined modes share one checkpoint namespace: an eager
-    // run over the same input resumes everything
-    val r3 = Pipeline.run(turns, DedupConfig.balanced, Some(dir), runId = "e1")
-    assert(r3.metrics.exists(_.stage == "tiered:cached"))
+    // the table entry keys a parquet copy of the same rows by the same
+    // content hash, so it resumes every stage of the runs above
+    val io = new graft.sources.ParquetDirProvider(tmpDir())
+    io.write(turns.toDF(), "turns")
+    val r3 = Pipeline.runOnTable(spark, io, "turns", DedupConfig.balanced,
+      checkpointDir = Some(dir), runId = "t1")
+    assert(r3.inputHash == r1.inputHash)
+    Seq("signatures", "candidates", "verified", "tiered", "clusters").foreach { s =>
+      assert(r3.metrics.exists(_.stage == s + ":cached"),
+        s"$s must resume; metrics=${r3.metrics.map(_.stage)}")
+    }
   }
 
   test("different cacheVersion or input invalidates the checkpoint") {
     val dir = tmpDir()
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val cfg = DedupConfig.balanced
-    Pipeline.run(turns, cfg, Some(dir), runId = "a")
+    Pipeline.runPipelined(turns, cfg, runId = "a", checkpointDir = Some(dir))
     // bump version → fresh namespace → recompute happens (metrics present)
-    val r2 = Pipeline.run(turns, cfg.copy(cacheVersion = "v2"), Some(dir), runId = "b")
+    val r2 = Pipeline.runPipelined(turns, cfg.copy(cacheVersion = "v2"), runId = "b",
+      checkpointDir = Some(dir))
     assert(r2.metrics.exists(_.stage == "candidates"))
     // different input → different hash namespace
     val other = ConversationGen.corpus(spark,
@@ -108,18 +117,18 @@ class ResumeSpec extends SparkSpec {
     val dir = tmpDir()
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val cfg = DedupConfig.balanced
-    Pipeline.run(turns, cfg, Some(dir), runId = "a")
+    Pipeline.runPipelined(turns, cfg, runId = "a", checkpointDir = Some(dir))
 
     // same config, same cacheVersion → full resume (every stage cached)
-    val rSame = Pipeline.run(turns, cfg, Some(dir), runId = "same")
+    val rSame = Pipeline.runPipelined(turns, cfg, runId = "same", checkpointDir = Some(dir))
     assert(rSame.metrics.exists(_.stage == "candidates:cached"),
       s"unchanged config must resume; metrics=${rSame.metrics.map(_.stage)}")
     assert(!rSame.metrics.exists(_.stage == "candidates"))
 
     // changed simThreshold, SAME cacheVersion → stage tables must recompute
     // (the round-3 booby trap: a resume silently serving stale candidates)
-    val rThresh = Pipeline.run(turns, cfg.copy(simThreshold = 0.40),
-      Some(dir), runId = "thresh")
+    val rThresh = Pipeline.runPipelined(turns, cfg.copy(simThreshold = 0.40),
+      runId = "thresh", checkpointDir = Some(dir))
     assert(rThresh.metrics.exists(_.stage == "candidates"),
       s"changed simThreshold must recompute; metrics=${rThresh.metrics.map(_.stage)}")
 
@@ -130,28 +139,29 @@ class ResumeSpec extends SparkSpec {
     val groupsA = convIds.withColumn("group_id",
       (org.apache.spark.sql.functions.xxhash64(col("conv_id")) % 7).cast("long"))
     val gapCfg = cfg.copy(groupGap = Some(0))
-    val g1 = Pipeline.run(turns, gapCfg, Some(dir), runId = "g1", groups = Some(groupsA))
+    def runG(c: DedupConfig, id: String, g: org.apache.spark.sql.DataFrame) =
+      Pipeline.runPipelined(turns, c, id, Some(g), checkpointDir = Some(dir))
+    val g1 = runG(gapCfg, "g1", groupsA)
     assert(g1.metrics.exists(_.stage == "candidates"), "first gap run computes")
-    val g2 = Pipeline.run(turns, gapCfg, Some(dir), runId = "g2", groups = Some(groupsA))
+    val g2 = runG(gapCfg, "g2", groupsA)
     assert(g2.metrics.exists(_.stage == "candidates:cached"),
       "same gap + same groups resumes")
-    val g3 = Pipeline.run(turns, cfg.copy(groupGap = Some(1)), Some(dir),
-      runId = "g3", groups = Some(groupsA))
+    val g3 = runG(cfg.copy(groupGap = Some(1)), "g3", groupsA)
     assert(g3.metrics.exists(_.stage == "candidates"), "changed gap recomputes")
     val groupsB = convIds.withColumn("group_id", lit(0L))
-    val g4 = Pipeline.run(turns, gapCfg, Some(dir), runId = "g4", groups = Some(groupsB))
+    val g4 = runG(gapCfg, "g4", groupsB)
     assert(g4.metrics.exists(_.stage == "candidates"), "changed groups table recomputes")
 
-    // pipelined mode shares the SAME config-aware namespace: a changed
-    // threshold must not resume the eager run's tables either
+    // the changed config keys its own namespace: rerun under it resumes
+    // its tables, a third threshold recomputes
     val p1 = Pipeline.runPipelined(turns, cfg.copy(simThreshold = 0.40),
       runId = "p1", checkpointDir = Some(dir))
     assert(p1.metrics.exists(_.stage == "candidates:cached"),
-      "pipelined mode resumes the eager run's tables for the SAME config")
+      "a rerun resumes the tables of the SAME changed config")
     val p2 = Pipeline.runPipelined(turns, cfg.copy(simThreshold = 0.55),
       runId = "p2", checkpointDir = Some(dir))
     assert(p2.metrics.exists(_.stage == "candidates"),
-      "pipelined mode recomputes under a changed config")
+      "a further changed config recomputes")
   }
 
   test("empty (but active) groups table keys deterministically, no NPE (ADVICE r04)") {
@@ -166,13 +176,39 @@ class ResumeSpec extends SparkSpec {
       StructType(Seq(StructField("conv_id", StringType),
         StructField("group_id", LongType))))
     val cfg = DedupConfig.balanced.copy(groupGap = Some(0))
-    val r1 = Pipeline.run(turns, cfg, Some(dir), runId = "eg1",
-      groups = Some(emptyGroups))
+    val r1 = Pipeline.runPipelined(turns, cfg, "eg1", Some(emptyGroups),
+      checkpointDir = Some(dir))
     assert(r1.metrics.exists(_.stage == "candidates"), "first run computes")
     // same empty table → same fingerprint → resume, not recompute
-    val r2 = Pipeline.run(turns, cfg, Some(dir), runId = "eg2",
-      groups = Some(emptyGroups))
+    val r2 = Pipeline.runPipelined(turns, cfg, "eg2", Some(emptyGroups),
+      checkpointDir = Some(dir))
     assert(r2.metrics.exists(_.stage == "candidates:cached"),
       s"empty groups must key deterministically; metrics=${r2.metrics.map(_.stage)}")
+  }
+
+  test("a stage whose lineage never landed recomputes instead of resuming") {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir()
+    val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
+    val r1 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "l1",
+      checkpointDir = Some(dir))
+    // r1's stages read the stage tables, which the rerun overwrites
+    val nCands = r1.candidates.count()
+    // a kill between the candidates table's commit and its lineage write
+    val base = s"$dir/${Pipeline.namespaceFor(DedupConfig.balanced)}/${r1.inputHash}"
+    new scala.reflect.io.Directory(new java.io.File(s"$base/lineage_candidates"))
+      .deleteRecursively()
+    assert(Files.exists(java.nio.file.Paths.get(s"$base/candidates/_SUCCESS")))
+
+    val r2 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "l2",
+      checkpointDir = Some(dir))
+    val stages = r2.metrics.map(_.stage)
+    assert(stages.contains("candidates") && !stages.contains("candidates:cached"),
+      s"candidates must recompute; metrics=$stages")
+    assert(stages.contains("signatures:cached"), s"sigs must resume; metrics=$stages")
+    val lin = spark.read.parquet(s"$base/lineage_candidates")
+      .agg(sum(col("rows"))).head().getLong(0)
+    val rows = spark.read.parquet(s"$base/candidates").count()
+    assert(lin == rows && rows == nCands, s"lineage=$lin table=$rows first run=$nCands")
   }
 }

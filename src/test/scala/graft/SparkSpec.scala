@@ -22,4 +22,18 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` with the session's broadcast threshold set to `value`:
+    * "-1" forces every size-gated dispatch to its shuffle branch, a large
+    * value to its broadcast branch. */
+  protected def withThreshold[T](value: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -68,6 +68,12 @@ class SuffixSpansSpec extends SparkSpec {
     assert(a.substring(pa, pa + len) == b.substring(pb, pb + len))
     assert(pa == 10 && pb == 3)
     assert(pa - pb == 7) // the alignment delta (translation estimate)
+    // ties: the smallest suffix-array-ADJACENT maximal pair, not the
+    // smallest occurrence. "c" is at a(0) and a(2), but only "cb" sorts
+    // next to b's "cd"; b's "ab" (then the -2 sentinel) sorts next to a's
+    // final "ab" (then the -1 sentinel), not to "abXab"
+    assert(SuffixSpans.lcsWithPositions("cacb", "cd") == (1, 2, 0))
+    assert(SuffixSpans.lcsWithPositions("abXab", "Yab") == (2, 3, 1))
   }
 
   test("packed suffix array matches suffixes order on a long mixed input") {

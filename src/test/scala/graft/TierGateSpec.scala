@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions.{col, least, lit, when}
 import graft.model._
-import graft.operators.TierGate
+import graft.operators.{Adaptive, TierGate}
 
 /**
  * Tier gate truth-table unit tests for the secondary gates:
@@ -14,7 +16,7 @@ import graft.operators.TierGate
  *    identical evidence gates differently under different routed classes,
  *    with the exact-fingerprint path immune (exact-match override).
  */
-class TierGateSpec extends SparkSpec {
+class TierGateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val cfg = DedupConfig.balanced
   // (pair_key, a, b, est, jac, patch_topk, n_verified_blocks, simhash_dist,
@@ -191,5 +193,42 @@ class TierGateSpec extends SparkSpec {
     assert(s("hi_est") > s("base"), s"est signal dead or inverted: $s")
     assert(s("hi_jac") > s("base"), s"jaccard signal dead or inverted: $s")
     assert(s("close_dist") > s("base"), s"distance signal dead or inverted: $s")
+  }
+
+  test("attrs gate: both branches give identical rows; shuffle-hash at -1, broadcast at 1g") {
+    import spark.implicits._
+    // 24 endpoints over 3 content types, 3-4 pairs each, varied scores
+    val pairs = (0 until 60).map { i =>
+      val (a, b) = (i % 24, (i * 7 + 5) % 24)
+      val (x, y) = (f"c$a%02d", f"c$b%02d")
+      val (lo, hi) = if (x < y) (x, y) else (y, x)
+      VerifiedPair(s"$lo|$hi", lo, hi, 0.5 + (i % 9) * 0.05, 0.6 + (i % 5) * 0.08,
+        0.7, 0.6, i % 3, i % 12, 10, false, 20 + i, 0.1, 0, "lsh")
+    }.filter(p => p.conv_a != p.conv_b).groupBy(_.pair_key).values.map(_.head).toSeq.toDS()
+    val prof = (0 until 24).map(i => (f"c$i%02d", Seq("tool_heavy", "dialog", "longform")(i % 3)))
+      .toDF("conv_id", "content_type")
+    val n = pairs.count()
+    def run() = {
+      val t = TierGate(pairs, cfg, Some(prof), pairCountHint = Some(n))
+      val rows = t.collect().sortBy(_.pair_key).toSeq
+      val joins = collect(t.queryExecution.executedPlan) {
+        case _: BroadcastHashJoinExec => "bhj"
+        case _: ShuffledHashJoinExec => "shj"
+      }
+      (rows, joins)
+    }
+    val (shuffled, shuffledJoins) = withThreshold("-1")(run())
+    val (broadcast, broadcastJoins) = withThreshold("1g")(run())
+    assert(shuffled.map(_.tier).distinct.size > 1, "fixture must reach more than one tier")
+    assert(shuffled == broadcast,
+      shuffled.zip(broadcast).filter { case (x, y) => x != y }.take(3).mkString("\n"))
+    assert(shuffledJoins.count(_ == "shj") >= 2 && !shuffledJoins.contains("bhj"), shuffledJoins)
+    assert(broadcastJoins.count(_ == "bhj") >= 2 && !broadcastJoins.contains("shj"), broadcastJoins)
+    // the factor 2 sits in the cap: a forced-shuffle hint of Long.MaxValue
+    // pairs cannot overflow into "fits"
+    withThreshold("1g") {
+      assert(!Adaptive.fits(spark, Long.MaxValue, 2L * TierGate.attrCapBytes))
+      assert(Adaptive.fits(spark, (1L << 30) / (2L * TierGate.attrCapBytes), 2L * TierGate.attrCapBytes))
+    }
   }
 }

@@ -120,19 +120,6 @@ class VerificationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** Runs `body` with the session's broadcast threshold set to `value`. */
-  private def withThreshold[T](value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(BroadcastThreshold)
-    spark.conf.set(BroadcastThreshold, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(BroadcastThreshold, v)
-      case None => spark.conf.unset(BroadcastThreshold)
-    }
-  }
-
   test("payload gate: docs × per-doc payload cap against the broadcast threshold") {
     val cap = Verification.payloadCapBytes(cfg)
     // 4 B × (1024 + 9 × 256) sketch words plus headers, bundle and id
