@@ -29,6 +29,9 @@ object Pipeline {
   case class StageMetric(run_id: String, stage: String, input_count: Long,
                          output_count: Long, duration_ms: Long, ts: String)
 
+  /** With a store, the Datasets read the stage tables lazily: they are
+    * valid until the next run into the same checkpoint dir recomputes (and
+    * rewrites) a stage. */
   case class Result(
     inputHash: String,
     sigs: Dataset[DocSig],
@@ -238,10 +241,11 @@ object Pipeline {
           }
       }
     }
-    /** Observed on a fresh stage; the sum of its lineage rows on a hit. */
+    /** Observed on a fresh stage; the sum of its lineage rows on a hit
+      * (coalesced: an empty stage's lineage has no rows, and sum is NULL). */
     def rows(name: String): Long =
       if (hits(name)) io.get.read(spark, s"$ns/lineage_$name")
-        .agg(sum("rows")).head().getLong(0)
+        .agg(coalesce(sum("rows"), lit(0L))).head().getLong(0)
       else obs(name).get("n").asInstanceOf[Long]
 
     val sigs = stageCk("sigs") {
@@ -264,12 +268,12 @@ object Pipeline {
     val nVer = rows("verified")
     val msVer = lap()
     // T2 routing: content-type profile keys the per-class tier thresholds;
-    // the verified count is the size hint that lets TierGate broadcast the
-    // endpoint attrs for small pair tables
+    // the verified and document counts are the size hints that let TierGate
+    // broadcast the endpoint attrs and the profile when they are small
     val tiered = stageCk("tiered") {
       TierGate(verified, cfg,
         Some(profF.fold(IntraDup.convProfile(turns))(Await.result(_, Duration.Inf))),
-        pairCountHint = Some(nVer))
+        pairCountHint = Some(nVer), docCountHint = Some(nSig))
     }
     val nTier = rows("tiered")
     val msTier = lap()

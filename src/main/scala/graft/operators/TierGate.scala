@@ -163,18 +163,24 @@ object TierGate {
   /** Upper bound on one endpoint-attrs row's bytes in the broadcast hash
     * relation of the pair joins: the key row (8 B null bitset + 8 B offset
     * word + the id, 64 B) and the value row (8 B bitset + 4 field words +
-    * the id + a content_type of ≤ 16 B), plus 16 B of record lengths and
-    * chain pointer and up to 48 B of slot array — sized like
-    * `Verification.headIdCapBytes`. A pair contributes ≤ 2 attrs rows, so
-    * the attrs BROADCAST into the pair joins instead of SHUFFLE_HASH when
-    * `Adaptive.fits(pairs, 2 × attrCapBytes)` — the one size gate every
-    * broadcast-or-shuffle dispatch uses (Catalyst never broadcast-converts
-    * here on its own because the partial-agg exchange bytes overstate the
-    * stats size). Above it — the 100-TB regime, where attrs is
+    * the id + a content_type of ≤ 24 B, "interactive_dialog" word-aligned),
+    * plus 16 B of record lengths and chain pointer and up to 48 B of slot
+    * array — sized like `Verification.headIdCapBytes`. 272 B; measured
+    * `dataSize` 168-210 B per row at 250k-400k rows (local[4], 21-char
+    * ids). The relation is allocated in whole pages (16 MB there), so a
+    * small one overshoots its rows: 17.8 MB at 20k rows. A pair
+    * contributes ≤ 2 attrs rows, so the attrs BROADCAST into the pair joins
+    * instead of SHUFFLE_HASH when `Adaptive.fits(pairs, 2 × attrCapBytes)`
+    * (Catalyst never broadcast-converts here on its own because the
+    * partial-agg exchange bytes overstate the stats size). The per-document
+    * profile broadcasts into the attrs when `Adaptive.fits(docs,
+    * attrCapBytes)` — its (id, content_type) row is smaller than an attrs
+    * row, and it has one row per conversation however few pairs there
+    * are. Above the gates — the 100-TB regime, where attrs is
     * |docs|-proportional — the shuffle-hash plan below is unchanged. At
     * the bench corpus this removes both pair-table exchanges from the
     * tiered stage. */
-  private[graft] val attrCapBytes: Long = (8 + 8 + 64) + (8 + 4 * 8 + 64 + 16) + 16 + 48
+  private[graft] val attrCapBytes: Long = (8 + 8 + 64) + (8 + 4 * 8 + 64 + 24) + 16 + 48
 
   /**
    * Fused z-score + pair-type attachment: ONE per-endpoint attribute table
@@ -197,14 +203,14 @@ object TierGate {
    */
   private def attachAttrs(pairs: Dataset[VerifiedPair],
                           profiles: Option[DataFrame],
-                          small: Boolean): DataFrame = {
+                          small: Boolean, smallProfile: Boolean): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val stats = endpointStats(pairs)
     val attrs = profiles match {
       case Some(p) =>
         val prof = p.select($"conv_id".as("ep"), $"content_type".as("ct"))
-        stats.join(if (small) broadcast(prof) else prof, Seq("ep"), "left")
+        stats.join(if (smallProfile) broadcast(prof) else prof, Seq("ep"), "left")
       case None => stats.withColumn("ct", lit(null).cast("string"))
     }
     def sideHint(df: DataFrame): DataFrame =
@@ -221,9 +227,13 @@ object TierGate {
 
   def apply(pairs: Dataset[VerifiedPair], cfg: DedupConfig,
             profiles: Option[DataFrame] = None,
-            pairCountHint: Option[Long] = None): Dataset[TieredPair] =
-    gate(attachAttrs(pairs, profiles, small = pairCountHint.exists(n =>
-      Adaptive.fits(pairs.sparkSession, n, 2L * attrCapBytes))), cfg)
+            pairCountHint: Option[Long] = None,
+            docCountHint: Option[Long] = None): Dataset[TieredPair] = {
+    def fits(hint: Option[Long], cap: Long) =
+      hint.exists(n => Adaptive.fits(pairs.sparkSession, n, cap))
+    gate(attachAttrs(pairs, profiles, small = fits(pairCountHint, 2L * attrCapBytes),
+      smallProfile = fits(docCountHint, attrCapBytes)), cfg)
+  }
 
   /**
    * Optional scored-gate column (SURVEY.md §2.3 X18 — the reference's

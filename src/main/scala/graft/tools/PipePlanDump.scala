@@ -78,12 +78,13 @@ object PipePlanDump {
     val ver = verPlan.localCheckpoint(true)
     val prof = graft.operators.IntraDup.convProfile(corpus).localCheckpoint(true)
     // small-pairs broadcast shape vs the at-scale shuffle-hash shape: the
-    // hint value is the only difference, so the pair of dumps IS the
+    // hint values are the only difference, so the pair of dumps IS the
     // before/after plan diff for the tiered stage
     dump("pipeline_tiergate_broadcast",
-      TierGate(ver, cfg, Some(prof), pairCountHint = Some(1L)).toDF())
+      TierGate(ver, cfg, Some(prof), pairCountHint = Some(1L), docCountHint = Some(1L)).toDF())
     dump("pipeline_tiergate_shufflehash",
-      TierGate(ver, cfg, Some(prof), pairCountHint = Some(Long.MaxValue)).toDF())
+      TierGate(ver, cfg, Some(prof), pairCountHint = Some(Long.MaxValue),
+        docCountHint = Some(Long.MaxValue)).toDF())
     spark.stop()
   }
 }

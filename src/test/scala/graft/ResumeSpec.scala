@@ -211,4 +211,26 @@ class ResumeSpec extends SparkSpec {
     val rows = spark.read.parquet(s"$base/candidates").count()
     assert(lin == rows && rows == nCands, s"lineage=$lin table=$rows first run=$nCands")
   }
+
+  test("a stored run with empty stages resumes with zero counts") {
+    import spark.implicits._
+    val dir = tmpDir()
+    // six conversations over disjoint vocabularies: no LSH candidate pair,
+    // so candidates, verified, tiered and clusters are all empty stages
+    // whose lineage tables have no rows
+    val ts = new java.sql.Timestamp(1700000000000L)
+    val turns = (0 until 6).flatMap(c => (0 until 3).map(t => Turn(s"e$c", t,
+      "user", (0 until 40).map(w => s"v${c}x${t}w$w").mkString(" "), null, ts))).toDS()
+    val r1 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "z1",
+      checkpointDir = Some(dir))
+    assert(r1.metrics.find(_.stage == "candidates").map(_.output_count).contains(0L),
+      s"fixture must have no candidates; metrics=${r1.metrics}")
+    val r2 = Pipeline.runPipelined(turns, DedupConfig.balanced, runId = "z2",
+      checkpointDir = Some(dir))
+    val out = r2.metrics.map(m => m.stage -> m.output_count).toMap
+    for (s <- Seq("candidates", "verified", "tiered"))
+      assert(out.get(s + ":cached").contains(0L), s"$s must resume with 0 rows; metrics=$out")
+    assert(out.get("signatures:cached").contains(6L), s"metrics=$out")
+    assert(out.contains("clusters:cached"), s"metrics=$out")
+  }
 }

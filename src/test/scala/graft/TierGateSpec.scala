@@ -209,7 +209,7 @@ class TierGateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .toDF("conv_id", "content_type")
     val n = pairs.count()
     def run() = {
-      val t = TierGate(pairs, cfg, Some(prof), pairCountHint = Some(n))
+      val t = TierGate(pairs, cfg, Some(prof), pairCountHint = Some(n), docCountHint = Some(24L))
       val rows = t.collect().sortBy(_.pair_key).toSeq
       val joins = collect(t.queryExecution.executedPlan) {
         case _: BroadcastHashJoinExec => "bhj"
