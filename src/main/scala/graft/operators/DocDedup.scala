@@ -89,7 +89,17 @@ object DocDedup {
 
   def minhashLshCandidates(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    LshJoin.candidates(docSigs(spark, docs), docLshCfg)
+    // the signature kernel is a mapPartitions, opaque to column pruning,
+    // and candidates reads the signatures four times (doc count, doc-id
+    // ranking, bucket phase, scoring joins): compute them ONCE and
+    // checkpoint only what candidates reads — the verification payload
+    // (sketches, head text) is blanked, not stored
+    val sigs = docSigs(spark, docs)
+      .withColumn("sketch", typedLit(Array.empty[Long]))
+      .withColumn("block_sketches", typedLit(Array.empty[Array[Long]]))
+      .withColumn("head_text", lit(""))
+      .as[graft.model.DocSig].localCheckpoint(true)
+    LshJoin.candidates(sigs, docLshCfg)
       .select($"conv_a".cast("long").as("doc_a"), $"conv_b".cast("long").as("doc_b"),
         round($"minhash_est", 6).as("minhash_est"), $"source")
   }

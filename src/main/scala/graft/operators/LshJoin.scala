@@ -11,16 +11,16 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  * (/root/reference/ai_pdf_panel_duplicate_check_AUTO.py:4002-4069) and its
  * bundle variant (similarity_engine.py:468-583).
  *
- * Shape: explode band keys → eliminate singleton buckets → SALT over-cap
- * buckets into cap-sized sub-buckets (deterministic conv_id hash) → one
- * PARTNER-LIST row per member of each sorted, cap-bounded (bucket, salt)
- * member list (the members after it — the `a.conv_id < b.conv_id` upper
- * triangle, emitted by a generator; no self-join) + one bridge chain
- * linking sub-bucket representatives (so a salted mega-family still forms
- * ONE connected component downstream) → conv_a exchange of the lists →
- * explode to pairs → per-pair dedup keeping the lowest band id → join
- * MinHash signatures back per endpoint → estimate filter → per-doc output
- * cap.
+ * Shape: rank conv_ids to dense doc ids → explode band keys → eliminate
+ * singleton buckets → SALT over-cap buckets into cap-sized sub-buckets
+ * (deterministic conv_id hash) → one PARTNER-LIST row per member of each
+ * sorted, cap-bounded (bucket, salt) member list (the members after it —
+ * the `a < b` upper triangle, emitted by a generator; no self-join) + one
+ * bridge chain linking sub-bucket representatives (so a salted mega-family
+ * still forms ONE connected component downstream) → doc_a exchange of the
+ * lists → explode to pairs → per-pair dedup keeping the lowest band id →
+ * join conv_ids and MinHash sketches back per endpoint → estimate filter →
+ * per-doc output cap.
  *
  * Skew armor (the part the reference lacks — its giant-bucket loop at
  * ai_...AUTO.py:4037-4045 is O(bucket²) unconditionally):
@@ -38,53 +38,69 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  *     (bundle-evidence-first, estimate desc) — bundle/exact hits can never
  *     be evicted by a band flood of high-estimate LSH pairs.
  *
- * Scale discipline: the exploded band table carries ONLY (conv_id, band_id,
- * band_key) — 24 bytes/row — never the signature arrays; signatures join in
- * AFTER pair dedup, so the wide shuffles stay narrow (at 21k docs this cut
- * the candidate stage ~5x).
+ * Scale discipline: the candidate join runs on DENSE DOC IDS. `docIds`
+ * ranks each conv_id with an 8-byte `doc_id` in Spark's own string order
+ * (one sort of the conv_ids), and the rank joins onto the two signature
+ * projections the join reads — broadcast when the rank table fits the
+ * session's broadcast threshold, a sort-merge join otherwise. Because
+ * the ids follow the string order, every sorted member list, bucket head,
+ * bridge orientation and `conv_a < conv_b` test gives what it gave on the
+ * strings, and the output is row-identical. What each exchange ships:
+ *   - ids only: the bucket-item exchange (bkey, doc_id, the conv_id's salt
+ *     hash, band_id, src; never the signature arrays), the (bkey, salt)
+ *     spread of the grouped `array<bigint>` member lists, the bridge
+ *     window, and the doc_a exchange of the partner lists — the widest
+ *     exchange of the stage, where a conv_id string used to repeat in
+ *     every band the doc collides in;
+ *   - one conv_id string per DOCUMENT: the rank sort, the shuffled branch
+ *     of the rank join, and the (doc_id, conv_id, b-bit sketch) side of
+ *     the two scoring joins, which is where the strings come back;
+ *   - strings per PAIR only from the scoring joins on: the doc_b spread
+ *     carries conv_a and its sketch beside the ids, and the rk_a
+ *     cap-window exchange ships the scored (pair_key, conv_a, conv_b)
+ *     rows.
  */
 object LshJoin {
 
-  case class CapStats(totalBuckets: Long, pairedBuckets: Long, saltedBuckets: Long)
-
-
-  /** Exploded (conv_id, band_id, band_key) table — deliberately array-free. */
-  private def bandTable(sigs: Dataset[DocSig]): DataFrame =
-    sigs.select(col("conv_id"),
-      posexplode(col("bands")).as(Seq("band_id", "band_key")))
-
-  /**
-   * Within-bucket partner lists with singleton-drop + salted sub-bucketing
-   * for over-cap buckets. `items` must have (conv_id, <keys...>); emits
-   * (conv_a, partners, band_id, src) with every partner > conv_a and
-   * `partners` non-empty — one row per bucket member that has a later
-   * member, plus one single-partner row per bridge.
-   *
-   * Salt is keyed on conv_id ONLY, so a mega-family sub-buckets identically
-   * in every band — unique pair volume stays O(m·cap) across all bands
-   * rather than O(m·cap·bands). Connectivity across sub-buckets comes from
-   * the bridge chain: per over-cap bucket, the min conv_id of each
-   * sub-bucket is linked to the next sub-bucket's representative.
-   */
   // source codes kept as 1 byte through the list union + pair dedup agg
   // (strings there were measurable shuffle weight): bridge = base + 2
   private final val SrcLsh = 0
   private final val SrcBundle = 1
 
+  /** Dense doc ids: (conv_id, doc_id) with doc_id = the conv_id's rank in
+    * SPARK's string order — a range-partitioned `orderBy` (UTF-8 byte
+    * order; the JVM's UTF-16 `String` order differs wherever a
+    * supplementary-plane character meets one in U+E000-U+FFFF), then
+    * `zipWithIndex`. Eager: the sort's sampling job and shuffle and
+    * zipWithIndex's count job run here. The ids depend only on the set of
+    * conv_ids (one sig row per conversation), so the eager bucket phase and
+    * the final job read the same ids. Comparing two ids compares their
+    * conv_ids, which is what keeps every sorted list, bucket head, bridge
+    * and pair orientation of the id-keyed join row-identical. */
+  private[graft] def docIds(sigs: Dataset[DocSig]): DataFrame = {
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    sigs.select($"conv_id").orderBy($"conv_id").as[String].rdd.zipWithIndex()
+      .toDF("conv_id", "doc_id")
+  }
+
   /** The unified (band ∪ bundle-variant) bucket-item table the candidate
     * join buckets on — one codegen lsh_items generator pass over the sigs
-    * checkpoint (see the provenance note in `candidates`). Exposed for the
-    * bucket-phase plan dumps (the phase is checkpointed inside
-    * saltedBucketPairs, so its plan is invisible from the returned pairs). */
-  private[graft] def itemsFor(sigs: Dataset[DocSig]): DataFrame =
-    sigs.select(col("conv_id"),
+    * checkpoint (see the provenance note in `candidates`). `keyed` has
+    * (doc_id, conv_id, bands, simhash_bundle); the conv_id leaves here as
+    * its salt hash `salt_h`, so the items are (doc_id, salt_h, bkey,
+    * band_id, src). Exposed for the bucket-phase plan dumps (the phase is
+    * checkpointed inside saltedBucketPairs, so its plan is invisible from
+    * the returned pairs). */
+  private[graft] def itemsFor(keyed: DataFrame): DataFrame =
+    keyed.select(col("doc_id"), xxhash64(col("conv_id")).as("salt_h"),
         explode(graft.functions.GraftFunctions.lsh_items(
           col("bands"), col("simhash_bundle"))).as("e"))
-      .select(col("conv_id"), col("e.bkey").as("bkey"),
+      .select(col("doc_id"), col("salt_h"), col("e.bkey").as("bkey"),
         col("e.band_id").as("band_id"), col("e.src").as("src"))
 
   /** The bucket phase's sized/salted/grouped member table — one row per
-    * (bkey, salt) sub-bucket with the sorted, cap-bounded member list.
+    * (bkey, salt) sub-bucket with the sorted, cap-bounded doc_id list.
     * Exposed un-checkpointed for plan dumps/specs (saltedBucketPairs
     * checkpoints it, which hides the plan from the returned Dataset). */
   private[graft] def groupedMembers(items: DataFrame, cap: Int,
@@ -114,35 +130,45 @@ object LshJoin {
     val b2 = itemsP.join(paired.hint("shuffle_hash"), col("bkey") === col("bkey_s"))
       .withColumn("salt",
         when(col("n_salts") <= 1, lit(0))
-          .otherwise(pmod(xxhash64(col("conv_id")), col("n_salts")).cast("int")))
-      .select(col("conv_id"), col("bkey"), col("band_id"), col("src"), col("salt"))
+          .otherwise(pmod(col("salt_h"), col("n_salts")).cast("int")))
+      .select(col("doc_id"), col("bkey"), col("band_id"), col("src"), col("salt"))
     // Within-bucket member grouping — NOT a self-join. A (bkey, salt)
     // group is cap-bounded by construction, so its member list is a safe
-    // in-task object (≤ ~cap strings). The groupBy rides the item
+    // in-task object (≤ ~cap ids). The groupBy rides the item
     // exchange's HashPartitioning(bkey) via the partitioning-subset rule,
     // so the whole bucket phase — sizing, salting, member grouping — is
     // ONE exchange wide. band_id/src are bucket-constant (band keys mix
     // the band index; variant keys mix v_id; key spaces disjoint whp), so
     // min() is the same provenance the old x-side projection carried.
     b2.groupBy(col("bkey"), col("salt"))
-      .agg(sort_array(collect_list(col("conv_id"))).as("members"),
+      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
         min(col("band_id")).as("band_id"), min(col("src")).as("src"))
   }
 
   /**
    * One pass of bucket sizing + salting + within-bucket pairing + bridges
-   * for BOTH sources at once. `items` must have (conv_id, bkey:long,
+   * for BOTH sources at once. `items` must have (doc_id, salt_h, bkey:long,
    * band_id, src) where bkey is the fully mixed bucket key — band index
    * folded into LSH band keys, variant index mixed into bundle keys — so
    * the two key spaces never collide (whp) and one 8-byte grouping key
    * replaces per-source composite keys and per-source shuffle machinery
    * (running the sizing/join/self-join/bridge chain once, not twice, cut
    * measurable per-stage scheduling overhead from the candidate stage).
+   * Emits (doc_a, partners, band_id, src) with every partner > doc_a and
+   * `partners` non-empty — one row per bucket member that has a later
+   * member, plus one single-partner row per bridge.
+   *
+   * Salt is keyed on the conv_id ONLY (its hash rides the items as
+   * `salt_h`), so a mega-family sub-buckets identically in every band —
+   * unique pair volume stays O(m·cap) across all bands rather than
+   * O(m·cap·bands). Connectivity across sub-buckets comes from the bridge
+   * chain: per over-cap bucket, the min member of each sub-bucket is
+   * linked to the next sub-bucket's representative.
    */
   private def saltedBucketPairs(items: DataFrame, cap: Int,
                                 obs: Option[Observation]): DataFrame = {
     // Bucket sizing (optimization r06, second rework): explicit
-    // REPARTITION_BY_NUM exchanges of the 24 B/row item table feed the two
+    // REPARTITION_BY_NUM exchanges of the id-only item table feed the two
     // consumers below — the bucket-size hash aggregate (build) and the salt
     // join probe. The former full-frame window
     // (count + min-rep over partitionBy(bkey)) buffered every item row
@@ -176,39 +202,37 @@ object LshJoin {
     // exchange reuse — un-checkpointed, the bridge branch re-ran the whole
     // sizing/salt/collect chain (measured ~5 s of duplicated task time per
     // run). The checkpoint is compact (one row per (bkey, salt); each
-    // conv_id appears once per band, sorted lists dictionary-compress) and
-    // disk-spillable; its blocks are released by the ContextCleaner when
-    // the candidate Dataset is dropped.
+    // doc_id appears once per band) and disk-spillable; its blocks are
+    // released by the ContextCleaner when the candidate Dataset is dropped.
     val grouped = groupedMembers(items, cap, obs).localCheckpoint(true)
 
     // Spread the cap-bounded groups before emission: the grouped
     // checkpoint preserves the bkey-only partition layout, which would
     // leave ALL sub-buckets of a mega-family in one task. This exchange
-    // ships ONE compact row per (bkey, salt) (conv_ids appear once, sorted
-    // lists dictionary-compress) and restores (bkey, salt)-granular
-    // parallelism, so a 10M-member family's rows spread over m/cap tasks
-    // instead of one. The partition count is EXPLICIT: AQE sizes
-    // coalescing on the exchange's input bytes, and this input is far
-    // smaller than what the generator emits from it — left to itself AQE
-    // convoys the emission onto a handful of tasks.
+    // ships ONE compact row per (bkey, salt) (ids appear once) and restores
+    // (bkey, salt)-granular parallelism, so a 10M-member family's rows
+    // spread over m/cap tasks instead of one. The partition count is
+    // EXPLICIT: AQE sizes coalescing on the exchange's input bytes, and
+    // this input is far smaller than what the generator emits from it —
+    // left to itself AQE convoys the emission onto a handful of tasks.
     val spread = grouped.repartition(
       items.sparkSession.sessionState.conf.numShufflePartitions,
       col("bkey"), col("salt"))
     // Partner lists, not pairs: one row per member of each sub-bucket,
     // carrying the members sorted after it (sorted members ⇒ every
-    // partner > conv_a). The pairs are exploded only AFTER the conv_a
+    // partner > doc_a). The pairs are exploded only AFTER the doc_a
     // exchange in `candidates`, so the exchange ships O(Σ sub-bucket size)
     // rows instead of O(Σ sub-bucket size²): a template family collides in
     // almost every band, and one row per pair per band sent each of its
     // pairs across the exchange ~50 times (skewed_corpus seed 3: 1.92M pair
-    // rows, 12 MB, became 26.9k list rows, 5 MB). posexplode + slice stay
-    // whole-stage-codegen (a flatten/transform formulation was ~40% more
-    // task time).
+    // rows, 12 MB, became 26.9k list rows, 5 MB as conv_id strings).
+    // posexplode + slice stay whole-stage-codegen (a flatten/transform
+    // formulation was ~40% more task time).
     val inBucket = spread
       .select(col("band_id"), col("src"), col("members"),
-        posexplode(col("members")).as(Seq("i", "conv_a")))
+        posexplode(col("members")).as(Seq("i", "doc_a")))
       .filter(col("i") < size(col("members")) - lit(1)) // last member: no partners
-      .select(col("conv_a"),
+      .select(col("doc_a"),
         slice(col("members"), col("i") + lit(2),
           size(col("members")) - col("i") - lit(1)).as("partners"),
         col("band_id"), col("src"))
@@ -224,12 +248,12 @@ object LshJoin {
     // sub-bucket has no lead partner and emits nothing.
     val head = element_at(col("members"), 1)
     val bridges = grouped
-      .withColumn("next_conv", lead(head, 1).over(
+      .withColumn("next_doc", lead(head, 1).over(
         Window.partitionBy(col("bkey")).orderBy(col("salt"))))
-      .filter(col("next_conv").isNotNull)
+      .filter(col("next_doc").isNotNull)
       .select(
-        least(head, col("next_conv")).as("conv_a"),
-        array(greatest(head, col("next_conv"))).as("partners"),
+        least(head, col("next_doc")).as("doc_a"),
+        array(greatest(head, col("next_doc"))).as("partners"),
         col("band_id"), (col("src") + lit(2)).as("src"))
 
     inBucket.unionByName(bridges)
@@ -239,12 +263,21 @@ object LshJoin {
    * Candidate pairs from MinHash LSH banding, plus exact variant-fingerprint
    * collisions (J4 analog: any shared simhash-bundle variant is a candidate).
    *
-   * Not lazy: the bucket phase (items → sizing → salting → member lists)
-   * runs EAGERLY inside this call (see the checkpoint in
-   * saltedBucketPairs), so each call costs one bucket-phase job — build the
-   * Dataset once and reuse it. The returned plan starts at that checkpoint:
-   * partner lists → ONE conv_a exchange → explode to pairs → dedup agg →
-   * scoring joins → cap windows.
+   * Not lazy: the doc-id ranking (`docIds`: one sort of the conv_ids) and
+   * the bucket phase (items → sizing → salting → member lists) run EAGERLY
+   * inside this call (see the checkpoint in saltedBucketPairs), so each
+   * call costs those jobs — build the Dataset once and reuse it. The
+   * returned plan starts at that checkpoint: partner lists of doc ids →
+   * ONE doc_a exchange → explode to pairs → dedup agg → scoring joins
+   * (which bring the conv_ids back) → cap windows.
+   *
+   * The rank table joins onto the signature projections by BROADCAST when
+   * `nDocs` rank rows fit the session's broadcast threshold
+   * (`Adaptive.fits`, at `TierGate.attrCapBytes` per row: a (conv_id,
+   * doc_id) hash-relation row is smaller than an endpoint-attrs row), and
+   * by a sort-merge join otherwise. `nDocs`: the row count of `sigs`
+   * when the caller already has it (the pipeline's observed signature
+   * count); None counts `sigs` when the threshold is enabled.
    *
    * `bucketObs` (optional) receives (total_buckets, paired_buckets,
    * salted_buckets) of the LSH band table — the A4 funnel stats the
@@ -253,9 +286,18 @@ object LshJoin {
    * through an async listener, so readers must still wait on its future.
    */
   def candidates(sigs: Dataset[DocSig], cfg: DedupConfig,
-                 bucketObs: Option[Observation] = None): Dataset[CandidatePair] = {
+                 bucketObs: Option[Observation] = None,
+                 nDocs: Option[Long] = None): Dataset[CandidatePair] = {
     val spark = sigs.sparkSession
     import spark.implicits._
+
+    val ranks = docIds(sigs)
+    val small = Adaptive.fits(spark, nDocs.getOrElse(sigs.count()), TierGate.attrCapBytes)
+    // the shuffled branch is hinted too: left to the planner, a join with a
+    // localCheckpointed sigs side broadcasts SIGS, whose size estimate
+    // does not see its arrays
+    def keyed(side: DataFrame): DataFrame =
+      side.join(ranks.hint(if (small) "broadcast" else "merge"), "conv_id")
 
     // band keys already mix the band index (TextKernel.bandKeys), so the
     // 8-byte key alone identifies the bucket; band_id rides along for
@@ -274,23 +316,24 @@ object LshJoin {
     // canonicalize). Rows and values are identical (same keys — variant
     // bkey reproduces Spark's xxhash64(v_id, v_hash) bit-for-bit, spec-
     // pinned — same ids, same src codes).
-    val lists = saltedBucketPairs(itemsFor(sigs), cfg.bandBucketCap, bucketObs)
+    val lists = saltedBucketPairs(
+      itemsFor(keyed(sigs.select($"conv_id", $"bands", $"simhash_bundle"))),
+      cfg.bandBucketCap, bucketObs)
 
-    // Exchange discipline: ONE explicit hash repartition on conv_a ships the
+    // Exchange discipline: ONE explicit hash repartition on doc_a ships the
     // partner lists; the pairs are exploded after it. The generator keeps
-    // HashPartitioning(conv_a), which satisfies clustering on
-    // (conv_a, conv_b) (partitioning-subset rule), so the pair dedup, the
-    // conv_a signature join and the conv_a cap window ride that exchange
-    // without re-shuffling; the conv_b cap window rides the conv_b
-    // signature-join exchange. Each extra sequential pair-table shuffle adds
-    // a driver stage-scheduling gap, measured serial residue in the 2→8
-    // scaling budget.
+    // HashPartitioning(doc_a), which satisfies clustering on
+    // (doc_a, doc_b) (partitioning-subset rule), so the pair dedup and the
+    // doc_a sketch join ride that exchange without re-shuffling; the rk_b
+    // cap window rides the doc_b sketch-join exchange. Each extra
+    // sequential pair-table shuffle adds a driver stage-scheduling gap,
+    // measured serial residue in the 2→8 scaling budget.
     // Explicit-N on every pair-table exchange in this chain (here, the
-    // conv_b join spread, and the rk_a window spread): a keyed repartition
+    // doc_b join spread, and the rk_a window spread): a keyed repartition
     // without N is REPARTITION_BY_COL, which AQE coalesces by BYTES (1 MB
     // floor) — the 14-23 MB pair exchanges at the bench corpus then ran
-    // their reduces in 14-16 tasks on 32 cores while per-row work (string-
-    // pair hashing, b-bit estimates, window sorts) dwarfs the bytes.
+    // their reduces in 14-16 tasks on 32 cores while per-row work (pair
+    // hashing, b-bit estimates, window sorts) dwarfs the bytes.
     // Pinning at the data-sized count keeps the reduces full-width; at
     // 100-TB scale these exchanges exceed the coalesce floor anyway.
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -301,25 +344,38 @@ object LshJoin {
     // and the union into the map side, where it re-evaluated every
     // member's slice a second time just to test it.
     val pairRows = lists
-      .repartition(parts, $"conv_a")
-      .select($"conv_a", explode_outer($"partners").as("conv_b"), $"band_id", $"src")
-      // defense-in-depth (ADVICE r04): conv_id is unique per bucket by key
+      .repartition(parts, $"doc_a")
+      .select($"doc_a", explode_outer($"partners").as("doc_b"), $"band_id", $"src")
+      // defense-in-depth (ADVICE r04): a doc is unique per bucket by key
       // construction, but if a 64-bit band/variant key ever collided for
       // the SAME doc, sorted-adjacent duplicates in `members` would yield a
       // self-pair here (or a degenerate bridge) — keep a < b explicit
-      .filter($"conv_a" =!= $"conv_b")
-    scorePairs(pairRows, sigs, cfg)
+      .filter($"doc_a" =!= $"doc_b")
+    scorePairs(pairRows, keyed(sketches(sigs, cfg)), cfg)
   }
 
+  /** The scoring joins' per-document side before keying: (conv_id, mhb),
+    * mhb = the b-bit sketch of the MinHash signature (packed low bytes at
+    * estBits 8, 32-bit truncated ints otherwise; see `scorePairs`). */
+  private[graft] def sketches(sigs: Dataset[DocSig], cfg: DedupConfig): DataFrame =
+    sigs.select(col("conv_id"),
+      (if (cfg.estBits == 8) graft.functions.GraftFunctions.pack_low_bytes(col("minhash"))
+       else transform(col("minhash"),
+         v => shiftright(shiftleft(v, 32), 32).cast("int"))).as("mhb"))
+
   /**
-   * The candidate tail over pair rows (conv_a < conv_b, band_id, src) —
-   * one row per colliding band/variant/bridge — shared by `candidates` and
-   * the parity spec's naive per-pair enumeration: pair dedup → min-band-
-   * hits prefilter → b-bit scoring joins → estimate filter → per-doc cap.
+   * The candidate tail over pair rows (doc_a < doc_b, band_id, src) — one
+   * row per colliding band/variant/bridge — shared by `candidates` and the
+   * parity spec's naive per-pair enumeration: pair dedup → min-band-hits
+   * prefilter → b-bit scoring joins → estimate filter → per-doc cap.
+   * `keyed` is the (doc_id, conv_id, mhb) side (`sketches` with a key);
+   * the two scoring joins bring the conv_ids back from it, so the tail's
+   * key type is the caller's: `candidates` passes dense ids, the spec's
+   * reference passes the conv_ids themselves.
    */
-  private[graft] def scorePairs(pairRows: DataFrame, sigs: Dataset[DocSig],
+  private[graft] def scorePairs(pairRows: DataFrame, keyed: DataFrame,
                                 cfg: DedupConfig): Dataset[CandidatePair] = {
-    val spark = sigs.sparkSession
+    val spark = pairRows.sparkSession
     import spark.implicits._
     val parts = spark.sessionState.conf.numShufflePartitions
 
@@ -332,7 +388,7 @@ object LshJoin {
     // the candidate stage's dominant shuffle). Bundle hits (exact-variant
     // evidence) and salted-bucket bridges (connectivity) are exempt.
     val uniquePairs = pairRows
-      .groupBy($"conv_a", $"conv_b")
+      .groupBy($"doc_a", $"doc_b")
       .agg(min($"band_id").as("band_id"),
         sum(when($"src" === SrcLsh, 1L).otherwise(0L)).as("lsh_hits"),
         max(when($"src" === SrcBundle || $"src" === SrcBundle + 2, 1).otherwise(0)).as("has_bundle"),
@@ -364,21 +420,16 @@ object LshJoin {
     // docs — while a shuffled hash join builds its map on the narrow
     // signature shard (|docs|·~550 B / shuffle-partition, the quantity
     // shuffle.partitions is sized by at scale) and streams the fat side
-    // unsorted; the join's hash partitioning still feeds the cap windows.
-    val use8 = cfg.estBits == 8
-    val mh = sigs.select($"conv_id",
-      (if (use8) graft.functions.GraftFunctions.pack_low_bytes($"minhash")
-       else transform($"minhash",
-         v => shiftright(shiftleft(v, 32), 32).cast("int"))).as("mhb"))
+    // unsorted; the join's hash partitioning still feeds the rk_b window.
     val est: (Column, Column) => Column =
-      if (use8) graft.functions.GraftFunctions.minhash_est8
+      if (cfg.estBits == 8) graft.functions.GraftFunctions.minhash_est8
       else graft.functions.GraftFunctions.minhash_est32
+    def side(s: String) = keyed.select($"doc_id".as(s"doc_$s"),
+      $"conv_id".as(s"conv_$s"), $"mhb".as(s"m$s")).hint("shuffle_hash")
     val scored = uniquePairs
-      .join(mh.select($"conv_id".as("conv_a"), $"mhb".as("ma"))
-        .hint("shuffle_hash"), "conv_a")
-      .repartition(parts, $"conv_b") // pinned-width conv_b spread (see above)
-      .join(mh.select($"conv_id".as("conv_b"), $"mhb".as("mb"))
-        .hint("shuffle_hash"), "conv_b")
+      .join(side("a"), "doc_a")
+      .repartition(parts, $"doc_b") // pinned-width doc_b spread (see above)
+      .join(side("b"), "doc_b")
       .withColumn("minhash_est", est(col("ma"), col("mb")))
       // F1 threshold predicate; bundle hits always survive (exact-dup path),
       // and so do BRIDGES — a bridge is the only connectivity between the
@@ -391,7 +442,7 @@ object LshJoin {
       .select(
         concat($"conv_a", lit("|"), $"conv_b").as("pair_key"),
         $"conv_a", $"conv_b", $"minhash_est", $"band_id".cast("int").as("band_id"),
-        $"source")
+        $"source", $"doc_b")
 
     // F4 output cap, PER DOCUMENT (CLIP_MAX_OUTPUT_PAIRS re-scoped to the
     // TILE_MAX_TILES_PER_PANEL per-item shape): keep a pair if either
@@ -407,11 +458,13 @@ object LshJoin {
       when($"source".contains("bundle") || $"source".contains("bridge"),
         lit(1.0)).otherwise(lit(0.0)))
     val wA = Window.partitionBy($"conv_a").orderBy(rankScore.desc, $"pair_key")
-    val wB = Window.partitionBy($"conv_b").orderBy(rankScore.desc, $"pair_key")
-    // rk_b first: at scale the conv_b signature join leaves the pair table
-    // hash-partitioned on conv_b, so this window is sort-only (no exchange)
+    // doc_b names the same document as conv_b, so it is the same window
+    val wB = Window.partitionBy($"doc_b").orderBy(rankScore.desc, $"pair_key")
+    // rk_b first: the doc_b sketch join leaves the pair table
+    // hash-partitioned on doc_b, so this window is sort-only (no exchange)
     scored
       .withColumn("rk_b", row_number().over(wB))
+      .drop("doc_b")
       .repartition(parts, $"conv_a") // pinned-width rk_a spread (see above)
       .withColumn("rk_a", row_number().over(wA))
       .filter($"rk_a" <= k || $"rk_b" <= k)
@@ -476,17 +529,4 @@ object LshJoin {
       .select(col("conv_id"), posexplode(col("minhash")).as(Seq("pos", "m64")))
       .select(col("conv_id"), col("pos"),
         col("m64").bitwiseAND(lit(255L)).cast("int").as("m8")))
-
-  /** Bucket-size funnel stats (A4 analog of the reference's logged
-    * O(n²)→O(Σb²) reduction, ai_...AUTO.py:4026-4031). Standalone-job
-    * variant of the `bucketObs` observation (diagnosis/tests). */
-  def capStats(sigs: Dataset[DocSig], cfg: DedupConfig): CapStats = {
-    val sizes = bandTable(sigs).groupBy("band_id", "band_key").count()
-    val agg = sizes.agg(
-      count(lit(1)).as("total"),
-      sum(when(col("count") >= 2, 1L).otherwise(0L)).as("paired"),
-      sum(when(col("count") > cfg.bandBucketCap, 1L).otherwise(0L)).as("salted")
-    ).head()
-    CapStats(agg.getLong(0), agg.getLong(1), agg.getLong(2))
-  }
 }

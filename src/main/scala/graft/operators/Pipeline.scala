@@ -254,7 +254,7 @@ object Pipeline {
     val nSig = rows("sigs")
     val msSig = lap()
     val cands = stageCk("candidates") {
-      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets))
+      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets), nDocs = Some(nSig))
       (groups, cfg.groupGap) match {
         case (Some(g), Some(gap)) => LshJoin.suppressGroups(raw, g, gap)
         case _ => raw

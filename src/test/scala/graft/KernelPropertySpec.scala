@@ -1,18 +1,24 @@
 package graft
 
-import org.apache.spark.sql.functions.{lower, regexp_replace, trim}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.functions.{concat, lit, lower, regexp_replace, shiftleft, shiftright,
+  struct, transform, trim, xxhash64}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
 import graft.functions.{Expr0, GraftFunctions, TextKernel}
 import graft.operators.SuffixSpans
 
 /**
- * Property tests: three hot kernels against naive references on generated
+ * Property tests: hot kernels against naive references on generated
  * inputs — `jaccard_sorted` against a Set-based Jaccard, `norm_alnum`
- * against the `[^a-z0-9]+` regex path, and the suffix-array LCS against an
- * O(n·m) dynamic program. Each kernel runs on the JVM for every generated
- * case; the two SQL expressions also run once over the whole sample in a
- * Spark job, against the same references.
+ * against the `[^a-z0-9]+` regex path, the suffix-array LCS against an
+ * O(n·m) dynamic program, and the candidate join's b-bit scoring kernels
+ * (`pack_low_bytes` + `minhash_est8`, `minhash_est32`) and its `lsh_items`
+ * bucket-item generator. Each kernel runs on the JVM for every generated
+ * case; the SQL expressions also run once over the whole sample in a Spark
+ * job, against the same references.
  */
 class KernelPropertySpec extends SparkSpec {
 
@@ -120,5 +126,100 @@ class KernelPropertySpec extends SparkSpec {
       SuffixSpans.lcsViaSuffixArray(a, b) == dpLcs(a, b) &&
         SuffixSpans.lcsViaSuffixArray(a, b) >= shared.length
     })
+  }
+
+  /** Agreement fraction over the common prefix of two signatures, on the
+    * components' low `bits` bits. */
+  private def agreement(a: Array[Long], b: Array[Long], bits: Int): Option[Double] = {
+    val n = math.min(a.length, b.length)
+    val mask = (1L << bits) - 1
+    if (n == 0) None
+    else Some(a.take(n).zip(b).count { case (x, y) => (x & mask) == (y & mask) }.toDouble / n)
+  }
+
+  /** The debiased 8-bit estimate (Li & König): (raw − 2⁻⁸)/(1 − 2⁻⁸), ≥ 0. */
+  private def naiveEst8(a: Array[Long], b: Array[Long]): Double =
+    agreement(a, b, 8).fold(0.0)(raw => math.max(0.0, (raw - 1.0 / 256) / (1 - 1.0 / 256)))
+
+  private def naiveEst32(a: Array[Long], b: Array[Long]): Double =
+    agreement(a, b, 32).getOrElse(0.0)
+
+  private val anyLong = Gen.choose(Long.MinValue, Long.MaxValue)
+
+  // a signature pair: b keeps a's component, changes only bits above the
+  // low 32 or above the low 8, or draws a fresh one, position by position;
+  // the lengths may differ
+  private val sigPair: Gen[(Array[Long], Array[Long])] = for {
+    n <- Gen.choose(0, 40)
+    a <- Gen.listOfN(n, Gen.oneOf(anyLong, Gen.choose(-300L, 300L)))
+    edits <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 3), anyLong))
+    extra <- Gen.listOfN(3, anyLong).flatMap(xs => Gen.choose(0, 3).map(xs.take))
+  } yield {
+    val b = a.zip(edits).map {
+      case (x, (0, _)) => x
+      case (x, (1, r)) => x ^ (r | 1L) << 32
+      case (x, (2, r)) => x ^ (r | 1L) << 8
+      case (_, (_, r)) => r
+    }
+    (a.toArray, (b ++ extra).toArray)
+  }
+
+  private def arr(a: Array[Long]) = UnsafeArrayData.fromPrimitiveArray(a)
+
+  test("pack_low_bytes + minhash_est8 and minhash_est32 ≡ naive b-bit estimates") {
+    check(Prop.forAll(sigPair) { case (a, b) =>
+      val (pa, pb) = (Expr0.packLowBytes(arr(a)), Expr0.packLowBytes(arr(b)))
+      pa.sameElements(a.map(_.toByte)) &&
+        TextKernel.minhashEstimate8(pa, pb) == naiveEst8(a, b) &&
+        Expr0.minhashEst32(UnsafeArrayData.fromPrimitiveArray(a.map(_.toInt)),
+          UnsafeArrayData.fromPrimitiveArray(b.map(_.toInt))) == naiveEst32(a, b)
+    })
+    import spark.implicits._
+    val pairs = sample(sigPair, 200)
+    // the 32-bit side as the scoring join builds it: sign-extending shifts
+    def low32(c: org.apache.spark.sql.Column) =
+      transform(c, v => shiftright(shiftleft(v, 32), 32).cast("int"))
+    val got = pairs.toDF("a", "b").select(
+      GraftFunctions.minhash_est8(GraftFunctions.pack_low_bytes($"a"),
+        GraftFunctions.pack_low_bytes($"b")),
+      GraftFunctions.minhash_est32(low32($"a"), low32($"b"))).as[(Double, Double)].collect()
+    pairs.zip(got).foreach { case ((a, b), (e8, e32)) =>
+      assert(e8 == naiveEst8(a, b) && e32 == naiveEst32(a, b),
+        s"${a.mkString(",")} | ${b.mkString(",")}")
+    }
+  }
+
+  private val itemInput: Gen[(Array[Long], Array[Long])] = for {
+    nb <- Gen.choose(0, 70)
+    bands <- Gen.listOfN(nb, Gen.oneOf(anyLong, Gen.oneOf(0L, Long.MinValue, Long.MaxValue)))
+    nv <- Gen.choose(0, 5)
+    bundle <- Gen.listOfN(nv, anyLong)
+  } yield (bands.toArray, bundle.toArray)
+
+  test("lsh_items ≡ the explode(concat(transform…)) generator and Spark's xxhash64") {
+    // per doc: (band key, band index, 0) per band, then
+    // (xxhash64(v_id, v_hash), -1, 1) per bundle variant, Spark's seed 42
+    def naive(bands: Array[Long], bundle: Array[Long]): Seq[(Long, Int, Int)] =
+      bands.toSeq.zipWithIndex.map { case (k, i) => (k, i, 0) } ++
+        bundle.toSeq.zipWithIndex.map { case (v, j) => (XXH64.hashLong(v, XXH64.hashInt(j, 42L)), -1, 1) }
+    def rows(items: Seq[Row]) = items.map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    check(Prop.forAll(itemInput) { case (bands, bundle) =>
+      val out = Expr0.lshItems(arr(bands), arr(bundle))
+      (0 until out.numElements()).map { i =>
+        val r = out.getStruct(i, 3); (r.getLong(0), r.getInt(1), r.getInt(2))
+      } == naive(bands, bundle)
+    })
+    import spark.implicits._
+    val docs = sample(itemInput, 200)
+    val got = docs.toDF("bands", "simhash_bundle").select(
+      GraftFunctions.lsh_items($"bands", $"simhash_bundle"),
+      concat(
+        transform($"bands", (k, i) => struct(k.as("bkey"), i.as("band_id"), lit(0).as("src"))),
+        transform($"simhash_bundle", (v, i) => struct(xxhash64(i, v).as("bkey"),
+          lit(-1).as("band_id"), lit(1).as("src"))))).collect()
+    docs.zip(got).foreach { case ((bands, bundle), r) =>
+      val (kernel, hof) = (rows(r.getSeq[Row](0)), rows(r.getSeq[Row](1)))
+      assert(kernel == hof && kernel == naive(bands, bundle), s"${bands.mkString(",")} | ${bundle.mkString(",")}")
+    }
   }
 }

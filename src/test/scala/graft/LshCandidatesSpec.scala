@@ -3,16 +3,19 @@ package graft
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Dataset, Observation}
 import org.apache.spark.sql.functions.{lit, max}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Hashing.mix64
 import graft.model._
 import graft.operators.{LshJoin, Pipeline}
 
 /**
- * The LSH candidate stage: `candidates` ships one partner list per bucket
- * member through its conv_a exchange and explodes the pairs after it; that
- * must give exactly the rows of a naive one-row-per-band-per-pair
- * enumeration run through the same dedup and scoring tail. Also the bucket
- * funnel's missing-metric path.
+ * The LSH candidate stage: `candidates` ranks the conv_ids to dense doc
+ * ids, ships one partner list of ids per bucket member through its doc_a
+ * exchange and explodes the pairs after it; that must give exactly the
+ * rows of a naive one-row-per-band-per-pair enumeration that stays keyed
+ * by the conv_id strings, run through the same dedup and scoring tail.
+ * Also the rank gate's two branches and the bucket funnel's missing-metric
+ * path.
  */
 class LshCandidatesSpec extends SparkSpec {
 
@@ -24,8 +27,9 @@ class LshCandidatesSpec extends SparkSpec {
 
   /** Synthetic signatures with every collision planted: each doc starts
     * with its own random band keys, bundle variants and MinHash values,
-    * then shares exactly what its role needs. */
-  private lazy val sigs: Dataset[DocSig] = {
+    * then shares exactly what its role needs — the `family` ids every band,
+    * bundle variant 0 and the MinHash signature. */
+  private def sigsFor(family: Seq[String]): Dataset[DocSig] = {
     import spark.implicits._
     val ids = family ++ Seq("bun_a", "bun_b", "one_a", "one_b", "two_a", "two_b") ++ background
     def keys(seed: Long, n: Int) = Array.tabulate(n)(j => mix64(seed * 1000003L + j))
@@ -34,7 +38,7 @@ class LshCandidatesSpec extends SparkSpec {
       val bands = keys(3L * k, cfg.bands)
       val bundle = keys(3L * k + 1, 3)
       var minhash = keys(3L * k + 2, cfg.numPerms)
-      if (id.startsWith("fam")) { // every band and bundle variant 0 shared
+      if (family.contains(id)) {
         Array.copy(keys(-2L, cfg.bands), 0, bands, 0, cfg.bands)
         bundle(0) = mix64(-3L)
         minhash = famMinhash
@@ -51,9 +55,21 @@ class LshCandidatesSpec extends SparkSpec {
     docs.toDS().localCheckpoint(true)
   }
 
-  test("partner-list candidates match a naive one-row-per-band-per-pair reference") {
+  private lazy val sigs = sigsFor(family)
+
+  /** Spark's string order: UTF-8 bytes, unsigned. */
+  private def sparkLess(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+
+  /** The naive reference, keyed by the conv_id strings throughout: the
+    * bucket phase's (bkey, salt) member lists with each conv_id as its own
+    * key, every pair of every list as one row, the bridge chain between
+    * consecutive sub-bucket heads, then the shared scoring tail. Returns
+    * the grouped lists, the bridges and the scored rows. */
+  private def reference(sigs: Dataset[DocSig]) = {
     import spark.implicits._
-    val grouped = LshJoin.groupedMembers(LshJoin.itemsFor(sigs), cfg.bandBucketCap, None)
+    val byConv = sigs.toDF().withColumn("doc_id", $"conv_id")
+    val grouped = LshJoin.groupedMembers(LshJoin.itemsFor(byConv), cfg.bandBucketCap, None)
       .collect().toSeq
       .map(r => (r.getAs[Long]("bkey"), r.getAs[Int]("salt"),
         r.getAs[scala.collection.Seq[String]]("members").toVector,
@@ -67,25 +83,80 @@ class LshCandidatesSpec extends SparkSpec {
       subs.sortBy(_._2).sliding(2).collect {
         case Seq(x, y) if x._3.head != y._3.head =>
           val (a, b) = (x._3.head, y._3.head)
-          (if (a < b) a else b, if (a < b) b else a, x._4, x._5 + 2)
+          if (sparkLess(a, b)) (a, b, x._4, x._5 + 2) else (b, a, x._4, x._5 + 2)
       }
     }
+    val scored = LshJoin.scorePairs(
+      (enumerated ++ bridges).toDF("doc_a", "doc_b", "band_id", "src"),
+      LshJoin.sketches(sigs, cfg).withColumn("doc_id", $"conv_id"), cfg)
+    (grouped, enumerated, bridges, scored.collect().sortBy(_.pair_key).toSeq)
+  }
+
+  private def assertSameRows(out: Seq[CandidatePair], ref: Seq[CandidatePair]): Unit = {
+    assert(out.size == ref.size, s"candidates ${out.size} rows, reference ${ref.size}")
+    out.zip(ref).foreach { case (o, r) => assert(o == r, s"candidates $o != reference $r") }
+  }
+
+  test("partner-list candidates match a naive one-row-per-band-per-pair reference") {
+    val (grouped, enumerated, bridges, ref) = reference(sigs)
     // the input exercises salting, bridges and the one-hit/two-hit edge
     assert(grouped.exists(_._2 > 0) && bridges.nonEmpty)
     assert(enumerated.count(p => p._1 == "one_a" && p._2 == "one_b") == 1)
     assert(enumerated.count(p => p._1 == "two_a" && p._2 == "two_b") == 2)
 
-    val ref = LshJoin.scorePairs((enumerated ++ bridges).toDF("conv_a", "conv_b", "band_id", "src"),
-      sigs, cfg).collect().sortBy(_.pair_key).toSeq
     val out = LshJoin.candidates(sigs, cfg).collect().sortBy(_.pair_key).toSeq
-    assert(out.size == ref.size, s"candidates ${out.size} rows, reference ${ref.size}")
-    out.zip(ref).foreach { case (o, r) => assert(o == r, s"candidates $o != reference $r") }
+    assertSameRows(out, ref)
 
     val byKey = out.map(c => c.pair_key -> c).toMap
     assert(!byKey.contains("one_a|one_b"), "a one-band LSH pair must fail minBandHits")
     assert(byKey.get("two_a|two_b").map(c => (c.source, c.band_id)).contains(("lsh", 7)))
     assert(byKey.get("bun_a|bun_b").map(_.source).contains("bundle"))
     assert(out.exists(_.source.contains("bridge")))
+  }
+
+  test("doc ids follow Spark's UTF-8 string order: prefixes, non-ASCII, supplementary plane") {
+    // prefixes of one another (a < ab < a|b: 'b' sorts before '|'), Latin-1
+    // and CJK, private-use and fullwidth BMP chars above the surrogate
+    // range, and supplementary-plane chars: UTF-16 (the JVM's String order)
+    // puts a surrogate pair (0xD800-0xDBFF) BEFORE U+E000-U+FFFF, UTF-8
+    // puts it after
+    val odd = Seq("a", "a|b", "ab", "\u00e9", "\u00df", "\u65e5\u672c", "\ue000x",
+      "\uff5ea", "\uff5eb", "\ud83d\ude00", "\ud83d\ude01", "\ud835\udcb3y")
+    val fam = odd ++ family.take(20 - odd.size)
+    val sparkOrder = fam.sortWith(sparkLess)
+    assert(fam.sorted != sparkOrder, "the ids must order differently as UTF-16 and as UTF-8")
+
+    val oddSigs = sigsFor(fam)
+    val ranks = LshJoin.docIds(oddSigs).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("conv_id")).sortBy(_._1).toSeq
+    assert(ranks.map(_._1) == ranks.indices.map(_.toLong), "doc ids must be dense from 0")
+    assert(ranks.map(_._2).filter(fam.contains) == sparkOrder)
+
+    val (grouped, _, bridges, ref) = reference(oddSigs)
+    assert(grouped.exists(_._2 > 0) && bridges.nonEmpty, "the family bucket must be salted and bridged")
+    // a pair whose orientation a JVM String sort would flip is in the output
+    assert(ref.exists(p => p.conv_a > p.conv_b),
+      "no reference pair orders differently as UTF-16 — the input misses the case")
+    assertSameRows(LshJoin.candidates(oddSigs, cfg).collect().sortBy(_.pair_key).toSeq, ref)
+  }
+
+  test("rank gate: shuffled and broadcast rank joins give identical candidates") {
+    def run(nDocs: Option[Long] = None): (Seq[CandidatePair], String) = {
+      val c = LshJoin.candidates(sigs, cfg, nDocs = nDocs)
+      (c.collect().sortBy(_.pair_key).toSeq, c.queryExecution.executedPlan.toString)
+    }
+    val (shuffled, shuffledPlan) = withThreshold("-1")(run())
+    val (broadcast, broadcastPlan) = withThreshold("1g")(run())
+    // above the gate under a large threshold: the sigs checkpoint's size
+    // estimate is tiny, and an unhinted join would broadcast it instead
+    val (overGate, overGatePlan) = withThreshold("1g")(run(nDocs = Some(Long.MaxValue)))
+    assertSameRows(broadcast, shuffled)
+    assertSameRows(overGate, shuffled)
+    for ((name, plan) <- Seq("threshold -1" -> shuffledPlan, "over the gate" -> overGatePlan))
+      assert(!plan.contains("BroadcastHashJoin") && plan.contains("SortMergeJoin"),
+        s"$name must shuffle the rank join:\n$plan")
+    assert(broadcastPlan.contains("BroadcastHashJoin") && !broadcastPlan.contains("SortMergeJoin"),
+      s"threshold 1g must broadcast the rank join:\n$broadcastPlan")
   }
 
   test("a bucket funnel that never arrives is recorded as missing, not dropped") {

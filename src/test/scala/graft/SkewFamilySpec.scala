@@ -50,6 +50,23 @@ class SkewFamilySpec extends SparkSpec {
     }
   }
 
+  /** Bucket-size funnel stats as a standalone job over the exploded
+    * (conv_id, band_id, band_key) table: (total, paired, salted) LSH
+    * buckets — the reference the pipeline's `bucketObs` observation is
+    * checked against. */
+  private def capStats(sigs: Dataset[DocSig], cap: Int): (Long, Long, Long) = {
+    import org.apache.spark.sql.functions.{col, count, lit, posexplode, sum, when}
+    val sizes = sigs.select(col("conv_id"),
+        posexplode(col("bands")).as(Seq("band_id", "band_key")))
+      .groupBy("band_id", "band_key").count()
+    val agg = sizes.agg(
+      count(lit(1)).as("total"),
+      sum(when(col("count") >= 2, 1L).otherwise(0L)).as("paired"),
+      sum(when(col("count") > cap, 1L).otherwise(0L)).as("salted")
+    ).head()
+    (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+  }
+
   lazy val result: Pipeline.Result =
     Pipeline.runPipelined(familyTurns, cfg, runId = "skew_family")
 
@@ -64,8 +81,9 @@ class SkewFamilySpec extends SparkSpec {
   test("over-cap buckets are salted (counted), never dropped") {
     val salted = result.metrics.find(_.stage == "lsh_buckets_salted").get
     assert(salted.output_count > 0, "family buckets must exceed the cap and be salted")
-    val stats = LshJoin.capStats(result.sigs, cfg)
-    assert(stats.saltedBuckets == salted.output_count)
+    val paired = result.metrics.find(_.stage == "lsh_buckets_paired").get
+    assert(capStats(result.sigs, cfg.bandBucketCap) ==
+      (salted.input_count, paired.output_count, salted.output_count))
   }
 
   test("family forms ONE cluster containing all 5000 members (bridge connectivity)") {
