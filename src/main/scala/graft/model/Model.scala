@@ -24,6 +24,9 @@ case class ConvDoc(
  */
 case class DocSig(
   conv_id: String,
+  doc_id: Long,                  // conv_id's rank in Spark's string order
+                                 //   (Signatures.docIds): the 8-byte key
+                                 //   the LSH candidate join runs on
   n_turns: Int,
   n_tokens: Int,
   minhash: Array[Long],          // numPerms entries

@@ -79,27 +79,18 @@ object DocDedup {
     import spark.implicits._
     // spread the single parquet split BEFORE the signature kernel: the
     // shingle+minhash pass is the dominant compute here and would otherwise
-    // run in one scan task (the doc text shuffled is a few MB — cheap)
+    // run in one scan task (the doc text shuffled is a few MB — cheap).
+    // Hashed on conv_id, so the kernel's doc-id join shuffles only the ids
     val asDocs = docs.select(col("doc_id").cast("string").as("conv_id"),
       lit(1).as("n_turns"), col("text").as("doc_text"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("conv_id"))
       .as[graft.model.ConvDoc]
     Signatures.compute(asDocs, docLshCfg)
   }
 
   def minhashLshCandidates(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    // the signature kernel is a mapPartitions, opaque to column pruning,
-    // and candidates reads the signatures four times (doc count, doc-id
-    // ranking, bucket phase, scoring joins): compute them ONCE and
-    // checkpoint only what candidates reads — the verification payload
-    // (sketches, head text) is blanked, not stored
-    val sigs = docSigs(spark, docs)
-      .withColumn("sketch", typedLit(Array.empty[Long]))
-      .withColumn("block_sketches", typedLit(Array.empty[Array[Long]]))
-      .withColumn("head_text", lit(""))
-      .as[graft.model.DocSig].localCheckpoint(true)
-    LshJoin.candidates(sigs, docLshCfg)
+    LshJoin.candidates(docSigs(spark, docs), docLshCfg)
       .select($"conv_a".cast("long").as("doc_a"), $"conv_b".cast("long").as("doc_b"),
         round($"minhash_est", 6).as("minhash_est"), $"source")
   }

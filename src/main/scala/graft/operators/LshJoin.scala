@@ -11,16 +11,15 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  * (/root/reference/ai_pdf_panel_duplicate_check_AUTO.py:4002-4069) and its
  * bundle variant (similarity_engine.py:468-583).
  *
- * Shape: rank conv_ids to dense doc ids → explode band keys → eliminate
- * singleton buckets → SALT over-cap buckets into cap-sized sub-buckets
- * (deterministic conv_id hash) → one PARTNER-LIST row per member of each
- * sorted, cap-bounded (bucket, salt) member list (the members after it —
- * the `a < b` upper triangle, emitted by a generator; no self-join) + one
- * bridge chain linking sub-bucket representatives (so a salted mega-family
- * still forms ONE connected component downstream) → doc_a exchange of the
- * lists → explode to pairs → per-pair dedup keeping the lowest band id →
- * join conv_ids and MinHash sketches back per endpoint → estimate filter →
- * per-doc output cap.
+ * Shape: explode band keys → eliminate singleton buckets → SALT over-cap
+ * buckets into cap-sized sub-buckets (deterministic conv_id hash) → one
+ * PARTNER-LIST row per member of each sorted, cap-bounded (bucket, salt)
+ * member list (the members after it — the `a < b` upper triangle, emitted
+ * by a generator; no self-join) + one bridge chain linking sub-bucket
+ * representatives (so a salted mega-family still forms ONE connected
+ * component downstream) → doc_a exchange of the lists → explode to pairs →
+ * per-pair dedup keeping the lowest band id → join conv_ids and MinHash
+ * sketches back per endpoint → estimate filter → per-doc output cap.
  *
  * Skew armor (the part the reference lacks — its giant-bucket loop at
  * ai_...AUTO.py:4037-4045 is O(bucket²) unconditionally):
@@ -38,12 +37,11 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  *     (bundle-evidence-first, estimate desc) — bundle/exact hits can never
  *     be evicted by a band flood of high-estimate LSH pairs.
  *
- * Scale discipline: the candidate join runs on DENSE DOC IDS. `docIds`
- * ranks each conv_id with an 8-byte `doc_id` in Spark's own string order
- * (one sort of the conv_ids), and the rank joins onto the two signature
- * projections the join reads — broadcast when the rank table fits the
- * session's broadcast threshold, a sort-merge join otherwise. Because
- * the ids follow the string order, every sorted member list, bucket head,
+ * Scale discipline: the candidate join runs on DENSE DOC IDS. Every
+ * signature row carries its 8-byte `doc_id`, the conv_id's rank in Spark's
+ * own string order, fixed once when the signatures are computed
+ * (`Signatures.docIds`), so this join ranks and joins nothing. Because the
+ * ids follow the string order, every sorted member list, bucket head,
  * bridge orientation and `conv_a < conv_b` test gives what it gave on the
  * strings, and the output is row-identical. What each exchange ships:
  *   - ids only: the bucket-item exchange (bkey, doc_id, the conv_id's salt
@@ -52,9 +50,8 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  *     window, and the doc_a exchange of the partner lists — the widest
  *     exchange of the stage, where a conv_id string used to repeat in
  *     every band the doc collides in;
- *   - one conv_id string per DOCUMENT: the rank sort, the shuffled branch
- *     of the rank join, and the (doc_id, conv_id, b-bit sketch) side of
- *     the two scoring joins, which is where the strings come back;
+ *   - one conv_id string per DOCUMENT: the (doc_id, conv_id, b-bit sketch)
+ *     side of the two scoring joins, which is where the strings come back;
  *   - strings per PAIR only from the scoring joins on: the doc_b spread
  *     carries conv_a and its sketch beside the ids, and the rk_a
  *     cap-window exchange ships the scored (pair_key, conv_a, conv_b)
@@ -67,33 +64,16 @@ object LshJoin {
   private final val SrcLsh = 0
   private final val SrcBundle = 1
 
-  /** Dense doc ids: (conv_id, doc_id) with doc_id = the conv_id's rank in
-    * SPARK's string order — a range-partitioned `orderBy` (UTF-8 byte
-    * order; the JVM's UTF-16 `String` order differs wherever a
-    * supplementary-plane character meets one in U+E000-U+FFFF), then
-    * `zipWithIndex`. Eager: the sort's sampling job and shuffle and
-    * zipWithIndex's count job run here. The ids depend only on the set of
-    * conv_ids (one sig row per conversation), so the eager bucket phase and
-    * the final job read the same ids. Comparing two ids compares their
-    * conv_ids, which is what keeps every sorted list, bucket head, bridge
-    * and pair orientation of the id-keyed join row-identical. */
-  private[graft] def docIds(sigs: Dataset[DocSig]): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    sigs.select($"conv_id").orderBy($"conv_id").as[String].rdd.zipWithIndex()
-      .toDF("conv_id", "doc_id")
-  }
-
   /** The unified (band ∪ bundle-variant) bucket-item table the candidate
     * join buckets on — one codegen lsh_items generator pass over the sigs
-    * checkpoint (see the provenance note in `candidates`). `keyed` has
+    * checkpoint (see the provenance note in `candidates`). `sigs` needs
     * (doc_id, conv_id, bands, simhash_bundle); the conv_id leaves here as
     * its salt hash `salt_h`, so the items are (doc_id, salt_h, bkey,
     * band_id, src). Exposed for the bucket-phase plan dumps (the phase is
     * checkpointed inside saltedBucketPairs, so its plan is invisible from
-    * the returned pairs). */
-  private[graft] def itemsFor(keyed: DataFrame): DataFrame =
-    keyed.select(col("doc_id"), xxhash64(col("conv_id")).as("salt_h"),
+    * the returned pairs) and the string-keyed spec reference. */
+  private[graft] def itemsFor(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), xxhash64(col("conv_id")).as("salt_h"),
         explode(graft.functions.GraftFunctions.lsh_items(
           col("bands"), col("simhash_bundle"))).as("e"))
       .select(col("doc_id"), col("salt_h"), col("e.bkey").as("bkey"),
@@ -263,21 +243,13 @@ object LshJoin {
    * Candidate pairs from MinHash LSH banding, plus exact variant-fingerprint
    * collisions (J4 analog: any shared simhash-bundle variant is a candidate).
    *
-   * Not lazy: the doc-id ranking (`docIds`: one sort of the conv_ids) and
-   * the bucket phase (items → sizing → salting → member lists) run EAGERLY
-   * inside this call (see the checkpoint in saltedBucketPairs), so each
-   * call costs those jobs — build the Dataset once and reuse it. The
-   * returned plan starts at that checkpoint: partner lists of doc ids →
-   * ONE doc_a exchange → explode to pairs → dedup agg → scoring joins
-   * (which bring the conv_ids back) → cap windows.
-   *
-   * The rank table joins onto the signature projections by BROADCAST when
-   * `nDocs` rank rows fit the session's broadcast threshold
-   * (`Adaptive.fits`, at `TierGate.attrCapBytes` per row: a (conv_id,
-   * doc_id) hash-relation row is smaller than an endpoint-attrs row), and
-   * by a sort-merge join otherwise. `nDocs`: the row count of `sigs`
-   * when the caller already has it (the pipeline's observed signature
-   * count); None counts `sigs` when the threshold is enabled.
+   * Not lazy: the bucket phase (items → sizing → salting → member lists)
+   * runs EAGERLY inside this call (see the checkpoint in
+   * saltedBucketPairs), so each call costs that job — build the Dataset
+   * once and reuse it. The returned plan starts at that checkpoint:
+   * partner lists of doc ids → ONE doc_a exchange → explode to pairs →
+   * dedup agg → scoring joins (which bring the conv_ids back) → cap
+   * windows. The doc ids are the signatures' own (`DocSig.doc_id`).
    *
    * `bucketObs` (optional) receives (total_buckets, paired_buckets,
    * salted_buckets) of the LSH band table — the A4 funnel stats the
@@ -286,18 +258,9 @@ object LshJoin {
    * through an async listener, so readers must still wait on its future.
    */
   def candidates(sigs: Dataset[DocSig], cfg: DedupConfig,
-                 bucketObs: Option[Observation] = None,
-                 nDocs: Option[Long] = None): Dataset[CandidatePair] = {
+                 bucketObs: Option[Observation] = None): Dataset[CandidatePair] = {
     val spark = sigs.sparkSession
     import spark.implicits._
-
-    val ranks = docIds(sigs)
-    val small = Adaptive.fits(spark, nDocs.getOrElse(sigs.count()), TierGate.attrCapBytes)
-    // the shuffled branch is hinted too: left to the planner, a join with a
-    // localCheckpointed sigs side broadcasts SIGS, whose size estimate
-    // does not see its arrays
-    def keyed(side: DataFrame): DataFrame =
-      side.join(ranks.hint(if (small) "broadcast" else "merge"), "conv_id")
 
     // band keys already mix the band index (TextKernel.bandKeys), so the
     // 8-byte key alone identifies the bucket; band_id rides along for
@@ -316,9 +279,7 @@ object LshJoin {
     // canonicalize). Rows and values are identical (same keys — variant
     // bkey reproduces Spark's xxhash64(v_id, v_hash) bit-for-bit, spec-
     // pinned — same ids, same src codes).
-    val lists = saltedBucketPairs(
-      itemsFor(keyed(sigs.select($"conv_id", $"bands", $"simhash_bundle"))),
-      cfg.bandBucketCap, bucketObs)
+    val lists = saltedBucketPairs(itemsFor(sigs.toDF()), cfg.bandBucketCap, bucketObs)
 
     // Exchange discipline: ONE explicit hash repartition on doc_a ships the
     // partner lists; the pairs are exploded after it. The generator keeps
@@ -351,14 +312,14 @@ object LshJoin {
       // the SAME doc, sorted-adjacent duplicates in `members` would yield a
       // self-pair here (or a degenerate bridge) — keep a < b explicit
       .filter($"doc_a" =!= $"doc_b")
-    scorePairs(pairRows, keyed(sketches(sigs, cfg)), cfg)
+    scorePairs(pairRows, sketches(sigs.toDF(), cfg), cfg)
   }
 
-  /** The scoring joins' per-document side before keying: (conv_id, mhb),
-    * mhb = the b-bit sketch of the MinHash signature (packed low bytes at
+  /** The scoring joins' per-document side: (doc_id, conv_id, mhb), mhb =
+    * the b-bit sketch of the MinHash signature (packed low bytes at
     * estBits 8, 32-bit truncated ints otherwise; see `scorePairs`). */
-  private[graft] def sketches(sigs: Dataset[DocSig], cfg: DedupConfig): DataFrame =
-    sigs.select(col("conv_id"),
+  private[graft] def sketches(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    sigs.select(col("doc_id"), col("conv_id"),
       (if (cfg.estBits == 8) graft.functions.GraftFunctions.pack_low_bytes(col("minhash"))
        else transform(col("minhash"),
          v => shiftright(shiftleft(v, 32), 32).cast("int"))).as("mhb"))
@@ -368,10 +329,10 @@ object LshJoin {
    * row per colliding band/variant/bridge — shared by `candidates` and the
    * parity spec's naive per-pair enumeration: pair dedup → min-band-hits
    * prefilter → b-bit scoring joins → estimate filter → per-doc cap.
-   * `keyed` is the (doc_id, conv_id, mhb) side (`sketches` with a key);
-   * the two scoring joins bring the conv_ids back from it, so the tail's
-   * key type is the caller's: `candidates` passes dense ids, the spec's
-   * reference passes the conv_ids themselves.
+   * `keyed` is the (doc_id, conv_id, mhb) side (`sketches`); the two
+   * scoring joins bring the conv_ids back from it, so the tail's key type
+   * is the caller's: `candidates` passes dense ids, the spec's reference
+   * passes the conv_ids themselves as doc_id.
    */
   private[graft] def scorePairs(pairRows: DataFrame, keyed: DataFrame,
                                 cfg: DedupConfig): Dataset[CandidatePair] = {

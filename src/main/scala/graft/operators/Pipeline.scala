@@ -164,7 +164,7 @@ object Pipeline {
    * With a store, clusters is a stage too. The input hash keying the store
    * is `hashOverride` (a provider's snapshot id) when given, else one
    * up-front content scan — the skip has to be decided BEFORE the first
-   * action. Without a store the hash rides the signature stage's action.
+   * action. Without a store the hash rides the routing profile's action.
    *
    * `groups` + cfg.groupGap wire the F2 same/adjacent-group suppression
    * between candidates and verification (reference default OFF).
@@ -203,16 +203,15 @@ object Pipeline {
     // stages (its full-corpus groupBy rides their scheduling gaps; it is
     // Awaited, so failures propagate). With a store it is computed inside
     // the tiered stage, so a resumed tiered stage never runs it.
+    // Without a store the input hash + count ride the profile's action via
+    // observe — no separate full-scan job before the pipeline. The
+    // signature stage reads the turns twice (documents and their doc ids),
+    // so an observation there would count every turn twice.
+    val oIn = Observation(); val oBuckets = Observation()
     val profF: Option[Future[DataFrame]] =
       if (io.isDefined) None
-      else Some(Future { IntraDup.convProfile(turns).localCheckpoint(true) })
-
-    // without a store the input hash + count ride the signature stage's
-    // action via observe — no separate full-scan job before the pipeline
-    val oIn = Observation(); val oBuckets = Observation()
-    val turnsObs =
-      if (pre.isDefined) turns
-      else turns.observe(oIn, xorOf(rowHash), count(lit(1)).as("n"))
+      else Some(Future { IntraDup.convProfile(
+        turns.observe(oIn, xorOf(rowHash), count(lit(1)).as("n"))).localCheckpoint(true) })
     val t0 = System.nanoTime()
     var tMark = t0
     def lap(): Long = {
@@ -249,12 +248,12 @@ object Pipeline {
       else obs(name).get("n").asInstanceOf[Long]
 
     val sigs = stageCk("sigs") {
-      Signatures.compute(Reassembly.assemble(turnsObs, cfg.maskToolPayloads), cfg)
+      Signatures.compute(Reassembly.assemble(turns, cfg.maskToolPayloads), cfg)
     }
     val nSig = rows("sigs")
     val msSig = lap()
     val cands = stageCk("candidates") {
-      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets), nDocs = Some(nSig))
+      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets))
       (groups, cfg.groupGap) match {
         case (Some(g), Some(gap)) => LshJoin.suppressGroups(raw, g, gap)
         case _ => raw

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 import graft.functions.{Hashing, TextKernel}
 import graft.model.{ConvDoc, DedupConfig, DocSig}
 
@@ -16,12 +17,35 @@ import graft.model.{ConvDoc, DedupConfig, DocSig}
  *   - bottom-k shingle sketch + per-block sketches (verification payload)
  *   - capped head text (span evidence payload)
  *
- * No shuffle: signatures are pure functions of the document. Permutation
- * params are derived from (seed, perm index) on each executor — never from
- * task identity — so output is identical at any parallelism
- * (SURVEY.md §7 hard part (e)).
+ * The documents are not shuffled: signatures are pure functions of the
+ * document. Permutation params are derived from (seed, perm index) on each
+ * executor — never from task identity — so output is identical at any
+ * parallelism (SURVEY.md §7 hard part (e)). The one cross-document field is
+ * `doc_id` (see `docIds`): only the (conv_id, doc_id) table moves, and it
+ * joins onto the documents where they already sit.
  */
 object Signatures {
+
+  /** A document with its dense id, the kernel's input row. */
+  case class NumberedDoc(conv_id: String, doc_id: Long, n_turns: Int, doc_text: String)
+
+  /** Dense doc ids: (conv_id, doc_id) with doc_id = the conv_id's rank in
+    * SPARK's string order — a range-partitioned `orderBy` (UTF-8 byte
+    * order; the JVM's UTF-16 `String` order differs wherever a
+    * supplementary-plane character meets one in U+E000-U+FFFF), then
+    * `zipWithIndex`. Eager: the sort's sampling job and zipWithIndex's
+    * count job run here. The ids are a function of the set of conv_ids
+    * only, so every execution of a plan over them gives the same ids.
+    * Comparing two ids compares their conv_ids, which is what keeps every
+    * sorted member list, bucket head, bridge and pair orientation of the
+    * id-keyed LSH candidate join row-identical to the string-keyed one.
+    * `convIds` must hold each conv_id once. */
+  private[graft] def docIds(convIds: DataFrame): DataFrame = {
+    val spark = convIds.sparkSession
+    import spark.implicits._
+    convIds.select(col("conv_id")).orderBy(col("conv_id")).as[String].rdd.zipWithIndex()
+      .toDF("conv_id", "doc_id")
+  }
 
   def compute(docs: Dataset[ConvDoc], cfg: DedupConfig): Dataset[DocSig] = {
     val spark = docs.sparkSession
@@ -38,7 +62,12 @@ object Signatures {
     val seed = cfg.minhashSeed
     val sketchK = cfg.sketchK; val nBlocks = cfg.numBlocks
     val blockK = cfg.blockSketchK; val headChars = cfg.headChars
-    docs.mapPartitions { it =>
+    // SHUFFLE_HASH, build = the id table: the documents come out of
+    // reassembly hash-partitioned on conv_id, so only the ids are shuffled
+    // to them — the document text stays where it is
+    val numbered = docs.join(docIds(docs.toDF()).hint("shuffle_hash"), "conv_id")
+      .as[NumberedDoc]
+    numbered.mapPartitions { it =>
       // per-partition init — computed once, identical everywhere
       val (pa, pb) = Hashing.minhashParams(nPerms, seed)
       it.map { d =>
@@ -94,7 +123,7 @@ object Signatures {
           bi += 1
         }
         val head = if (lines.length <= headChars) lines else lines.substring(0, headChars)
-        DocSig(d.conv_id, d.n_turns, nT, sig, bandKeys, sim, bundle, sketch, blockSk, head)
+        DocSig(d.conv_id, d.doc_id, d.n_turns, nT, sig, bandKeys, sim, bundle, sketch, blockSk, head)
       }
     }
   }

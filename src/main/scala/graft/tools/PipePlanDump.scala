@@ -26,21 +26,16 @@ object PipePlanDump {
     corpus.count(): Unit
     val sigs = Signatures.compute(Reassembly.assemble(corpus), cfg)
       .localCheckpoint(true)
-    // candidates() and verify() run their first phase eagerly, so each
-    // call's plan is dumped and the same Dataset is checkpointed for the
-    // next stage. Both branches of the doc-id rank gate: the doc count is
-    // the only difference, so the pair of dumps IS the plan diff of the
-    // rank join (broadcast vs shuffled)
-    val candPlan = LshJoin.candidates(sigs, cfg, nDocs = Some(1L))
-    dump("pipeline_candidates_broadcast", candPlan.toDF())
-    dump("pipeline_candidates_shuffled",
-      LshJoin.candidates(sigs, cfg, nDocs = Some(Long.MaxValue)).toDF())
+    // candidates() and verify() each run their first phase eagerly, so
+    // each is called ONCE: its plan is dumped, then the same Dataset is
+    // checkpointed for the next stage
+    val candPlan = LshJoin.candidates(sigs, cfg)
+    dump("pipeline_candidates", candPlan.toDF())
     // the bucket phase (item generator → sizing agg → salt join → grouped
     // members) is eagerly checkpointed inside saltedBucketPairs, so its
     // plan is dumped from the exposed pre-checkpoint fragment
-    dump("pipeline_bucket_phase", LshJoin.groupedMembers(
-      LshJoin.itemsFor(sigs.toDF().join(LshJoin.docIds(sigs).hint("broadcast"), "conv_id")),
-      cfg.bandBucketCap, None))
+    dump("pipeline_bucket_phase",
+      LshJoin.groupedMembers(LshJoin.itemsFor(sigs.toDF()), cfg.bandBucketCap, None))
     val cands = candPlan.localCheckpoint(true)
     // verify pass-1 (the payload joins + evidence projection) is eagerly
     // checkpointed inside verify(), so its plan is dumped from the exposed

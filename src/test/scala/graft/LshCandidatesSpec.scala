@@ -6,15 +6,15 @@ import org.apache.spark.sql.functions.{lit, max}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Hashing.mix64
 import graft.model._
-import graft.operators.{LshJoin, Pipeline}
+import graft.operators.{LshJoin, Pipeline, Signatures}
 
 /**
- * The LSH candidate stage: `candidates` ranks the conv_ids to dense doc
+ * The LSH candidate stage: `candidates` runs on the signatures' dense doc
  * ids, ships one partner list of ids per bucket member through its doc_a
  * exchange and explodes the pairs after it; that must give exactly the
  * rows of a naive one-row-per-band-per-pair enumeration that stays keyed
  * by the conv_id strings, run through the same dedup and scoring tail.
- * Also the rank gate's two branches and the bucket funnel's missing-metric
+ * Also the doc ids' string order and the bucket funnel's missing-metric
  * path.
  */
 class LshCandidatesSpec extends SparkSpec {
@@ -50,9 +50,9 @@ class LshCandidatesSpec extends SparkSpec {
           bands(7) = mix64(-6L); bands(9) = mix64(-7L); minhash = famMinhash.reverse
         case _ =>
       }
-      DocSig(id, 1, 10, minhash, bands, 0L, bundle, Array.empty, Array.empty, "")
+      DocSig(id, -1L, 1, 10, minhash, bands, 0L, bundle, Array.empty, Array.empty, "")
     }
-    docs.toDS().localCheckpoint(true)
+    withDocIds(docs.toDS()).localCheckpoint(true)
   }
 
   private lazy val sigs = sigsFor(family)
@@ -88,7 +88,7 @@ class LshCandidatesSpec extends SparkSpec {
     }
     val scored = LshJoin.scorePairs(
       (enumerated ++ bridges).toDF("doc_a", "doc_b", "band_id", "src"),
-      LshJoin.sketches(sigs, cfg).withColumn("doc_id", $"conv_id"), cfg)
+      LshJoin.sketches(byConv, cfg), cfg)
     (grouped, enumerated, bridges, scored.collect().sortBy(_.pair_key).toSeq)
   }
 
@@ -126,9 +126,16 @@ class LshCandidatesSpec extends SparkSpec {
     val sparkOrder = fam.sortWith(sparkLess)
     assert(fam.sorted != sparkOrder, "the ids must order differently as UTF-16 and as UTF-8")
 
+    // the signature kernel numbers its documents the same way
+    locally {
+      import spark.implicits._
+      val docs = fam.map(id => ConvDoc(id, 1, s"text of $id")).toDS()
+      val numbered = Signatures.compute(docs, cfg).collect().sortBy(_.doc_id).toSeq
+      assert(numbered.map(_.doc_id) == fam.indices.map(_.toLong), "doc ids must be dense from 0")
+      assert(numbered.map(_.conv_id) == sparkOrder)
+    }
     val oddSigs = sigsFor(fam)
-    val ranks = LshJoin.docIds(oddSigs).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("conv_id")).sortBy(_._1).toSeq
+    val ranks = oddSigs.collect().map(s => s.doc_id -> s.conv_id).sortBy(_._1).toSeq
     assert(ranks.map(_._1) == ranks.indices.map(_.toLong), "doc ids must be dense from 0")
     assert(ranks.map(_._2).filter(fam.contains) == sparkOrder)
 
@@ -138,25 +145,6 @@ class LshCandidatesSpec extends SparkSpec {
     assert(ref.exists(p => p.conv_a > p.conv_b),
       "no reference pair orders differently as UTF-16 — the input misses the case")
     assertSameRows(LshJoin.candidates(oddSigs, cfg).collect().sortBy(_.pair_key).toSeq, ref)
-  }
-
-  test("rank gate: shuffled and broadcast rank joins give identical candidates") {
-    def run(nDocs: Option[Long] = None): (Seq[CandidatePair], String) = {
-      val c = LshJoin.candidates(sigs, cfg, nDocs = nDocs)
-      (c.collect().sortBy(_.pair_key).toSeq, c.queryExecution.executedPlan.toString)
-    }
-    val (shuffled, shuffledPlan) = withThreshold("-1")(run())
-    val (broadcast, broadcastPlan) = withThreshold("1g")(run())
-    // above the gate under a large threshold: the sigs checkpoint's size
-    // estimate is tiny, and an unhinted join would broadcast it instead
-    val (overGate, overGatePlan) = withThreshold("1g")(run(nDocs = Some(Long.MaxValue)))
-    assertSameRows(broadcast, shuffled)
-    assertSameRows(overGate, shuffled)
-    for ((name, plan) <- Seq("threshold -1" -> shuffledPlan, "over the gate" -> overGatePlan))
-      assert(!plan.contains("BroadcastHashJoin") && plan.contains("SortMergeJoin"),
-        s"$name must shuffle the rank join:\n$plan")
-    assert(broadcastPlan.contains("BroadcastHashJoin") && !broadcastPlan.contains("SortMergeJoin"),
-      s"threshold 1g must broadcast the rank join:\n$broadcastPlan")
   }
 
   test("a bucket funnel that never arrives is recorded as missing, not dropped") {

@@ -86,6 +86,54 @@ class PlanCheckSpec extends SparkSpec {
     assert(shuffles.size <= 8, s"candidate plan ran ${shuffles.size} shuffle stages ($shuffles):\n$p")
   }
 
+  test("candidate-stage exchange budget holds with broadcasts disabled") {
+    // the same budget as above with autoBroadcastJoinThreshold -1: every
+    // join the stage plans must already be a shuffle-free or
+    // exchange-sharing one, so no branch of it needs more shuffle stages
+    withThreshold("-1") {
+      val turns = sources.ConversationGen.corpus(spark, sources.ConversationGen.smoke)
+      val sigs = operators.Signatures.compute(
+        operators.Reassembly.assemble(turns), model.DedupConfig.balanced)
+        .localCheckpoint(true)
+      val cand = operators.LshJoin.candidates(sigs, model.DedupConfig.balanced)
+      cand.collect()
+      val full = cand.queryExecution.executedPlan.toString
+      assert(full.contains("isFinalPlan=true"), s"plan did not finalize:\n$full")
+      val p = full.split("== Initial Plan ==").head
+      val shuffles = "ShuffleQueryStage [0-9]+".r.findAllIn(p).toSet
+      assert(shuffles.size <= 8, s"candidate plan ran ${shuffles.size} shuffle stages ($shuffles):\n$p")
+      assert(!p.contains("BroadcastHashJoin"), s"threshold -1 still broadcast:\n$p")
+    }
+  }
+
+  test("signature doc ids shuffle only the id table, never the documents") {
+    // over a conv_id-partitioned corpus the documents reach the doc-id join
+    // with no exchange (the case below); the join must ship the (conv_id,
+    // doc_id) table to them: ONE shuffle stage in the signature plan, and
+    // it carries the ids only, whatever the broadcast threshold
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    // query stages are leaves of the final plan: walk into each one
+    def shuffles(p: SparkPlan): Seq[ShuffleQueryStageExec] = p match {
+      case s: ShuffleQueryStageExec => s +: shuffles(s.plan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case _ => p.children.flatMap(shuffles)
+    }
+    val turns = sources.ConversationGen.corpus(spark, sources.ConversationGen.smoke).persist()
+    turns.count()
+    try {
+      for (threshold <- Seq("-1", "1g")) withThreshold(threshold) {
+        val sigs = operators.Signatures.compute(
+          operators.Reassembly.assemble(turns), model.DedupConfig.balanced)
+        sigs.collect()
+        val plan = sigs.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+        assert(shuffles(plan).map(_.plan.output.map(_.name)) == Seq(Seq("conv_id", "doc_id")),
+          s"threshold $threshold: the doc-id join must shuffle the ids only:\n$plan")
+        assert(plan.toString.contains("ShuffledHashJoin"), s"threshold $threshold:\n$plan")
+      }
+    } finally turns.unpersist()
+  }
+
   test("reassembly rides the corpus's conv_id partitioning (zero-exchange groupBy)") {
     // The generator delivers the corpus hash-distributed by conv_id (the
     // conv-bucketed input-table layout); assemble's groupBy must reuse that

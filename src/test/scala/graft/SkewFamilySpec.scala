@@ -116,17 +116,17 @@ class SkewFamilySpec extends SparkSpec {
     val saltOf = ids.toDF("conv_id")
       .select(col("conv_id"), pmod(xxhash64(col("conv_id")), lit(nSalts)).cast("int").as("s"))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val sigs = spark.createDataset(ids.map { id =>
+    val sigs = withDocIds(spark.createDataset(ids.map { id =>
       val g = saltOf(id)
       // minhash: first 64 positions shared within the salt group (est 0.5
       // in-group), rest unique per doc (est 0.0 cross-group)
       val mh = Array.tabulate(128)(p =>
         if (p < 64) 900000L + g * 1000L + p else Hashing.mix64(id.hashCode.toLong * 131 + p))
-      DocSig(id, 1, 100, mh,
+      DocSig(id, -1L, 1, 100, mh,
         bands = Array(111L, 222L), // two shared mega-buckets → lsh_hits = 2
         simhash = 0L, simhash_bundle = Array(Hashing.mix64(id.hashCode.toLong)),
         sketch = Array.empty, block_sketches = Array.empty, head_text = "")
-    })
+    }))
     val cands = LshJoin.candidates(sigs, cfg2)
     val bridges = cands.filter($"source".contains("bridge")).collect()
     assert(bridges.nonEmpty, "expected bridge pairs in the mega-bucket")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -22,6 +22,15 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Hand-built signature rows with the doc ids `Signatures.compute`
+    * gives them: the doc_id each row was built with is replaced by its
+    * conv_id's rank from `Signatures.docIds`. */
+  protected def withDocIds(sigs: Dataset[model.DocSig]): Dataset[model.DocSig] = {
+    import spark.implicits._
+    sigs.drop("doc_id").join(operators.Signatures.docIds(sigs.toDF()), "conv_id")
+      .as[model.DocSig]
+  }
 
   /** Runs `body` with the session's broadcast threshold set to `value`:
     * "-1" forces every size-gated dispatch to its shuffle branch, a large
