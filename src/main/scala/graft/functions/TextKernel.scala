@@ -273,6 +273,60 @@ object TextKernel {
     if (w == a.length) a else java.util.Arrays.copyOfRange(a, 0, w)
   }
 
+  /** Repeat statistics of one document's positional shingle hashes (see
+    * `repeatStats`). */
+  final case class RepeatStats(nRepeated: Int, maxMultiplicity: Int, excess: Long, covered: Long)
+
+  /** Repeat statistics of positional shingle hashes `hs`, shingle i
+    * covering token positions [i, i + k): the number of distinct hashes
+    * that occur more than once, their largest multiplicity (0 when none
+    * repeats), the excess Σ(count − 1) over them, and how many token
+    * positions the repeated shingles cover (their interval union). One
+    * counting pass into an open-addressing table of primitive longs (no
+    * sort, no boxing; load ≤ 1/2), then one pass over the positions that
+    * flags each repeated one from its slot's count as it merges the spans. */
+  def repeatStats(hs: Array[Long], k: Int): RepeatStats = {
+    val n = hs.length
+    if (n == 0) return RepeatStats(0, 0, 0L, 0L)
+    val cap = Integer.highestOneBit(2 * n - 1) << 1 // power of two ≥ 2n
+    val mask = cap - 1
+    val keys = new Array[Long](cap)
+    val counts = new Array[Int](cap)
+    val slotOf = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val h = hs(i)
+      var s = (h ^ (h >>> 32)).toInt & mask
+      while (counts(s) != 0 && keys(s) != h) s = (s + 1) & mask
+      keys(s) = h; counts(s) += 1; slotOf(i) = s
+      i += 1
+    }
+    var nRep = 0; var maxMult = 0; var excess = 0L
+    var s = 0
+    while (s < cap) {
+      val c = counts(s)
+      if (c > 1) { nRep += 1; if (c > maxMult) maxMult = c; excess += c - 1 }
+      s += 1
+    }
+    var covered = 0L
+    if (nRep > 0) {
+      var curStart = -1; var curEnd = -1
+      i = 0
+      while (i < n) {
+        if (counts(slotOf(i)) > 1) {
+          if (i >= curEnd) { // disjoint: flush the previous run
+            if (curEnd > curStart) covered += curEnd - curStart
+            curStart = i
+          }
+          curEnd = i + k
+        }
+        i += 1
+      }
+      if (curEnd > curStart) covered += curEnd - curStart
+    }
+    RepeatStats(nRep, maxMult, excess, covered)
+  }
+
   /** Hamming distance between two 64-bit fingerprints. */
   @inline def hamming(x: Long, y: Long): Int = java.lang.Long.bitCount(x ^ y)
 

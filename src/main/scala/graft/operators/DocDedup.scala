@@ -90,7 +90,10 @@ object DocDedup {
 
   def minhashLshCandidates(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    LshJoin.candidates(docSigs(spark, docs), docLshCfg)
+    // the broadcast gate's doc count comes from the input table: the
+    // signatures are not checkpointed, so counting them would run the
+    // shingle+minhash kernel a second time (one signature row per document)
+    LshJoin.candidates(docSigs(spark, docs), docLshCfg, nDocs = Some(docs.count()))
       .select($"conv_a".cast("long").as("doc_a"), $"conv_b".cast("long").as("doc_b"),
         round($"minhash_est", 6).as("minhash_est"), $"source")
   }

@@ -17,11 +17,6 @@ import graft.model.{ConvDoc, Turn}
  */
 object IntraDup {
 
-  /** Per conversation: repeated-shingle stats (advisory evidence).
-    * clone_coverage is the TRUE interval union of repeated spans — token
-    * positions covered by any shingle occurring more than once, merged as
-    * intervals (A6 analog: the reference's pixel-set union of clone
-    * regions → area %, ai_...AUTO.py:2200-2214). */
   /** Positional shingle hashes of one conversation — shared by
     * repeatedSpans and its oracle surface so the two can never drift.
     * Returns (tokenCount, hashes); hashes is empty when n < k. */
@@ -64,62 +59,28 @@ object IntraDup {
     Seq("intra_shingles" -> sh, "intra_doc" -> doc)
   }
 
+  /** Per conversation: repeated-shingle stats (advisory evidence).
+    * clone_coverage is the TRUE interval union of repeated spans — token
+    * positions covered by any shingle occurring more than once, merged as
+    * intervals (A6 analog: the reference's pixel-set union of clone
+    * regions → area %, ai_...AUTO.py:2200-2214). */
   def repeatedSpans(docs: Dataset[ConvDoc], k: Int = 5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.mapPartitions { it =>
       it.map { d =>
-        val (n, hsArr) = positionalShingles(d.doc_text, k)
-        val hs: Array[Long] = if (hsArr.isEmpty) null else hsArr
-        // multiplicity stats via a sorted copy + run scan instead of a
-        // boxing HashMap[Long, Int] (optimization r06: the per-conv map's
-        // Long boxing and rehash churn dominated this kernel's profile;
-        // same outputs — distinct repeated count, max multiplicity, excess
-        // sum — from the run lengths of the sorted array)
-        var nRep = 0; var maxMult = 0; var excess = 0L
-        val sorted: Array[Long] = if (hs == null) null else {
-          val s = hs.clone(); java.util.Arrays.sort(s)
-          var i = 0
-          while (i < s.length) {
-            var j = i + 1
-            while (j < s.length && s(j) == s(i)) j += 1
-            val c = j - i
-            if (c > 1) { nRep += 1; if (c > maxMult) maxMult = c; excess += c - 1 }
-            i = j
-          }
-          s
-        }
-        // interval union of repeated spans [i, i+k) over token positions;
-        // "position repeated" = its hash occurs ≥2× — binary search in the
-        // sorted copy, duplicate ⟺ an equal neighbor exists
-        var covered = 0L
-        if (hs != null && nRep > 0) {
-          def isRep(h: Long): Boolean = {
-            val idx = java.util.Arrays.binarySearch(sorted, h)
-            (idx > 0 && sorted(idx - 1) == h) ||
-              (idx < sorted.length - 1 && sorted(idx + 1) == h)
-          }
-          var curStart = -1; var curEnd = -1
-          var i = 0
-          while (i < hs.length) {
-            if (isRep(hs(i))) {
-              if (i >= curEnd) { // disjoint: flush previous run
-                if (curEnd > curStart) covered += curEnd - curStart
-                curStart = i
-              }
-              curEnd = i + k
-            }
-            i += 1
-          }
-          if (curEnd > curStart) covered += curEnd - curStart
-        }
+        val (n, hs) = positionalShingles(d.doc_text, k)
+        // multiplicity stats and the repeated spans' coverage from one
+        // primitive counting table (TextKernel.repeatStats) — no boxing
+        // HashMap[Long, Int], no sorted copy searched once per position
+        val st = TextKernel.repeatStats(hs, k)
         (d.conv_id, n,
-          nRep,                                       // distinct repeated shingles
-          maxMult,                                    // max multiplicity
+          st.nRepeated,                                  // distinct repeated shingles
+          st.maxMultiplicity,                            // max multiplicity
           if (n >= k)
-            excess.toDouble / math.max(1, n - k + 1)
-          else 0.0,                                   // repeat mass fraction
-          if (n == 0) 0.0 else covered.toDouble / n)  // interval-union coverage
+            st.excess.toDouble / math.max(1, n - k + 1)
+          else 0.0,                                      // repeat mass fraction
+          if (n == 0) 0.0 else st.covered.toDouble / n)  // interval-union coverage
       }
     }.toDF("conv_id", "n_tokens", "n_repeated_shingles", "max_multiplicity",
            "repeat_fraction", "clone_coverage")

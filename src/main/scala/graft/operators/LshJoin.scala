@@ -50,12 +50,17 @@ import graft.model.{CandidatePair, DedupConfig, DocSig}
  *     window, and the doc_a exchange of the partner lists — the widest
  *     exchange of the stage, where a conv_id string used to repeat in
  *     every band the doc collides in;
- *   - one conv_id string per DOCUMENT: the (doc_id, conv_id, b-bit sketch)
- *     side of the two scoring joins, which is where the strings come back;
- *   - strings per PAIR only from the scoring joins on: the doc_b spread
- *     carries conv_a and its sketch beside the ids, and the rk_a
- *     cap-window exchange ships the scored (pair_key, conv_a, conv_b)
- *     rows.
+ *   - when the (doc_id, conv_id, b-bit sketch) side of the scoring joins
+ *     fits under the broadcast threshold (`sketchCapBytes` per document,
+ *     ~135k documents at 64 MB): nothing else but ONE doc_b exchange of
+ *     the scored pairs, ids and scalars only (doc_a, doc_b, estimate,
+ *     band, one byte of source flags, the rk_a rank). Both sketch sides
+ *     broadcast onto the pairs where the doc_a exchange left them, and the
+ *     conv_ids come back from the broadcast side after the doc_b exchange;
+ *   - otherwise, strings per DOCUMENT in the shuffled sketch side, and
+ *     strings per PAIR in two pair exchanges: the doc_b spread carries
+ *     conv_a and its sketch beside the ids, and the rk_a cap window ships
+ *     the scored (pair_key, conv_a, conv_b) rows by conv_a.
  */
 object LshJoin {
 
@@ -251,6 +256,11 @@ object LshJoin {
    * dedup agg → scoring joins (which bring the conv_ids back) → cap
    * windows. The doc ids are the signatures' own (`DocSig.doc_id`).
    *
+   * `nDocs`: the row count of `sigs` when the caller already has it; it
+   * sizes the scoring joins' sketch side against the broadcast threshold
+   * (see `scorePairs`). Without it, `sigs` is counted here, so every caller
+   * takes the same branch for the same input.
+   *
    * `bucketObs` (optional) receives (total_buckets, paired_buckets,
    * salted_buckets) of the LSH band table — the A4 funnel stats the
    * reference logs as its O(n²)→O(Σb²) reduction. It fires on the eager
@@ -258,7 +268,8 @@ object LshJoin {
    * through an async listener, so readers must still wait on its future.
    */
   def candidates(sigs: Dataset[DocSig], cfg: DedupConfig,
-                 bucketObs: Option[Observation] = None): Dataset[CandidatePair] = {
+                 bucketObs: Option[Observation] = None,
+                 nDocs: Option[Long] = None): Dataset[CandidatePair] = {
     val spark = sigs.sparkSession
     import spark.implicits._
 
@@ -285,12 +296,13 @@ object LshJoin {
     // partner lists; the pairs are exploded after it. The generator keeps
     // HashPartitioning(doc_a), which satisfies clustering on
     // (doc_a, doc_b) (partitioning-subset rule), so the pair dedup and the
-    // doc_a sketch join ride that exchange without re-shuffling; the rk_b
-    // cap window rides the doc_b sketch-join exchange. Each extra
-    // sequential pair-table shuffle adds a driver stage-scheduling gap,
-    // measured serial residue in the 2→8 scaling budget.
+    // doc_a sketch join — and with a broadcast sketch side the rk_a cap
+    // window too — ride that exchange without re-shuffling; the rk_b cap
+    // window rides the doc_b exchange. Each extra sequential pair-table
+    // shuffle adds a driver stage-scheduling gap, measured serial residue
+    // in the 2→8 scaling budget.
     // Explicit-N on every pair-table exchange in this chain (here, the
-    // doc_b join spread, and the rk_a window spread): a keyed repartition
+    // doc_b spread, and the shuffled plan's rk_a spread): a keyed repartition
     // without N is REPARTITION_BY_COL, which AQE coalesces by BYTES (1 MB
     // floor) — the 14-23 MB pair exchanges at the bench corpus then ran
     // their reduces in 14-16 tasks on 32 cores while per-row work (pair
@@ -312,7 +324,26 @@ object LshJoin {
       // the SAME doc, sorted-adjacent duplicates in `members` would yield a
       // self-pair here (or a degenerate bridge) — keep a < b explicit
       .filter($"doc_a" =!= $"doc_b")
-    scorePairs(pairRows, sketches(sigs.toDF(), cfg), cfg)
+    scorePairs(pairRows, sketches(sigs.toDF(), cfg), cfg,
+      broadcastSketches = Adaptive.fits(spark, nDocs.getOrElse(sigs.count()), sketchCapBytes(cfg)))
+  }
+
+  /** Upper bound on one document's bytes in a broadcast hash relation of
+    * the (doc_id, conv_id, mhb) sketch side, whichever of its columns a
+    * scoring join keeps. The relation is a long-keyed map: per row, the
+    * UnsafeRow (8 B null bitset + 3 field words + the id, 64 B, + the
+    * sketch: numPerms packed bytes at estBits 8, otherwise an array<int>
+    * with its length word and null bitset) and an 8 B chain word, in a page
+    * that grows by doubling, plus up to 32 B of slot array (2 longs per
+    * slot, ≤ 2 slots per key). 496 B for `balanced`; measured `dataSize`
+    * 176-344 B per row at 20k-250k rows (local[4], 9- and 21-char ids; the
+    * peak is a page just past a doubling). */
+  private[graft] def sketchCapBytes(cfg: DedupConfig): Long = {
+    def words(bytes: Long) = (bytes + 7) / 8 * 8
+    val sketch =
+      if (cfg.estBits == 8) words(cfg.numPerms)
+      else 8 + (cfg.numPerms + 63) / 64 * 8 + words(4L * cfg.numPerms)
+    2 * ((8 + 3 * 8 + 64 + sketch) + 8) + 32
   }
 
   /** The scoring joins' per-document side: (doc_id, conv_id, mhb), mhb =
@@ -332,10 +363,14 @@ object LshJoin {
    * `keyed` is the (doc_id, conv_id, mhb) side (`sketches`); the two
    * scoring joins bring the conv_ids back from it, so the tail's key type
    * is the caller's: `candidates` passes dense ids, the spec's reference
-   * passes the conv_ids themselves as doc_id.
+   * passes the conv_ids themselves as doc_id. `broadcastSketches` picks
+   * the plan: both sides broadcast and one id-only doc_b exchange, or both
+   * sides shuffled and two pair exchanges (doc_b, then conv_a). Either
+   * gives the same rows.
    */
   private[graft] def scorePairs(pairRows: DataFrame, keyed: DataFrame,
-                                cfg: DedupConfig): Dataset[CandidatePair] = {
+                                cfg: DedupConfig,
+                                broadcastSketches: Boolean = false): Dataset[CandidatePair] = {
     val spark = pairRows.sparkSession
     import spark.implicits._
     val parts = spark.sessionState.conf.numShufflePartitions
@@ -347,21 +382,21 @@ object LshJoin {
     // majority BEFORE the signature join ships two truncated signatures per
     // pair (measured: 2.13M → 0.74M pairs at 40k docs; the est join was
     // the candidate stage's dominant shuffle). Bundle hits (exact-variant
-    // evidence) and salted-bucket bridges (connectivity) are exempt.
+    // evidence) and salted-bucket bridges (connectivity) are exempt. The
+    // provenance leaves the agg as ONE byte of source flags (1 = lsh,
+    // 2 = bundle, 4 = bridge); the `source` string is spelled out of it
+    // only in the output projection, so no exchange below ships it.
     val uniquePairs = pairRows
       .groupBy($"doc_a", $"doc_b")
       .agg(min($"band_id").as("band_id"),
         sum(when($"src" === SrcLsh, 1L).otherwise(0L)).as("lsh_hits"),
-        max(when($"src" === SrcBundle || $"src" === SrcBundle + 2, 1).otherwise(0)).as("has_bundle"),
-        max(when($"src" >= 2, 1).otherwise(0)).as("has_bridge"))
-      .filter($"has_bundle" === 1 || $"has_bridge" === 1 ||
-        $"lsh_hits" >= cfg.minBandHits)
-      // deterministic provenance string (collect_set ordering is not)
-      .withColumn("source", concat_ws("+",
-        when($"lsh_hits" > 0, "lsh"),
-        when($"has_bundle" === 1, "bundle"),
-        when($"has_bridge" === 1, "bridge")))
-      .drop("lsh_hits", "has_bundle", "has_bridge")
+        max(when($"src" === SrcBundle || $"src" === SrcBundle + 2, 2).otherwise(0)).as("bundle"),
+        max(when($"src" >= 2, 4).otherwise(0)).as("bridge"))
+      .filter($"bundle" > 0 || $"bridge" > 0 || $"lsh_hits" >= cfg.minBandHits)
+      .select($"doc_a", $"doc_b", $"band_id",
+        (when($"lsh_hits" > 0, 1).otherwise(0) + $"bundle" + $"bridge").cast("byte").as("srcs"))
+    // bundle or bridge evidence
+    val exempt = $"srcs" >= 2
 
     // Signatures join in only now — per unique pair, not per band row — and
     // as b-bit minwise components (Li & König WWW 2010). Default estBits=8:
@@ -376,34 +411,18 @@ object LshJoin {
     // debias). LOW bits are kept (robust even for low-entropy integer
     // inputs, where high bits are constant); on the 32 path the
     // shiftleft/shiftright pair sign-extends so the int cast is ANSI-safe.
-    // SHUFFLE_HASH on the signature side: a sort-merge join must SORT the
-    // fat (pair+signature) stream — measured 2.1 GB of sort spill at 100k
-    // docs — while a shuffled hash join builds its map on the narrow
-    // signature shard (|docs|·~550 B / shuffle-partition, the quantity
-    // shuffle.partitions is sized by at scale) and streams the fat side
-    // unsorted; the join's hash partitioning still feeds the rk_b window.
     val est: (Column, Column) => Column =
       if (cfg.estBits == 8) graft.functions.GraftFunctions.minhash_est8
       else graft.functions.GraftFunctions.minhash_est32
-    def side(s: String) = keyed.select($"doc_id".as(s"doc_$s"),
-      $"conv_id".as(s"conv_$s"), $"mhb".as(s"m$s")).hint("shuffle_hash")
-    val scored = uniquePairs
-      .join(side("a"), "doc_a")
-      .repartition(parts, $"doc_b") // pinned-width doc_b spread (see above)
-      .join(side("b"), "doc_b")
+    // F1 threshold predicate; bundle hits always survive (exact-dup path),
+    // and so do BRIDGES — a bridge is the only connectivity between the
+    // salted sub-buckets of an over-cap family (salt is conv_id-keyed, so
+    // cross-sub-bucket pairs never form in any band); dropping a low-
+    // estimate bridge would split a near-dup mega-family into one cluster
+    // per sub-bucket — precisely the 100-TB case salting exists for
+    def scored(joined: DataFrame): DataFrame = joined
       .withColumn("minhash_est", est(col("ma"), col("mb")))
-      // F1 threshold predicate; bundle hits always survive (exact-dup path),
-      // and so do BRIDGES — a bridge is the only connectivity between the
-      // salted sub-buckets of an over-cap family (salt is conv_id-keyed, so
-      // cross-sub-bucket pairs never form in any band); dropping a low-
-      // estimate bridge would split a near-dup mega-family into one cluster
-      // per sub-bucket — precisely the 100-TB case salting exists for
-      .filter($"minhash_est" >= cfg.simThreshold ||
-        $"source".contains("bundle") || $"source".contains("bridge"))
-      .select(
-        concat($"conv_a", lit("|"), $"conv_b").as("pair_key"),
-        $"conv_a", $"conv_b", $"minhash_est", $"band_id".cast("int").as("band_id"),
-        $"source", $"doc_b")
+      .filter($"minhash_est" >= cfg.simThreshold || exempt)
 
     // F4 output cap, PER DOCUMENT (CLIP_MAX_OUTPUT_PAIRS re-scoped to the
     // TILE_MAX_TILES_PER_PANEL per-item shape): keep a pair if either
@@ -414,22 +433,75 @@ object LshJoin {
     // connectivity, so a busy representative must never evict one. Two
     // hash-partitioned window passes — no global sort, no driver funnel,
     // plan survives 100× corpus growth.
+    //
+    // Tiebreaks: within one conv_a, pair_key = "conv_a|conv_b" orders as
+    // conv_b does (a shared prefix, then conv_b's bytes), and the doc ids
+    // follow the same UTF-8 order, so rk_a may order by doc_b. Within one
+    // conv_b the prefix is conv_a, and "conv_a|" does NOT order as conv_a
+    // when one id is a prefix of another ("a" < "ab", but "ab|x" <
+    // "a|x": 'b' sorts before '|'), so rk_b orders by the pair_key string.
     val k = cfg.maxPairsPerDoc
-    val rankScore = greatest($"minhash_est",
-      when($"source".contains("bundle") || $"source".contains("bridge"),
-        lit(1.0)).otherwise(lit(0.0)))
-    val wA = Window.partitionBy($"conv_a").orderBy(rankScore.desc, $"pair_key")
-    // doc_b names the same document as conv_b, so it is the same window
+    val rankScore = greatest($"minhash_est", when(exempt, lit(1.0)).otherwise(lit(0.0)))
     val wB = Window.partitionBy($"doc_b").orderBy(rankScore.desc, $"pair_key")
-    // rk_b first: the doc_b sketch join leaves the pair table
-    // hash-partitioned on doc_b, so this window is sort-only (no exchange)
-    scored
-      .withColumn("rk_b", row_number().over(wB))
-      .drop("doc_b")
-      .repartition(parts, $"conv_a") // pinned-width rk_a spread (see above)
-      .withColumn("rk_a", row_number().over(wA))
+    val pairKey = concat($"conv_a", lit("|"), $"conv_b")
+    val ranked =
+      if (broadcastSketches) {
+        // The (doc_id, conv_id, mhb) side fits (see `sketchCapBytes`): both
+        // sketch sides BROADCAST onto the pair stream where the partner-list
+        // exchange left it, hash-partitioned on doc_a, so the estimate, the
+        // filter and the rk_a window run with no exchange. ONE explicit-N
+        // doc_b exchange then ships ids and scalars only — no sketch, no
+        // conv_id, no pair_key — and the conv_ids come back from the
+        // broadcast side after it for rk_b and the output. The two sketch
+        // broadcasts and the two conv_id broadcasts are each one relation
+        // (aliases aside, the sides are the same plan).
+        def side(s: String, c: String, as: String) =
+          broadcast(keyed.select($"doc_id".as(s"doc_$s"), col(c).as(as)))
+        scored(uniquePairs.join(side("a", "mhb", "ma"), "doc_a")
+            .join(side("b", "mhb", "mb"), "doc_b"))
+          .withColumn("rk_a", row_number().over(
+            Window.partitionBy($"doc_a").orderBy(rankScore.desc, $"doc_b")))
+          .select($"doc_a", $"doc_b", $"minhash_est", $"band_id", $"srcs", $"rk_a")
+          .repartition(parts, $"doc_b") // pinned-width doc_b spread (see candidates)
+          .join(side("a", "conv_id", "conv_a"), "doc_a")
+          .join(side("b", "conv_id", "conv_b"), "doc_b")
+          .withColumn("pair_key", pairKey)
+          // the doc_b exchange partitions the pairs: sort-only window
+          .withColumn("rk_b", row_number().over(wB))
+      } else {
+        // SHUFFLE_HASH on the signature side: a sort-merge join must SORT
+        // the fat (pair+signature) stream — measured 2.1 GB of sort spill at
+        // 100k docs — while a shuffled hash join builds its map on the
+        // narrow signature shard (|docs|·~550 B / shuffle-partition, the
+        // quantity shuffle.partitions is sized by at scale) and streams the
+        // fat side unsorted; the join's hash partitioning still feeds the
+        // rk_b window. The rk_a window then needs a conv_a exchange of the
+        // scored rows: two pair exchanges. The broadcast branch's order of
+        // joins would need more here: every shuffled join on the other
+        // endpoint re-partitions the pairs.
+        def side(s: String) = keyed.select($"doc_id".as(s"doc_$s"),
+          $"conv_id".as(s"conv_$s"), $"mhb".as(s"m$s")).hint("shuffle_hash")
+        scored(uniquePairs.join(side("a"), "doc_a")
+            .repartition(parts, $"doc_b") // pinned-width doc_b spread (see candidates)
+            .join(side("b"), "doc_b"))
+          .withColumn("pair_key", pairKey)
+          // rk_b first: the doc_b sketch join leaves the pair table
+          // hash-partitioned on doc_b, so this window is sort-only
+          .withColumn("rk_b", row_number().over(wB))
+          .drop("doc_b")
+          .repartition(parts, $"conv_a") // pinned-width rk_a spread (see candidates)
+          .withColumn("rk_a", row_number().over(
+            Window.partitionBy($"conv_a").orderBy(rankScore.desc, $"pair_key")))
+      }
+    ranked
       .filter($"rk_a" <= k || $"rk_b" <= k)
-      .drop("rk_a", "rk_b")
+      .select($"pair_key", $"conv_a", $"conv_b", $"minhash_est",
+        $"band_id".cast("int").as("band_id"),
+        // deterministic provenance string (collect_set ordering is not)
+        concat_ws("+",
+          when($"srcs".bitwiseAND(1) =!= 0, "lsh"),
+          when($"srcs".bitwiseAND(2) =!= 0, "bundle"),
+          when($"srcs".bitwiseAND(4) =!= 0, "bridge")).as("source"))
       .as[CandidatePair]
   }
 

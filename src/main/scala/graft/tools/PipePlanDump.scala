@@ -31,6 +31,13 @@ object PipePlanDump {
     // checkpointed for the next stage
     val candPlan = LshJoin.candidates(sigs, cfg)
     dump("pipeline_candidates", candPlan.toDF())
+    // both sketch-side branches, whatever the gate picks at this corpus
+    // size: the doc count is the only difference, so the pair of dumps IS
+    // the plan diff of the candidate tail
+    dump("pipeline_candidates_broadcast",
+      LshJoin.candidates(sigs, cfg, nDocs = Some(1L)).toDF())
+    dump("pipeline_candidates_shuffled",
+      LshJoin.candidates(sigs, cfg, nDocs = Some(Long.MaxValue)).toDF())
     // the bucket phase (item generator → sizing agg → salt join → grouped
     // members) is eagerly checkpointed inside saltedBucketPairs, so its
     // plan is dumped from the exposed pre-checkpoint fragment

@@ -14,7 +14,8 @@ import graft.operators.SuffixSpans
  * Property tests: hot kernels against naive references on generated
  * inputs — `jaccard_sorted` against a Set-based Jaccard, `norm_alnum`
  * against the `[^a-z0-9]+` regex path, the suffix-array LCS against an
- * O(n·m) dynamic program, and the candidate join's b-bit scoring kernels
+ * O(n·m) dynamic program, `repeatStats` against HashMap counts and a Set
+ * of covered positions, and the candidate join's b-bit scoring kernels
  * (`pack_low_bytes` + `minhash_est8`, `minhash_est32`) and its `lsh_items`
  * bucket-item generator. Each kernel runs on the JVM for every generated
  * case; the SQL expressions also run once over the whole sample in a Spark
@@ -73,6 +74,25 @@ class KernelPropertySpec extends SparkSpec {
   /** The regex path `norm_alnum` replaces, lowercasing as Spark's `lower`. */
   private def regexNorm(s: String): String =
     UTF8String.fromString(s).toLowerCase.toString.replaceAll("[^a-z0-9]+", " ").trim
+
+  test("repeatStats ≡ HashMap counts and a Set of covered positions") {
+    // a small value range repeats often; multiples of 2^32 and the extremes
+    // share probe slots, so the open-addressing chains are exercised
+    val hash = Gen.frequency(
+      4 -> Gen.choose(-12L, 12L),
+      1 -> Gen.choose(-3L, 3L).map(_ << 32),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, -1L),
+      1 -> Gen.long)
+    check(Prop.forAll(Gen.listOf(hash).map(_.toArray), Gen.choose(1, 6)) { (hs, k) =>
+      val counts = scala.collection.mutable.HashMap.empty[Long, Int]
+      hs.foreach(h => counts(h) = counts.getOrElse(h, 0) + 1)
+      val rep = counts.filter(_._2 > 1)
+      val covered = scala.collection.mutable.Set.empty[Int]
+      hs.indices.filter(i => rep.contains(hs(i))).foreach(i => covered ++= i until i + k)
+      TextKernel.repeatStats(hs, k) == TextKernel.RepeatStats(rep.size,
+        if (rep.isEmpty) 0 else rep.values.max, rep.values.map(_ - 1L).sum, covered.size.toLong)
+    })
+  }
 
   test("norm_alnum ≡ the [^a-z0-9]+ regex path on generated text") {
     check(Prop.forAll(text) { s =>

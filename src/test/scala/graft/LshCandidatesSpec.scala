@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{lit, max}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Hashing.mix64
 import graft.model._
-import graft.operators.{LshJoin, Pipeline, Signatures}
+import graft.operators.{Adaptive, LshJoin, Pipeline, Signatures}
 
 /**
  * The LSH candidate stage: `candidates` runs on the signatures' dense doc
@@ -17,7 +17,8 @@ import graft.operators.{LshJoin, Pipeline, Signatures}
  * Also the doc ids' string order and the bucket funnel's missing-metric
  * path.
  */
-class LshCandidatesSpec extends SparkSpec {
+class LshCandidatesSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   // cap 8 so the 20-member family's buckets are salted and bridged
   private val cfg = DedupConfig.balanced.copy(bandBucketCap = 8)
@@ -28,8 +29,9 @@ class LshCandidatesSpec extends SparkSpec {
   /** Synthetic signatures with every collision planted: each doc starts
     * with its own random band keys, bundle variants and MinHash values,
     * then shares exactly what its role needs — the `family` ids every band,
-    * bundle variant 0 and the MinHash signature. */
-  private def sigsFor(family: Seq[String]): Dataset[DocSig] = {
+    * bundle variant 0 and the MinHash signature, the `shared` ids bundle
+    * variant 2. */
+  private def sigsFor(family: Seq[String], shared: Set[String] = Set.empty): Dataset[DocSig] = {
     import spark.implicits._
     val ids = family ++ Seq("bun_a", "bun_b", "one_a", "one_b", "two_a", "two_b") ++ background
     def keys(seed: Long, n: Int) = Array.tabulate(n)(j => mix64(seed * 1000003L + j))
@@ -50,6 +52,7 @@ class LshCandidatesSpec extends SparkSpec {
           bands(7) = mix64(-6L); bands(9) = mix64(-7L); minhash = famMinhash.reverse
         case _ =>
       }
+      if (shared(id)) bundle(2) = mix64(-8L) // pairs them whatever their salts
       DocSig(id, -1L, 1, 10, minhash, bands, 0L, bundle, Array.empty, Array.empty, "")
     }
     withDocIds(docs.toDS()).localCheckpoint(true)
@@ -66,7 +69,7 @@ class LshCandidatesSpec extends SparkSpec {
     * key, every pair of every list as one row, the bridge chain between
     * consecutive sub-bucket heads, then the shared scoring tail. Returns
     * the grouped lists, the bridges and the scored rows. */
-  private def reference(sigs: Dataset[DocSig]) = {
+  private def reference(sigs: Dataset[DocSig], cfg: DedupConfig = cfg) = {
     import spark.implicits._
     val byConv = sigs.toDF().withColumn("doc_id", $"conv_id")
     val grouped = LshJoin.groupedMembers(LshJoin.itemsFor(byConv), cfg.bandBucketCap, None)
@@ -115,13 +118,6 @@ class LshCandidatesSpec extends SparkSpec {
   }
 
   test("doc ids follow Spark's UTF-8 string order: prefixes, non-ASCII, supplementary plane") {
-    // prefixes of one another (a < ab < a|b: 'b' sorts before '|'), Latin-1
-    // and CJK, private-use and fullwidth BMP chars above the surrogate
-    // range, and supplementary-plane chars: UTF-16 (the JVM's String order)
-    // puts a surrogate pair (0xD800-0xDBFF) BEFORE U+E000-U+FFFF, UTF-8
-    // puts it after
-    val odd = Seq("a", "a|b", "ab", "\u00e9", "\u00df", "\u65e5\u672c", "\ue000x",
-      "\uff5ea", "\uff5eb", "\ud83d\ude00", "\ud83d\ude01", "\ud835\udcb3y")
     val fam = odd ++ family.take(20 - odd.size)
     val sparkOrder = fam.sortWith(sparkLess)
     assert(fam.sorted != sparkOrder, "the ids must order differently as UTF-16 and as UTF-8")
@@ -145,6 +141,66 @@ class LshCandidatesSpec extends SparkSpec {
     assert(ref.exists(p => p.conv_a > p.conv_b),
       "no reference pair orders differently as UTF-16 — the input misses the case")
     assertSameRows(LshJoin.candidates(oddSigs, cfg).collect().sortBy(_.pair_key).toSeq, ref)
+  }
+
+  /** Prefixes of one another (a < ab < a|b: 'b' sorts before '|'),
+    * Latin-1 and CJK, private-use and fullwidth BMP chars above the
+    * surrogate range, and supplementary-plane chars: UTF-16 (the JVM's
+    * String order) puts a surrogate pair (0xD800-0xDBFF) BEFORE
+    * U+E000-U+FFFF, UTF-8 puts it after. */
+  private val odd = Seq("a", "a|b", "ab", "\u00e9", "\u00df", "\u65e5\u672c", "\ue000x",
+    "\uff5ea", "\uff5eb", "\ud83d\ude00", "\ud83d\ude01", "\ud835\udcb3y")
+
+  test("broadcast and shuffled sketch sides give identical candidates on UTF-8-order ids") {
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+    // a cap of 3 pairs per doc binds on the family, whose pairs all tie at
+    // estimate 1.0, so both windows' tiebreaks decide which pairs survive
+    val capped = cfg.copy(maxPairsPerDoc = 3)
+    val fam = odd ++ family.take(20 - odd.size)
+    val oddSigs = sigsFor(fam, shared = Set("a", "ab", "a|b"))
+    // within conv_b "a|b", pair_key order is NOT conv_a order: the rk_b
+    // tiebreak must read the strings
+    assert(sparkLess("a", "ab") && sparkLess("ab|a|b", "a|a|b"))
+    def run(threshold: String) = withThreshold(threshold) {
+      val c = LshJoin.candidates(oddSigs, capped)
+      val rows = c.collect().sortBy(_.pair_key).toSeq
+      val plan = c.queryExecution.executedPlan
+      val joins = collect(plan) {
+        case j: BroadcastHashJoinExec => "broadcast"
+        case j: ShuffledHashJoinExec => "shuffled"
+      }
+      (rows, joins.toSet)
+    }
+    val (shuffled, shuffledJoins) = run("-1")
+    val (broadcast, broadcastJoins) = run("1g")
+    assert(shuffledJoins == Set("shuffled") && broadcastJoins == Set("broadcast"),
+      s"-1: $shuffledJoins, 1g: $broadcastJoins")
+    // the cap binds, and the prefix-ordered pairs are both in the input
+    val all = LshJoin.candidates(oddSigs, cfg).collect().map(_.pair_key).toSet
+    assert(Set("a|a|b", "ab|a|b").subsetOf(all), s"prefix pairs missing: $all")
+    assert(shuffled.size < all.size, "the per-doc cap must drop pairs")
+    assertSameRows(broadcast, shuffled)
+    val ref = reference(oddSigs, capped)._4
+    assertSameRows(shuffled, ref)
+  }
+
+  test("sketch gate: docs × per-row sketch cap against the broadcast threshold") {
+    val cap = LshJoin.sketchCapBytes(cfg)
+    // 2 × (row of 8 B bitset + 3 words + 64 B id + 128 sketch bytes + 8 B
+    // chain word) + 32 B of slots; the 32-bit sketch is an array<int>
+    assert(cap == 496L, s"cap=$cap")
+    assert(LshJoin.sketchCapBytes(cfg.copy(estBits = 32)) == 496L + 2 * (536 - 128))
+    withThreshold("64m") {
+      val fit = (64L << 20) / cap
+      assert(Adaptive.fits(spark, fit, cap))
+      assert(!Adaptive.fits(spark, fit + 1, cap))
+      // sf0.1's pipeline (21k docs) broadcasts its sketch side
+      assert(Adaptive.fits(spark, 21280L, cap), "sf0.1 must broadcast")
+    }
+    withThreshold("-1") {
+      assert(!Adaptive.fits(spark,
+        throw new AssertionError("a disabled threshold must not count the docs"), cap))
+    }
   }
 
   test("a bucket funnel that never arrives is recorded as missing, not dropped") {

@@ -106,6 +106,41 @@ class PlanCheckSpec extends SparkSpec {
     }
   }
 
+  test("a broadcast sketch side leaves the candidate tail one id-only pair exchange") {
+    // when the sketch side fits, both scoring joins broadcast onto the pair
+    // stream where the partner-list exchange left it: no shuffled join, at
+    // least one shuffle stage fewer than with broadcasts off, and the one
+    // pair exchange after scoring ships ids and scalars, no strings or bytes
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // query stages are leaves of the final plan: walk into each one, root first
+    def shuffles(p: SparkPlan): Seq[ShuffleQueryStageExec] = p match {
+      case s: ShuffleQueryStageExec => s +: shuffles(s.plan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case _ => p.children.flatMap(shuffles)
+    }
+    val turns = sources.ConversationGen.corpus(spark, sources.ConversationGen.smoke)
+    val sigs = operators.Signatures.compute(
+      operators.Reassembly.assemble(turns), model.DedupConfig.balanced)
+      .localCheckpoint(true)
+    def plan(threshold: String): SparkPlan = withThreshold(threshold) {
+      val cand = operators.LshJoin.candidates(sigs, model.DedupConfig.balanced)
+      cand.collect()
+      cand.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    }
+    val shuffled = plan("-1")
+    val broadcast = plan("1g")
+    assert(!broadcast.toString.contains("ShuffledHashJoin"), s"1g:\n$broadcast")
+    assert(broadcast.toString.contains("BroadcastHashJoin"), s"1g:\n$broadcast")
+    val (nShuffled, nBroadcast) = (shuffles(shuffled).size, shuffles(broadcast).size)
+    assert(nBroadcast <= nShuffled - 1,
+      s"1g ran $nBroadcast shuffle stages, -1 ran $nShuffled:\n$broadcast")
+    val tail = shuffles(broadcast).head.plan.output
+    assert(tail.exists(_.name == "rk_a"), s"the last exchange is not the scored pairs: $tail")
+    assert(!tail.exists(a => a.dataType == StringType || a.dataType == BinaryType),
+      s"the post-scoring pair exchange ships strings or bytes: $tail")
+  }
+
   test("signature doc ids shuffle only the id table, never the documents") {
     // over a conv_id-partitioned corpus the documents reach the doc-id join
     // with no exchange (the case below); the join must ship the (conv_id,
