@@ -43,9 +43,6 @@ object Expr0 {
   def minhashEst(a: ArrayData, b: ArrayData): Double =
     TextKernel.minhashEstimate(a.toLongArray(), b.toLongArray())
 
-  def minhashEst32(a: ArrayData, b: ArrayData): Double =
-    TextKernel.minhashEstimate32(a.toIntArray(), b.toIntArray())
-
   /** The LSH item generator's per-doc rows (see LshItemsExpr): band keys
     * (already band-index-mixed by TextKernel.bandKeys) with their band id,
     * then bundle-variant bucket keys xxhash64(v_id, v_hash) — the EXACT
@@ -251,20 +248,15 @@ object Expr0 {
   }
 
   /** The verify pass-2 span kernel as one static call: same
-    * SuffixSpans/TextKernel calls and the same Java-String length arithmetic
+    * SuffixSpans call and the same Java-String length arithmetic
     * as the former tuple14 Dataset.map (String.length counts UTF-16 units —
     * deliberately NOT Spark's codepoint length()). */
-  def lcsSpanStats(a: UTF8String, b: UTF8String,
-                   useSa: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+  def lcsSpanStats(a: UTF8String, b: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val sa = a.toString; val sb = b.toString
-    val (span, offset) =
-      if (useSa) {
-        val (l, pa, pb) = graft.operators.SuffixSpans.lcsWithPositions(sa, sb)
-        (l, pa - pb)
-      } else (TextKernel.longestCommonSubstring(sa, sb), 0)
+    val (span, pa, pb) = graft.operators.SuffixSpans.lcsWithPositions(sa, sb)
     val minLen = math.max(1, math.min(sa.length, sb.length))
     org.apache.spark.sql.catalyst.InternalRow(
-      span, span.toDouble / minLen, offset)
+      span, span.toDouble / minLen, pa - pb)
   }
 
   def dotArr(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
@@ -464,23 +456,6 @@ case class MinhashEstExpr(left: Expression, right: Expression)
   override def prettyName: String = "minhash_est"
 }
 
-/** minhash_est32(a, b): b-bit minwise estimate over 32-bit-truncated
-  * signature components (TextKernel.minhashEstimate32) — lets the candidate
-  * join ship array<int> instead of array<long> per endpoint, halving the
-  * dominant shuffle's bytes with a 2⁻³² per-position false-match bound. */
-case class MinhashEst32Expr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[ADT] = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Expr0.minhashEst32(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Expr0.minhashEst32($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MinhashEst32Expr =
-    copy(left = l, right = r)
-  override def prettyName: String = "minhash_est32"
-}
-
 /** pack_low_bytes(array<long>): low 8 bits of each signature component as a
   * packed binary — the 8-bit b-bit minwise payload the candidate scoring
   * join ships per endpoint (numPerms BYTES instead of numPerms ints: the
@@ -637,15 +612,14 @@ case class Blocks32Expr(child: Expression)
   * codegen'd expression — struct(max_span_len, span_frac, span_offset)
   * with the exact Java-String arithmetic of the former tuple14 map
   * (see Expr0.lcsSpanStats). */
-case class LcsSpanStats(left: Expression, right: Expression, useSa: Boolean)
+case class LcsSpanStats(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[ADT] = Seq(StringType, StringType)
   override def dataType: DataType = LcsSpanStats.schema
   override def nullSafeEval(a: Any, b: Any): Any =
-    Expr0.lcsSpanStats(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], useSa)
+    Expr0.lcsSpanStats(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Expr0.lcsSpanStats($a, $b, $useSa)")
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Expr0.lcsSpanStats($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): LcsSpanStats =
     copy(left = l, right = r)
   override def prettyName: String = "lcs_span_stats"
@@ -680,8 +654,6 @@ object GraftFunctions {
   def trigram_hashes(c: Column): Column = column(TrigramHashes(expression(c)))
   def minhash_est(a: Column, b: Column): Column =
     column(MinhashEstExpr(expression(a), expression(b)))
-  def minhash_est32(a: Column, b: Column): Column =
-    column(MinhashEst32Expr(expression(a), expression(b)))
   def pack_low_bytes(c: Column): Column = column(PackLowBytes(expression(c)))
   def lsh_items(bands: Column, bundle: Column): Column =
     column(LshItemsExpr(expression(bands), expression(bundle)))
@@ -696,8 +668,8 @@ object GraftFunctions {
     column(PairEvidenceExpr(
       Seq(skA, blkA, shA, bunA, skB, blkB, shB, bunB, est).map(expression),
       topK, blockFloor, cutoff, strictJ))
-  def lcs_span_stats(a: Column, b: Column, useSa: Boolean): Column =
-    column(LcsSpanStats(expression(a), expression(b), useSa))
+  def lcs_span_stats(a: Column, b: Column): Column =
+    column(LcsSpanStats(expression(a), expression(b)))
   def sketch32(c: Column): Column = column(Sketch32Expr(expression(c)))
   def blocks32(c: Column): Column = column(Blocks32Expr(expression(c)))
 
@@ -719,8 +691,6 @@ object GraftFunctions {
       es => DotArr(es(0), es(1))),
     ("minhash_est", "minhash_est(a, b) - fraction of agreeing MinHash positions",
       es => MinhashEstExpr(es(0), es(1))),
-    ("minhash_est32", "minhash_est32(a, b) - b-bit minwise estimate over 32-bit-truncated signatures",
-      es => MinhashEst32Expr(es(0), es(1))),
     ("pack_low_bytes", "pack_low_bytes(array<long>) - low byte of each component as packed binary",
       es => PackLowBytes(es.head)),
     ("minhash_est8", "minhash_est8(a, b) - debiased 8-bit b-bit minwise estimate over packed signatures",

@@ -163,20 +163,6 @@ object TextKernel {
     eq.toDouble / n
   }
 
-  /** b-bit minwise variant (Li & König, "b-Bit Minwise Hashing", WWW 2010)
-    * over 32-bit-truncated signature components: position equality of the
-    * kept 32 bits estimates full-component equality with false-match
-    * probability 2⁻³² per position — vanishing against the 1/numPerms
-    * estimate granularity, while HALVING the bytes a candidate join must
-    * shuffle per endpoint. Same contract as [[minhashEstimate]]. */
-  def minhashEstimate32(sa: Array[Int], sb: Array[Int]): Double = {
-    val n = math.min(sa.length, sb.length)
-    if (n == 0) return 0.0
-    var eq = 0; var i = 0
-    while (i < n) { if (sa(i) == sb(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-
   /** 8-bit b-bit minwise estimate (Li & König, WWW 2010 §3) over packed
     * low-byte signature components: a position false-matches with
     * probability C₈ = 2⁻⁸ when the full components differ, so the raw
@@ -349,9 +335,8 @@ object TextKernel {
     best
   }
 
-  /** Exact Jaccard of two SORTED distinct long arrays (merge scan, no alloc). */
   /** Int twin for the verify stage's high-32-bit truncated sketches
-    * (Verification.sketch32): identical merge-scan at half the memory
+    * (Expr0.sketch32): identical merge-scan at half the memory
     * traffic — this loop streams ~2×sketch bytes per pair and was the
     * verified stage's measured memory-bus wall. */
   def jaccardSorted(a: Array[Int], b: Array[Int]): Double = {
@@ -366,6 +351,7 @@ object TextKernel {
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
+  /** Exact Jaccard of two SORTED distinct long arrays (merge scan, no alloc). */
   def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
     if (a.isEmpty && b.isEmpty) return 0.0
     var i = 0; var j = 0; var inter = 0
@@ -396,83 +382,5 @@ object TextKernel {
     java.util.Arrays.sort(mixed)
     if (mixed.length <= k) mixed
     else java.util.Arrays.copyOfRange(mixed, 0, k)
-  }
-
-  /**
-   * Longest common substring length (in characters) between two strings via
-   * binary search over rolling-hash n-gram sets — the text-space analog of
-   * the reference's suffix/lane span matching (wb_lane_normalization.py).
-   * O((|a|+|b|) log min(|a|,|b|)). Hash-set equality is verified only
-   * probabilistically (128-bit-ish via two seeds) — collision odds
-   * negligible for evidence scoring.
-   */
-  def longestCommonSubstring(a: String, b: String): Int = {
-    if (a.isEmpty || b.isEmpty) return 0
-    val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
-    var lo = 1; var hi = s.length; var best = 0
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (hasCommonSub(s, t, mid)) { best = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    best
-  }
-
-  private def hasCommonSub(s: String, t: String, L: Int): Boolean = {
-    if (s.length < L || t.length < L) return false
-    val hs = rollHashArray(s, L)
-    java.util.Arrays.sort(hs)
-    // roll over t inline, probing the sorted array — primitive throughout
-    // (the previous boxed Iterator[Long] + HashSet churned GC under high
-    // thread counts)
-    val B1 = 1000000007L; val B2 = 998244353L
-    var h1 = 0L; var h2 = 0L
-    var p1 = 1L; var p2 = 1L
-    var i = 0
-    while (i < L) {
-      val c = t.charAt(i).toLong
-      h1 = h1 * B1 + c; h2 = h2 * B2 + c
-      if (i < L - 1) { p1 *= B1; p2 *= B2 }
-      i += 1
-    }
-    if (java.util.Arrays.binarySearch(hs,
-        Hashing.mix64(h1) ^ Hashing.mix64(h2 * 0x9E3779B97F4A7C15L)) >= 0) return true
-    var pos = L
-    while (pos < t.length) {
-      val out = t.charAt(pos - L).toLong
-      val in = t.charAt(pos).toLong
-      h1 = (h1 - out * p1) * B1 + in
-      h2 = (h2 - out * p2) * B2 + in
-      if (java.util.Arrays.binarySearch(hs,
-          Hashing.mix64(h1) ^ Hashing.mix64(h2 * 0x9E3779B97F4A7C15L)) >= 0) return true
-      pos += 1
-    }
-    false
-  }
-
-  /** Polynomial rolling hashes of all L-grams of s (two seeds folded to one long). */
-  private def rollHashArray(s: String, L: Int): Array[Long] = {
-    val B1 = 1000000007L; val B2 = 998244353L
-    val out = new Array[Long](s.length - L + 1)
-    var h1 = 0L; var h2 = 0L
-    var p1 = 1L; var p2 = 1L
-    var i = 0
-    while (i < L) {
-      val c = s.charAt(i).toLong
-      h1 = h1 * B1 + c; h2 = h2 * B2 + c
-      if (i < L - 1) { p1 *= B1; p2 *= B2 }
-      i += 1
-    }
-    out(0) = Hashing.mix64(h1) ^ Hashing.mix64(h2 * 0x9E3779B97F4A7C15L)
-    var pos = L
-    while (pos < s.length) {
-      val o = s.charAt(pos - L).toLong
-      val in = s.charAt(pos).toLong
-      h1 = (h1 - o * p1) * B1 + in
-      h2 = (h2 - o * p2) * B2 + in
-      out(pos - L + 1) = Hashing.mix64(h1) ^ Hashing.mix64(h2 * 0x9E3779B97F4A7C15L)
-      pos += 1
-    }
-    out
   }
 }

@@ -135,22 +135,6 @@ case class DedupConfig(
   headChars: Int = 8000,         // capped text for span evidence
   simThreshold: Double = 0.25,   // candidate keep threshold on est-Jaccard (F1);
                                  //   ≥6σ below the weakest true-dup J (0.42)
-  estBits: Int = 8,              // b-bit minwise precision through the
-                                 //   scoring join (Li & König, WWW 2010): 8
-                                 //   ships one BYTE per signature position
-                                 //   (quarter the candidate stage's dominant
-                                 //   shuffle vs 32-bit) and the estimator is
-                                 //   DEBIASED, est = (raw − 2⁻⁸)/(1 − 2⁻⁸),
-                                 //   so minhash_est still estimates J and
-                                 //   every downstream threshold keeps its
-                                 //   meaning; added variance is O(2⁻⁸) —
-                                 //   invisible next to the 1/√numPerms
-                                 //   sampling noise (RecallGateSpec holds at
-                                 //   ≥0.99 unchanged). 32 = the prior
-                                 //   high-precision path (false-match 2⁻³²,
-                                 //   no debias needed). Reference analog:
-                                 //   size-adaptive precision dispatch
-                                 //   (ai_...AUTO.py:467-530).
   simhashMaxDist: Int = 3,       // PHASH_MAX_DIST=3 parity (ai_...AUTO.py:95)
   minBandHits: Int = 2,          // LSH-only pairs need ≥ this many distinct
                                  //   band collisions (bundle/bridge exempt):
@@ -171,10 +155,6 @@ case class DedupConfig(
   tierBJaccard: Double = 0.32,   // ≥6σ below subst10's J, far above hard-negative J (~0.01)
   spanMinLen: Int = 200,         // exact-substring Tier-A evidence
   spanMinFrac: Double = 0.30,
-  spanEngine: String = "sa",     // span kernel: "sa" = exact generalized
-                                 //   suffix array (X15, north_rule stage);
-                                 //   "lcs" = probabilistic rolling-hash
-                                 //   binary search (fallback)
   zVeto: Double = 1.5,           // template-lookalike veto (CLIP_Z analog, ai_...AUTO.py:870-885)
   groupGap: Option[Int] = None,  // F2 same/adjacent-group suppression gap:
                                  //   None = OFF (reference default,

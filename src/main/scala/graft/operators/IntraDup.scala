@@ -53,8 +53,9 @@ object IntraDup {
       val (_, hs) = positionalShingles(d.doc_text, k)
       hs.iterator.zipWithIndex.map { case (h, i) => (d.conv_id, i, h) }
     }.toDF("conv_id", "pos", "h")
+    // the token count alone: no k-gram hashing
     val doc = docs.map { d =>
-      (d.conv_id, positionalShingles(d.doc_text, k)._1)
+      (d.conv_id, TextKernel.tokenHashesFromNorm(TextKernel.normalize(d.doc_text)).length)
     }.toDF("conv_id", "n_tokens")
     Seq("intra_shingles" -> sh, "intra_doc" -> doc)
   }

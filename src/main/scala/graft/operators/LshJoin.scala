@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.{CandidatePair, DedupConfig, DocSig}
@@ -324,7 +324,7 @@ object LshJoin {
       // the SAME doc, sorted-adjacent duplicates in `members` would yield a
       // self-pair here (or a degenerate bridge) — keep a < b explicit
       .filter($"doc_a" =!= $"doc_b")
-    scorePairs(pairRows, sketches(sigs.toDF(), cfg), cfg,
+    scorePairs(pairRows, sketches(sigs.toDF()), cfg,
       broadcastSketches = Adaptive.fits(spark, nDocs.getOrElse(sigs.count()), sketchCapBytes(cfg)))
   }
 
@@ -332,28 +332,22 @@ object LshJoin {
     * the (doc_id, conv_id, mhb) sketch side, whichever of its columns a
     * scoring join keeps. The relation is a long-keyed map: per row, the
     * UnsafeRow (8 B null bitset + 3 field words + the id, 64 B, + the
-    * sketch: numPerms packed bytes at estBits 8, otherwise an array<int>
-    * with its length word and null bitset) and an 8 B chain word, in a page
+    * sketch's numPerms packed bytes) and an 8 B chain word, in a page
     * that grows by doubling, plus up to 32 B of slot array (2 longs per
     * slot, ≤ 2 slots per key). 496 B for `balanced`; measured `dataSize`
     * 176-344 B per row at 20k-250k rows (local[4], 9- and 21-char ids; the
     * peak is a page just past a doubling). */
   private[graft] def sketchCapBytes(cfg: DedupConfig): Long = {
-    def words(bytes: Long) = (bytes + 7) / 8 * 8
-    val sketch =
-      if (cfg.estBits == 8) words(cfg.numPerms)
-      else 8 + (cfg.numPerms + 63) / 64 * 8 + words(4L * cfg.numPerms)
+    val sketch = (cfg.numPerms + 7L) / 8 * 8
     2 * ((8 + 3 * 8 + 64 + sketch) + 8) + 32
   }
 
   /** The scoring joins' per-document side: (doc_id, conv_id, mhb), mhb =
-    * the b-bit sketch of the MinHash signature (packed low bytes at
-    * estBits 8, 32-bit truncated ints otherwise; see `scorePairs`). */
-  private[graft] def sketches(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    * the 8-bit sketch of the MinHash signature, its packed low bytes (see
+    * `scorePairs`). */
+  private[graft] def sketches(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), col("conv_id"),
-      (if (cfg.estBits == 8) graft.functions.GraftFunctions.pack_low_bytes(col("minhash"))
-       else transform(col("minhash"),
-         v => shiftright(shiftleft(v, 32), 32).cast("int"))).as("mhb"))
+      graft.functions.GraftFunctions.pack_low_bytes(col("minhash")).as("mhb"))
 
   /**
    * The candidate tail over pair rows (doc_a < doc_b, band_id, src) — one
@@ -399,21 +393,16 @@ object LshJoin {
     val exempt = $"srcs" >= 2
 
     // Signatures join in only now — per unique pair, not per band row — and
-    // as b-bit minwise components (Li & König WWW 2010). Default estBits=8:
-    // packed LOW BYTES ship as ONE binary of numPerms bytes per endpoint —
-    // a QUARTER of the 32-bit path's array<int>, which was itself the
-    // candidate stage's attributed byte wall (the conv_b exchange ships one
-    // signature per surviving pair: measured 803 MB at 100k convs on the
-    // 32-bit path, with taskTime/cpuTime ≈ 2.3 memory-stall inflation).
-    // A position false-matches with p = 2⁻ᵇ; the 8-bit estimator is
-    // DEBIASED inside minhash_est8 so minhash_est still estimates J and
-    // downstream thresholds keep their meaning (estBits=32's 2⁻³² needs no
-    // debias). LOW bits are kept (robust even for low-entropy integer
-    // inputs, where high bits are constant); on the 32 path the
-    // shiftleft/shiftright pair sign-extends so the int cast is ANSI-safe.
-    val est: (Column, Column) => Column =
-      if (cfg.estBits == 8) graft.functions.GraftFunctions.minhash_est8
-      else graft.functions.GraftFunctions.minhash_est32
+    // as b-bit minwise components (Li & König WWW 2010): packed LOW BYTES
+    // ship as ONE binary of numPerms bytes per endpoint — a QUARTER of a
+    // 32-bit array<int>, which was the candidate stage's attributed byte
+    // wall (the conv_b exchange ships one signature per surviving pair:
+    // measured 803 MB at 100k convs with 32-bit components, with
+    // taskTime/cpuTime ≈ 2.3 memory-stall inflation). A position
+    // false-matches with p = 2⁻⁸; the estimator is DEBIASED inside
+    // minhash_est8 so minhash_est still estimates J and downstream
+    // thresholds keep their meaning. LOW bits are kept (robust even for
+    // low-entropy integer inputs, where high bits are constant).
     // F1 threshold predicate; bundle hits always survive (exact-dup path),
     // and so do BRIDGES — a bridge is the only connectivity between the
     // salted sub-buckets of an over-cap family (salt is conv_id-keyed, so
@@ -421,7 +410,7 @@ object LshJoin {
     // estimate bridge would split a near-dup mega-family into one cluster
     // per sub-bucket — precisely the 100-TB case salting exists for
     def scored(joined: DataFrame): DataFrame = joined
-      .withColumn("minhash_est", est(col("ma"), col("mb")))
+      .withColumn("minhash_est", graft.functions.GraftFunctions.minhash_est8(col("ma"), col("mb")))
       .filter($"minhash_est" >= cfg.simThreshold || exempt)
 
     // F4 output cap, PER DOCUMENT (CLIP_MAX_OUTPUT_PAIRS re-scoped to the

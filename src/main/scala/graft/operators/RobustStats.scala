@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
  *    default accuracy the sketch is exact for groups smaller than the
  *    accuracy parameter, so small-group results match the exact engine
  *    bit-for-bit (gated in RobustStatsSpec).
- *
- * This is the same exact/approximate dual the span engine has
- * (cfg.spanEngine "sa" vs "lcs").
  */
 object RobustStats {
 

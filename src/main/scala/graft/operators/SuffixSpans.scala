@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
  *    generalized suffix array + Kasai LCP — the span kernel Verification
  *    runs (lazily, only on inconclusive pairs) inside the verify join,
  *    where both texts are already co-located. This is the batch span-
- *    evidence path; the rolling-hash LCS in TextKernel remains as the
- *    configurable fallback (`DedupConfig.spanEngine`).
+ *    evidence path.
  *  - `spansForPairs`: standalone grouped stage — candidate pairs (+ their
  *    two capped texts) are routed to salted partitions; each partition
  *    computes exact per-pair spans. Doc texts are fetched once per group,
@@ -211,8 +210,7 @@ object SuffixSpans {
    * generalized suffix array: concat with distinct negative sentinels, then
    * max LCP over SA-adjacent suffixes of different owners (with only two
    * documents this adjacent scan is exact — any interleaving suffix belongs
-   * to one of the two owners). The exact-SA counterpart of
-   * TextKernel.longestCommonSubstring's probabilistic rolling-hash search.
+   * to one of the two owners).
    */
   def lcsViaSuffixArray(a: String, b: String): Int = lcsWithPositions(a, b)._1
 

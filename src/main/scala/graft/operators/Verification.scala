@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.model._
 
 /**
@@ -17,8 +18,7 @@ import graft.model._
  *     (hamming_min_transform analog, similarity_engine.py:359-400)
  *   - longest-common-substring span over capped head text — exact
  *     generalized-suffix-array kernel (SuffixSpans, the north_rule's
- *     per-partition suffix-array stage; cfg.spanEngine="lcs" selects the
- *     rolling-hash fallback) — computed ONLY on triggered pairs
+ *     per-partition suffix-array stage) — computed ONLY on triggered pairs
  *     (progressive gating: the reference runs ORB only on CLIP≥0.985 ∨
  *     pHash≤4 triggers, geometric_verifier.py:424-441; here the expensive
  *     span check runs only where cheap evidence is inconclusive)
@@ -85,20 +85,6 @@ object Verification {
     * slot array). */
   private[graft] val headIdCapBytes: Long = 2L * (8 + 8 + 64) + 16 + 48
 
-  /** High-32-bit truncation of a sorted mixed-64 sketch column: monotonic
-    * (order-preserving on the signed sort), in-int-range by construction,
-    * deduped against the ~2⁻³²-probability in-doc collision so downstream
-    * intersection/union counting is set-exact. One codegen pass
-    * (optimization r06) — exact twin of the former
-    * array_distinct(transform(shiftright.cast)) chain, which ran an
-    * interpreted lambda per element (~3.3k/doc) on the payload map side;
-    * see Expr0.sketch32 for the sorted-input dedup-adjacent argument. */
-  private[graft] def sketch32(c: Column): Column =
-    graft.functions.GraftFunctions.sketch32(c)
-
-  private[graft] def blocks32(c: Column): Column =
-    graft.functions.GraftFunctions.blocks32(c)
-
   /** Per-conversation evidence surfaces for the DuckDB replay oracle of
     * `flag_dedup_verified`: the exploded global sketch, the exploded
     * per-block sketches, and the per-doc scalars (simhash, array sizes,
@@ -112,12 +98,12 @@ object Verification {
     * jaccards, hamming = bit_count(xor)). */
   def oracleSurface(sigs: Dataset[graft.model.DocSig]): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
     "pipe_sketch" -> sigs.select(col("conv_id"),
-      explode(sketch32(col("sketch"))).as("sk")),
+      explode(GraftFunctions.sketch32(col("sketch"))).as("sk")),
     "pipe_blocks" -> sigs
-      .select(col("conv_id"), posexplode(blocks32(col("block_sketches"))).as(Seq("block_id", "bks")))
+      .select(col("conv_id"), posexplode(GraftFunctions.blocks32(col("block_sketches"))).as(Seq("block_id", "bks")))
       .select(col("conv_id"), col("block_id"), explode(col("bks")).as("bk")),
     "pipe_doc" -> sigs.select(col("conv_id"), col("simhash"),
-      size(sketch32(col("sketch"))).as("sketch_n"),
+      size(GraftFunctions.sketch32(col("sketch"))).as("sketch_n"),
       size(col("block_sketches")).as("n_blocks"),
       length(col("head_text")).as("head_len")))
 
@@ -127,7 +113,7 @@ object Verification {
     * returned Dataset). */
   private def pass1Plan(joined: org.apache.spark.sql.DataFrame,
                         cfg: DedupConfig): org.apache.spark.sql.DataFrame = {
-    val evCol = graft.functions.GraftFunctions.pair_evidence(
+    val evCol = GraftFunctions.pair_evidence(
       col("sketch_a"), col("block_sketches_a"), col("simhash_a"), col("simhash_bundle_a"),
       col("sketch_b"), col("block_sketches_b"), col("simhash_b"), col("simhash_bundle_b"),
       col("minhash_est"), cfg.patchTopK, cfg.blockVerifyJaccard,
@@ -168,8 +154,8 @@ object Verification {
     val small = Adaptive.fits(pairs.sparkSession, nDocs.getOrElse(sigs.count()),
       payloadCapBytes(cfg))
     val payload = sigs.select(col("conv_id"), col("simhash"), col("simhash_bundle"),
-      sketch32(col("sketch")).as("sketch"),
-      blocks32(col("block_sketches")).as("block_sketches"))
+      GraftFunctions.sketch32(col("sketch")).as("sketch"),
+      GraftFunctions.blocks32(col("block_sketches")).as("block_sketches"))
     def side(s: String) = payload.toDF(payload.columns.map(_ + s): _*)
       .hint(if (small) "broadcast" else "shuffle_hash")
     pairs.toDF()
@@ -188,7 +174,6 @@ object Verification {
     val joined = joinedFor(pairs, sigs, cfg, nDocs)
 
     val cutoff = cfg.simhashMaxDist
-    val useSa = cfg.spanEngine == "sa"
 
     // The per-pair evidence body runs as ONE codegen'd expression
     // (graft.functions.PairEvidenceExpr — same TextKernel calls in the same
@@ -221,12 +206,11 @@ object Verification {
     val done = pass1.filter(!$"need_span").drop("need_span").as[VerifiedPair]
 
     // Pass 2 — X15 span evidence for the triggered slice only: exact
-    // generalized-suffix-array LCS by default (the north_rule's
-    // per-partition suffix-array stage, running where the two texts are
-    // already co-located); rolling-hash LCS fallback. The SA path also
-    // yields the span's alignment offset (X10 analog). Heads join in
-    // per TRIGGERED pair — the untriggered majority never ships a byte
-    // of text.
+    // generalized-suffix-array LCS (the north_rule's per-partition
+    // suffix-array stage, running where the two texts are already
+    // co-located), which also yields the span's alignment offset (X10
+    // analog). Heads join in per TRIGGERED pair — the untriggered majority
+    // never ships a byte of text.
     //
     // Heads prefilter (optimization r06, guide §3.2 reduce-the-big-side):
     // head_text is the fattest per-doc payload (~headChars bytes), and the
@@ -256,11 +240,10 @@ object Verification {
         allHeads.join(broadcast(ids), Seq("conv_id"), "left_semi")
       } else allHeads
     // span kernel as one codegen'd expression (LcsSpanStats — identical
-    // SuffixSpans/TextKernel calls and Java-String length arithmetic as the
+    // SuffixSpans call and Java-String length arithmetic as the
     // former tuple14 map); the three extractions below share one evaluation
     // via codegen subexpression elimination over the identical subtree
-    val spCol = graft.functions.GraftFunctions.lcs_span_stats(
-      $"head_a", $"head_b", useSa)
+    val spCol = GraftFunctions.lcs_span_stats($"head_a", $"head_b")
     val spanned = spanned0
       .join(heads.select($"conv_id".as("conv_a"), $"head_text".as("head_a"))
         .hint("shuffle_hash"), "conv_a")

@@ -214,29 +214,6 @@ object StreamingDedup {
           .as("minhash_est"))
       .filter(col("hamming") <= maxDist || col("minhash_est") >= cfg.simThreshold)
 
-  /**
-   * Incremental candidate join: a micro-batch DELTA of fingerprints vs an
-   * accumulated corpus — the streaming handoff into the same LSH band-join
-   * shape the batch path uses (equi-join on band key, never all-pairs).
-   * Pairs are canonicalized (conv_a < conv_b) with evidence from each
-   * conversation's LATEST fingerprint. Bounded-backfill API; the streaming
-   * store path below never calls this (it joins against the MAINTAINED
-   * band table instead of re-banding the corpus).
-   */
-  def incrementalCandidates(delta: DataFrame, corpus: DataFrame,
-                            maxDist: Int = 3,
-                            cfg: DedupConfig = DedupConfig.balanced): DataFrame = {
-    val d = bandRows(delta, cfg).toDF("conv_new", "bkey")
-    val c = bandRows(corpus, cfg).toDF("conv_old", "bkey")
-    val candIds = d.join(c, Seq("bkey"))
-      .filter(col("conv_new") =!= col("conv_old"))
-      .select(
-        least(col("conv_new"), col("conv_old")).as("conv_a"),
-        greatest(col("conv_new"), col("conv_old")).as("conv_b"))
-      .distinct()
-    evidencePairs(candIds, latestPerConv(corpus.unionByName(delta)), maxDist, cfg)
-  }
-
   /** Per-batch work ledger for the incremental store (S5 lineage analog and
     * the O(|delta|) evidence the scale contract rests on).
     * `n_store_files_scanned` records how many band-store part files the

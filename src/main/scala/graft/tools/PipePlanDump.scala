@@ -46,10 +46,7 @@ object PipePlanDump {
     val cands = candPlan.localCheckpoint(true)
     // verify pass-1 (the payload joins + evidence projection) is eagerly
     // checkpointed inside verify(), so its plan is dumped from the exposed
-    // pre-checkpoint fragment; the "before" twin replays the round-5
-    // encoder-map STRUCTURE (tuple13 .as[...]/.map) over the same join so
-    // the Deserialize/MapElements/Serialize nodes the rewrite removed are
-    // visible in a committed plan (plan-shape replica only, never executed)
+    // pre-checkpoint fragment
     dump("pipeline_verify_pass1", Verification.pass1PlanFor(cands, sigs, cfg))
     // both payload branches, whatever the gate picks at this corpus size:
     // the doc count is the only difference, so the pair of dumps IS the
@@ -58,28 +55,6 @@ object PipePlanDump {
       Verification.pass1PlanFor(cands, sigs, cfg, nDocs = Some(1L)))
     dump("pipeline_verify_pass1_shufflehash",
       Verification.pass1PlanFor(cands, sigs, cfg, nDocs = Some(Long.MaxValue)))
-    locally {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val payload = sigs.select($"conv_id", $"simhash", $"simhash_bundle",
-        array_distinct(transform($"sketch", v => shiftright(v, 32).cast("int"))).as("sketch"),
-        transform($"block_sketches",
-          a => array_distinct(transform(a, v => shiftright(v, 32).cast("int")))).as("block_sketches"))
-      def side(s: String) = payload.toDF(payload.columns.map(_ + s): _*)
-      val joined = cands.toDF()
-        .join(side("_a").hint("shuffle_hash"), col("conv_a") === col("conv_id_a"))
-        .join(side("_b").hint("shuffle_hash"), col("conv_b") === col("conv_id_b"))
-      val before = joined.select(
-          $"pair_key", $"conv_a", $"conv_b", $"minhash_est", $"source",
-          $"simhash_a", $"simhash_bundle_a", $"sketch_a", $"block_sketches_a",
-          $"simhash_b", $"simhash_bundle_b", $"sketch_b", $"block_sketches_b")
-        .as[(String, String, String, Double, String,
-             Long, Array[Long], Array[Int], Array[Array[Int]],
-             Long, Array[Long], Array[Int], Array[Array[Int]])]
-        .map { case (pk, a, b, est, src, _, _, _, _, _, _, _, _) =>
-          (pk, a, b, est, 0.0, 0.0, 0.0, 0, 0, 0, false, src) }
-      dump("pipeline_verify_pass1_before_shape", before.toDF())
-    }
     val verPlan = Verification.verify(cands, sigs, cfg)
     dump("pipeline_verify", verPlan.toDF())
     val ver = verPlan.localCheckpoint(true)

@@ -30,7 +30,6 @@ class ExpressionsSpec extends SparkSpec {
     "minhash_sig" -> "minhash_sig('a b c d e f g h')",
     "dot_arr" -> "dot_arr(array(1.0D, 2.0D, 3.0D), array(0.5D, -1.0D, 4.0D))",
     "minhash_est" -> "minhash_est(array(1L, 2L, 3L, 4L), array(1L, 2L, 9L, 4L))",
-    "minhash_est32" -> "minhash_est32(array(1, 2, 3, 4), array(1, 7, 3, 4))",
     "pack_low_bytes" -> "pack_low_bytes(array(1L, 258L, -1L))",
     "minhash_est8" -> "minhash_est8(X'01020304AABBCCDD', X'01020399AABBCC00')",
     "hyperplane_sig" -> "hyperplane_sig(array(0.5D, -1.0D, 2.0D, 0.25D))")
@@ -87,31 +86,6 @@ class ExpressionsSpec extends SparkSpec {
     assert(viaExtensions.getAs[Long]("simhash64") == TextKernel.simhash64(
       TextKernel.tokens(TextKernel.normalize("Hello, World! foo bar"))))
     assert(viaExtensions.getSeq[Long](tableNames.indexOf("minhash_sig")).length == 128)
-  }
-
-  test("minhash_est32 equals minhash_est on full-entropy signatures; low-32 truncation") {
-    import spark.implicits._
-    // realistic signatures: xxhash64-style full-entropy values
-    val a = Array.tabulate(128)(i => graft.functions.Hashing.mix64(i.toLong))
-    val b = Array.tabulate(128)(i =>
-      if (i < 96) a(i) else graft.functions.Hashing.mix64(1000L + i))
-    val df = Seq((a, b)).toDF("a", "b")
-    val trunc = (c: org.apache.spark.sql.Column) =>
-      transform(c, v => shiftright(shiftleft(v, 32), 32).cast("int"))
-    val est64 = df.select(GraftFunctions.minhash_est($"a", $"b")).head().getDouble(0)
-    val est32 = df.select(GraftFunctions.minhash_est32(trunc($"a"), trunc($"b")))
-      .head().getDouble(0)
-    assert(est64 == 96.0 / 128)
-    assert(est32 == est64, "b-bit truncation must agree on full-entropy input")
-    // adversarial low-entropy input: values share high bits, differ in low —
-    // the kept LOW 32 bits still separate them
-    val lo1 = Array.tabulate(128)(i => 1000L + i)
-    val lo2 = Array.tabulate(128)(i => 2000L + i)
-    val d2 = Seq((lo1, lo2)).toDF("a", "b")
-    assert(d2.select(GraftFunctions.minhash_est32(trunc($"a"), trunc($"b")))
-      .head().getDouble(0) == 0.0)
-    // kernel contract: empty input → 0.0, not a throw
-    assert(TextKernel.minhashEstimate32(Array.empty, Array.empty) == 0.0)
   }
 
   test("pack_low_bytes + minhash_est8: debiased 8-bit b-bit minwise estimate") {

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.{concat, lit, lower, regexp_replace, shiftleft, shiftright,
-  struct, transform, trim, xxhash64}
+import org.apache.spark.sql.functions.{concat, lit, lower, regexp_replace, struct, transform,
+  trim, xxhash64}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test}
 import graft.functions.{Expr0, GraftFunctions, TextKernel}
@@ -16,7 +16,7 @@ import graft.operators.SuffixSpans
  * against the `[^a-z0-9]+` regex path, the suffix-array LCS against an
  * O(n·m) dynamic program, `repeatStats` against HashMap counts and a Set
  * of covered positions, and the candidate join's b-bit scoring kernels
- * (`pack_low_bytes` + `minhash_est8`, `minhash_est32`) and its `lsh_items`
+ * (`pack_low_bytes` + `minhash_est8`) and its `lsh_items`
  * bucket-item generator. Each kernel runs on the JVM for every generated
  * case; the SQL expressions also run once over the whole sample in a Spark
  * job, against the same references.
@@ -161,9 +161,6 @@ class KernelPropertySpec extends SparkSpec {
   private def naiveEst8(a: Array[Long], b: Array[Long]): Double =
     agreement(a, b, 8).fold(0.0)(raw => math.max(0.0, (raw - 1.0 / 256) / (1 - 1.0 / 256)))
 
-  private def naiveEst32(a: Array[Long], b: Array[Long]): Double =
-    agreement(a, b, 32).getOrElse(0.0)
-
   private val anyLong = Gen.choose(Long.MinValue, Long.MaxValue)
 
   // a signature pair: b keeps a's component, changes only bits above the
@@ -186,26 +183,19 @@ class KernelPropertySpec extends SparkSpec {
 
   private def arr(a: Array[Long]) = UnsafeArrayData.fromPrimitiveArray(a)
 
-  test("pack_low_bytes + minhash_est8 and minhash_est32 ≡ naive b-bit estimates") {
+  test("pack_low_bytes + minhash_est8 ≡ naive b-bit estimate") {
     check(Prop.forAll(sigPair) { case (a, b) =>
       val (pa, pb) = (Expr0.packLowBytes(arr(a)), Expr0.packLowBytes(arr(b)))
       pa.sameElements(a.map(_.toByte)) &&
-        TextKernel.minhashEstimate8(pa, pb) == naiveEst8(a, b) &&
-        Expr0.minhashEst32(UnsafeArrayData.fromPrimitiveArray(a.map(_.toInt)),
-          UnsafeArrayData.fromPrimitiveArray(b.map(_.toInt))) == naiveEst32(a, b)
+        TextKernel.minhashEstimate8(pa, pb) == naiveEst8(a, b)
     })
     import spark.implicits._
     val pairs = sample(sigPair, 200)
-    // the 32-bit side as the scoring join builds it: sign-extending shifts
-    def low32(c: org.apache.spark.sql.Column) =
-      transform(c, v => shiftright(shiftleft(v, 32), 32).cast("int"))
     val got = pairs.toDF("a", "b").select(
       GraftFunctions.minhash_est8(GraftFunctions.pack_low_bytes($"a"),
-        GraftFunctions.pack_low_bytes($"b")),
-      GraftFunctions.minhash_est32(low32($"a"), low32($"b"))).as[(Double, Double)].collect()
-    pairs.zip(got).foreach { case ((a, b), (e8, e32)) =>
-      assert(e8 == naiveEst8(a, b) && e32 == naiveEst32(a, b),
-        s"${a.mkString(",")} | ${b.mkString(",")}")
+        GraftFunctions.pack_low_bytes($"b"))).as[Double].collect()
+    pairs.zip(got).foreach { case ((a, b), e8) =>
+      assert(e8 == naiveEst8(a, b), s"${a.mkString(",")} | ${b.mkString(",")}")
     }
   }
 

@@ -91,7 +91,7 @@ class LshCandidatesSpec extends SparkSpec
     }
     val scored = LshJoin.scorePairs(
       (enumerated ++ bridges).toDF("doc_a", "doc_b", "band_id", "src"),
-      LshJoin.sketches(byConv, cfg), cfg)
+      LshJoin.sketches(byConv), cfg)
     (grouped, enumerated, bridges, scored.collect().sortBy(_.pair_key).toSeq)
   }
 
@@ -187,9 +187,8 @@ class LshCandidatesSpec extends SparkSpec
   test("sketch gate: docs × per-row sketch cap against the broadcast threshold") {
     val cap = LshJoin.sketchCapBytes(cfg)
     // 2 × (row of 8 B bitset + 3 words + 64 B id + 128 sketch bytes + 8 B
-    // chain word) + 32 B of slots; the 32-bit sketch is an array<int>
+    // chain word) + 32 B of slots
     assert(cap == 496L, s"cap=$cap")
-    assert(LshJoin.sketchCapBytes(cfg.copy(estBits = 32)) == 496L + 2 * (536 - 128))
     withThreshold("64m") {
       val fit = (64L << 20) / cap
       assert(Adaptive.fits(spark, fit, cap))

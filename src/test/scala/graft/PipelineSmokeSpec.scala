@@ -153,18 +153,6 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(result.clusters.columns.toSet == Set("conv_id", "cluster_id", "cluster_size"))
   }
 
-  test("X15 parity: suffix-array span engine ≡ rolling-hash LCS tiers") {
-    import spark.implicits._
-    val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
-    val viaLcs = Pipeline.runPipelined(turns,
-      DedupConfig.balanced.copy(spanEngine = "lcs"), runId = "lcs_parity")
-    val a = result.tiered.select($"pair_key", $"tier", $"tier_path")
-      .as[(String, String, String)].collect().toSet
-    val b = viaLcs.tiered.select($"pair_key", $"tier", $"tier_path")
-      .as[(String, String, String)].collect().toSet
-    assert(a == b, s"onlySa=${(a -- b).take(3)} onlyLcs=${(b -- a).take(3)}")
-  }
-
   test("determinism: two runs produce identical tier assignments") {
     import spark.implicits._
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)

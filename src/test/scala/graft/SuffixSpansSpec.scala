@@ -33,7 +33,7 @@ class SuffixSpansSpec extends SparkSpec {
     assert(!spans.exists(s => s._1 == "d3" || s._2 == "d3"))
   }
 
-  test("lcsViaSuffixArray is exact: agrees with rolling-hash LCS and brute force") {
+  test("lcsViaSuffixArray is exact: agrees with brute force") {
     val rng = new graft.sources.ConversationGen.Rng(0xC0FFEE)
     def randStr(n: Int): String =
       (0 until n).map(_ => ('a' + rng.nextInt(4)).toChar).mkString // small alphabet → long shared runs
@@ -46,7 +46,13 @@ class SuffixSpansSpec extends SparkSpec {
       }
       best
     }
-    val cases = Seq(("", ""), ("abc", ""), ("abc", "abc"), ("abc", "xyz")) ++
+    val needle = ("q" * 1000 + "NEEDLE_SHARED_SPAN" + "r" * 1000,
+      "z" * 500 + "NEEDLE_SHARED_SPAN" + "w" * 100)
+    val literal = Seq(("hello world foo", "xx world fo yy") -> 9, // " world fo"
+      ("abc", "xyz") -> 0, ("same", "same") -> 4, ("", "abc") -> 0, needle -> 18)
+    literal.foreach { case ((a, b), want) => assert(brute(a, b) == want, s"brute($a, $b)") }
+    val cases = literal.map(_._1) ++
+      Seq(("", ""), ("abc", ""), ("abc", "abc")) ++
       (1 to 30).map(_ => (randStr(5 + rng.nextInt(120)), randStr(5 + rng.nextInt(120)))) ++
       (1 to 5).map { _ => // planted long shared span
         val shared = randStr(60)
@@ -55,7 +61,6 @@ class SuffixSpansSpec extends SparkSpec {
     cases.foreach { case (a, b) =>
       val sa = SuffixSpans.lcsViaSuffixArray(a, b)
       assert(sa == brute(a, b), s"SA=$sa brute=${brute(a, b)} for |a|=${a.length},|b|=${b.length}")
-      assert(sa == graft.functions.TextKernel.longestCommonSubstring(a, b))
     }
   }
 

@@ -82,16 +82,6 @@ class TextKernelSpec extends AnyFunSuite {
     assert(TextKernel.minHammingBundle(Array(5L), Array(5L), 3) == 0)
   }
 
-  test("longest common substring via rolling hash") {
-    assert(TextKernel.longestCommonSubstring("hello world foo", "xx world fo yy") == 9) // " world fo"
-    assert(TextKernel.longestCommonSubstring("abc", "xyz") == 0)
-    assert(TextKernel.longestCommonSubstring("same", "same") == 4)
-    assert(TextKernel.longestCommonSubstring("", "abc") == 0)
-    val big = "q" * 1000 + "NEEDLE_SHARED_SPAN" + "r" * 1000
-    val other = "z" * 500 + "NEEDLE_SHARED_SPAN" + "w" * 100
-    assert(TextKernel.longestCommonSubstring(big, other) == 18)
-  }
-
   test("band keys: same signature same bands; band index mixed in") {
     val sig = Array.tabulate(128)(i => i.toLong * 31)
     val b1 = TextKernel.bandKeys(sig, 64, 2)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{ConvDoc, DedupConfig}
-import graft.operators.{Adaptive, LshJoin, Pipeline, Signatures, Verification}
+import graft.operators.{Adaptive, LshJoin, Pipeline, Signatures, SuffixSpans, Verification}
 import graft.sources.ConversationGen
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -107,6 +107,20 @@ class VerificationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(p.max_span_len === 0 && p.span_frac === 0.0 && p.span_offset === 0,
           s"${p.pair_key} untriggered pair must carry zero span")
       }
+    }
+  }
+
+  test("pipeline spans equal a direct suffix-array replay of the two head texts") {
+    val r = Pipeline.runPipelined(ConversationGen.corpus(spark, ConversationGen.smoke), cfg)
+    val heads = r.sigs.select($"conv_id", $"head_text").as[(String, String)].collect().toMap
+    val spanned = r.verified.filter($"max_span_len" > 0).collect()
+    assert(spanned.nonEmpty, "fixture must carry spans")
+    spanned.foreach { p =>
+      val (ha, hb) = (heads(p.conv_a), heads(p.conv_b))
+      val (l, pa, pb) = SuffixSpans.lcsWithPositions(ha, hb)
+      val minLen = math.max(1, math.min(ha.length, hb.length))
+      assert((p.max_span_len, p.span_frac, p.span_offset) == (l, l.toDouble / minLen, pa - pb),
+        p.pair_key)
     }
   }
 
